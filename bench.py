@@ -86,14 +86,13 @@ def run_frontier_bench(spark, n_pages: int) -> dict:
         parse_entries=False,
         use_bloom=True,
         bloom_capacity=max(n_pages, 1000),
-        fast_metrics=True,
     )
     eng = CrawlEngine(spark, pages, cfg)
     t0 = time.time()
     metrics = eng.run()
     wall = time.time() - t0
     fetched = sum(m.pages_fetched for m in metrics)
-    deduped = sum(max(m.links_discovered, 0) for m in metrics)  # -1 = fast mode
+    deduped = sum(m.links_discovered for m in metrics)
     pages.unpersist()
     return {
         "frontier_wall_s": wall,

@@ -187,8 +187,6 @@ def main() -> None:
         use_bloom=True,
         bloom_capacity=n_pages,
         n_host_shards=max(args.cpus, 8),
-        fast_metrics=True,
-        pages_is_bucketed=bool(args.bucketed_pages),
     )
     if args.prime:
         prime_pages = synthetic_pages_df(spark, n_pages=5000, n_hosts=53)
@@ -200,7 +198,6 @@ def main() -> None:
             use_bloom=True,
             bloom_capacity=5000,
             n_host_shards=max(args.cpus, 8),
-            fast_metrics=True,
         )
         CrawlEngine(spark, prime_pages, prime_cfg).run()
 

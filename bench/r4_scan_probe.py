@@ -17,7 +17,7 @@ This probe times, on the SAME registered table, at a given --cpus:
   scan_keys   : url-only projection count (column-pruned scan)
   scan_html   : sum(length(html)) (full payload decode, the fetch join's
                 real per-round read)
-  bloom_build : build_bloom over 320k urls at capacity 1.6M (round-0 size)
+  bloom_build : build_filter over 320k urls at capacity 1.6M (round-0 size)
 
 If scan_html wall barely moves 4c -> 16c, (a) wins and the serial term is
 a single-box artifact (a real fleet reads buckets from N disks). If it
@@ -84,7 +84,7 @@ def main() -> None:
 
     batch = pages.select("url").limit(320_000).localCheckpoint(eager=True)
     t0 = time.time()
-    bloom_mod.build_bloom(batch, "url", 1_600_000, 0.01)
+    bloom_mod.build_filter(batch, "url", 1_600_000, 0.01)
     out["bloom_build"] = round(time.time() - t0, 2)
 
     print(json.dumps(out))

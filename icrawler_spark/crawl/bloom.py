@@ -95,7 +95,7 @@ class BloomFilter:
         return obj
 
 
-def build_bloom(df, col: str, capacity: int, fpp: float = 0.01) -> BloomFilter:
+def build_filter(df, col: str, capacity: int, fpp: float = 0.01) -> BloomFilter:
     """Distributed build: per-partition bitmaps in executors (mapInPandas),
     OR-merge of the (identical-size) bitmaps on the driver."""
     from pyspark.sql.types import BinaryType, StructField, StructType
@@ -117,13 +117,6 @@ def build_bloom(df, col: str, capacity: int, fpp: float = 0.01) -> BloomFilter:
     for row in parts:
         merged.merge(BloomFilter.from_bytes(bytes(row.bloom)))
     return merged
-
-
-# module-interface aliases shared with cuckoo.py: the engine selects a sketch
-# backend (CrawlConfig.seen_filter) and calls build_filter/prefilter_unseen/
-# Filter.from_bytes without knowing which it got.
-build_filter = build_bloom
-Filter = BloomFilter
 
 
 def prefilter_unseen(df, col: str, bloom_bytes_bc):

@@ -52,7 +52,6 @@ from pyspark.sql import functions as F
 
 from ..parsers import udfs
 from . import bloom as bloom_mod
-from . import cuckoo as cuckoo_mod
 from .state import SnapshotStore, merge_documents, merge_entries, merge_seen, resolve_entry_identity
 
 
@@ -67,10 +66,6 @@ class CrawlConfig:
     n_host_shards: int = 32            # salted-partition count for fetch batch
     use_bloom: bool = True
     bloom_capacity: int = 1_000_000
-    bloom_fpp: float = 0.01
-    seen_filter: str = "bloom"         # "bloom" | "cuckoo" (north_rule names
-                                       # both; cuckoo adds O(1) deletion for
-                                       # recrawl invalidation — cuckoo.py)
     parse_entries: bool = True         # off for pure-frontier benchmarks
     download_docs: bool = False        # run the document download stage per round
     collect_images: bool = False       # GreedyImageCrawler mode: harvest
@@ -79,7 +74,6 @@ class CrawlConfig:
                                        # engine's `images` table
     allowed_types: list[str] | None = None  # download-type filter (ref 588-590)
     checkpoint_dir: str | None = None  # None → in-memory (localCheckpoint)
-    big_round_threshold: int = 50_000  # switch to distributed position assign
     max_depth: int | None = None       # drop links deeper than this many hops
                                        # from a seed (seeds are depth 0);
                                        # pruned BEFORE the link pin so
@@ -90,16 +84,7 @@ class CrawlConfig:
                                        # link_pos −1 — ahead of the page's
                                        # parsed links, since a redirect is
                                        # known before any parsing
-    fast_metrics: bool = False         # kept for compat; counts now ride as
-                                       # observe() metrics on the pin actions
-    broadcast_batch_threshold: int = 1_000_000  # URLs; above → shuffle join
     compact_visited_every: int = 16    # coalesce visited deltas every K rounds
-    pages_is_bucketed: bool = False    # pages table stored bucketed by url
-                                       # (Iceberg layout): re-deriving the
-                                       # fetch join is a bucket-local scan
-                                       # with no corpus shuffle, so cache
-                                       # only the fetched KEYS — never the
-                                       # html payload (~30 KB/row × round)
     dedup_near_dups: bool = False      # dedup-before-store: each round's
                                        # fetched pages probe a crawl-lifetime
                                        # SimHash index (Hamming ≤ 6, exact
@@ -330,22 +315,13 @@ class CrawlEngine:
         else:
             self._visited_parts = [merged.localCheckpoint(eager=True)]
 
-    @property
-    def _sketch_mod(self):
-        """Approximate seen-filter backend: bloom (default) or cuckoo. Both
-        expose build_filter / prefilter_unseen / merge with the same routing
-        contract (false positive → redundant exact check, never a drop)."""
-        return cuckoo_mod if self.cfg.seen_filter == "cuckoo" else bloom_mod
-
     def _sketch_path(self, rnd: int) -> str:
-        """Per-round serialized seen-filter blob, keyed by backend kind AND
-        key derivation (h64 = xxhash64 transport keys) so a config or format
+        """Per-round serialized seen-filter blob. The name carries the filter
+        kind AND key derivation (h64 = xxhash64 transport keys) so a format
         change between runs can never deserialize-and-probe the wrong
         content — an absent blob falls back to a rebuild from visited."""
         return os.path.join(
-            self.store.root,
-            f"round={rnd:06d}",
-            f"seen_sketch_{self.cfg.seen_filter}_h64.bin",
+            self.store.root, f"round={rnd:06d}", "seen_sketch_bloom_h64.bin"
         )
 
     @staticmethod
@@ -361,11 +337,15 @@ class CrawlEngine:
         inserted."""
         return df.select(F.xxhash64(F.col(col)).alias("_sk"))
 
-    def _bloom_add_batch(self, batch: DataFrame) -> None:
-        cfg = self.cfg
-        delta = self._sketch_mod.build_filter(
-            self._sketch_keys(batch), "_sk", cfg.bloom_capacity, cfg.bloom_fpp
+    def _build_sketch(self, df: DataFrame) -> bloom_mod.BloomFilter:
+        """Bloom filter over ``df``'s url transport keys. Called through the
+        module attribute so a test can swap ``bloom_mod.build_filter``."""
+        return bloom_mod.build_filter(
+            self._sketch_keys(df), "_sk", self.cfg.bloom_capacity
         )
+
+    def _bloom_add_batch(self, batch: DataFrame) -> None:
+        delta = self._build_sketch(batch)
         if self._bloom is None:
             self._bloom = delta
         else:
@@ -425,18 +405,13 @@ class CrawlEngine:
                 if self.cfg.use_bloom:
                     # prefer the checkpointed sketch blob (committed with the
                     # round); rebuild from visited only when absent (pre-blob
-                    # checkpoints, or a seen_filter kind change between runs)
+                    # checkpoints, or a run that had use_bloom off)
                     spath = self._sketch_path(last)
                     if os.path.exists(spath):
                         with open(spath, "rb") as fh:
-                            self._bloom = self._sketch_mod.Filter.from_bytes(fh.read())
+                            self._bloom = bloom_mod.BloomFilter.from_bytes(fh.read())
                     else:
-                        self._bloom = self._sketch_mod.build_filter(
-                            self._sketch_keys(self.visited),
-                            "_sk",
-                            self.cfg.bloom_capacity,
-                            self.cfg.bloom_fpp,
-                        )
+                        self._bloom = self._build_sketch(self.visited)
                 self._round = last + 1
                 return self._round
         seeded = self._seed_frontier()
@@ -459,10 +434,20 @@ class CrawlEngine:
 
     # -- helpers ---------------------------------------------------------------
 
+    # rounds with more candidate links than this assign positions with the
+    # distributed (shuffle-free) path instead of one global window
+    _BIG_ROUND_THRESHOLD = 50_000
+    # fetch-join batches up to this many URLs are broadcast; larger ones
+    # take a shuffle-hash join with the batch as build side
+    _BROADCAST_BATCH_THRESHOLD = 1_000_000
+    # documents' _src_pos packs (discovery_pos, entry_pos, doc index) into
+    # one long: (pos * _ENTRY_STRIDE + entry_pos) * _DOC_STRIDE + doc index
+    _ENTRY_STRIDE = 100_000
+    _DOC_STRIDE = 1000
     # sparse big-round positions fall back to the dense chunked window once
-    # the id space nears the entries _src_pos headroom (pos * 100000 +
-    # entry_pos must stay inside a long); 2^45 leaves ~280x slack
-    _POS_SPARSE_CEILING = 1 << 45
+    # the id space reaches this ceiling, so the packed key of any position
+    # below it stays under 2^62 — about 2x slack inside a signed long
+    _POS_SPARSE_CEILING = (1 << 62) // (_ENTRY_STRIDE * _DOC_STRIDE)
     # broadcast the per-parent offset table only when provably small
     # (same posture as the fetch join's size gate)
     _POS_BROADCAST_PARENTS = 4_000_000
@@ -496,8 +481,8 @@ class CrawlEngine:
         Positions are near-dense (gaps only where candidate links were
         deduped/seen), the round consumes ``span = Σ slots ≈ raw link
         count`` ids, and a ceiling guard falls back to the dense chunked
-        window long before sparse ids could overflow the entries
-        ``_src_pos`` arithmetic.
+        window before sparse ids could overflow the packed documents
+        ``_src_pos`` key.
 
         The candidate links are pinned BEFORE any of this: the stats agg
         would otherwise re-execute the whole parse → dedup-window → bloom
@@ -608,9 +593,7 @@ class CrawlEngine:
         cfg = self.cfg
         rnd = self._round
         t0 = time.time()
-        import os as _os
-
-        _prof = _os.environ.get("ICRAWLER_PROFILE") == "1"
+        _prof = os.environ.get("ICRAWLER_PROFILE") == "1"
         _last = [t0]
 
         def _mark(stage: str) -> None:
@@ -673,7 +656,7 @@ class CrawlEngine:
         # OOM building the broadcast relation. Above the threshold, hint
         # shuffle-hash with the batch as build side: on a real cluster the
         # pages table is url-bucketed (Iceberg) so only the batch shuffles.
-        is_broadcast_batch = n_pending_before <= cfg.broadcast_batch_threshold
+        is_broadcast_batch = n_pending_before <= self._BROADCAST_BATCH_THRESHOLD
         if is_broadcast_batch:
             batch_side = F.broadcast(batch)
         else:
@@ -914,7 +897,7 @@ class CrawlEngine:
         # push a multi-million-link sort through one partition)
         links = links.localCheckpoint(eager=True)
         n_links = _obs_long(obs_links, "n_links", links.count)
-        big_round = n_links > cfg.big_round_threshold
+        big_round = n_links > self._BIG_ROUND_THRESHOLD
         self._last_big_round = big_round
         _mark("parse+pin_links")
 
@@ -939,7 +922,7 @@ class CrawlEngine:
                 # probe with the xxhash64 transport key (8 bytes/row through
                 # Arrow instead of the url string — see _sketch_keys)
                 keyed = new_links.withColumn("_sk", F.xxhash64(F.col("url")))
-                flagged = self._sketch_mod.prefilter_unseen(keyed, "_sk", bc).drop("_sk")
+                flagged = bloom_mod.prefilter_unseen(keyed, "_sk", bc).drop("_sk")
                 definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
                 maybe = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
                 survivors = maybe.join(self.visited.select("url"), "url", "left_anti")
@@ -990,7 +973,7 @@ class CrawlEngine:
             )
             parsed = parsed.withColumn(
                 "_src_pos",
-                F.col("discovery_pos") * 100000 + F.col("entry_pos"),
+                F.col("discovery_pos") * self._ENTRY_STRIDE + F.col("entry_pos"),
             )
             obs_entries = Observation(f"entries_r{rnd}")
             with_ids = resolve_entry_identity(parsed, self.documents).observe(
@@ -1005,7 +988,7 @@ class CrawlEngine:
                     F.col("_d.url").alias("url"),
                     F.col("_d.doc_type").alias("doc_type"),
                     F.col("_d.title").alias("title"),
-                    (F.col("_src_pos") * 1000 + F.col("_p")).alias("_src_pos"),
+                    (F.col("_src_pos") * self._DOC_STRIDE + F.col("_p")).alias("_src_pos"),
                 )
                 .observe(obs_docs, F.count(F.lit(1)).alias("n"))
             )
@@ -1158,21 +1141,15 @@ class CrawlEngine:
         refetch exactly these pages; their outlinks still dedup against the
         (shrunken) visited set, so nothing else is re-crawled.
 
-        Sketch maintenance is where the backend choice shows: cuckoo removes
-        the fingerprints in O(batch) driver time (each visited url was added
-        exactly once — the multiset-delete safety contract); bloom cannot
-        un-set bits, so the filter is rebuilt from the kept visited table
-        (one distributed pass). The invalidation batch is politeness-bounded
-        (a recrawl schedule round), so the driver-side url collect for the
-        cuckoo delete is small by construction.
+        Bloom cannot un-set bits, so the seen filter is rebuilt from the
+        kept visited table (one distributed pass).
 
         Durability contract in checkpoint mode: the invalidation joins the
         NEXT round's atomic commit (a forced visited_full compaction rides
         that round, before its marker). A kill before that commit resumes
         pre-invalidation state — same all-or-nothing semantics as any other
         mid-round mutation. Returns the number of URLs actually invalidated
-        (those present in visited; unknown URLs are ignored, which also keeps
-        the cuckoo delete safe — never delete what was never added)."""
+        (those present in visited; unknown URLs are ignored)."""
         merged = self._union_visited()
         if merged is None:
             return 0
@@ -1214,22 +1191,7 @@ class CrawlEngine:
         self._n_pending = self.pending.count()
 
         if self.cfg.use_bloom and self._bloom is not None:
-            if self.cfg.seen_filter == "cuckoo":
-                import pandas as pd
-
-                # delete by the same xxhash64 transport key the inserts used
-                removed = pd.Series(
-                    [r._sk for r in self._sketch_keys(hit).collect()]
-                )
-                found = self._bloom.delete_many(removed)
-                assert found.all(), "visited url missing from cuckoo filter"
-            else:
-                self._bloom = self._sketch_mod.build_filter(
-                    self._sketch_keys(self.visited),
-                    "_sk",
-                    self.cfg.bloom_capacity,
-                    self.cfg.bloom_fpp,
-                )
+            self._bloom = self._build_sketch(self.visited)
         return n
 
     # -- results ---------------------------------------------------------------

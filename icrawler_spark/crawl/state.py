@@ -57,9 +57,6 @@ class SnapshotStore:
     def _round_dir(self, rnd: int) -> str:
         return os.path.join(self.root, f"round={rnd:06d}")
 
-    def _marker(self, rnd: int) -> str:
-        return os.path.join(self._round_dir(rnd), "_COMMITTED")
-
     def latest_committed_round(self) -> int | None:
         rounds = []
         if not os.path.isdir(self.root):
@@ -70,13 +67,6 @@ class SnapshotStore:
             ):
                 rounds.append(int(name.split("=")[1]))
         return max(rounds) if rounds else None
-
-    def write_round(self, rnd: int, tables: dict[str, DataFrame]) -> None:
-        rdir = self._round_dir(rnd)
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(os.path.join(rdir, name))
-        with open(self._marker(rnd), "w") as fh:
-            fh.write("ok\n")  # marker last — commit point
 
     def read(self, rnd: int, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._round_dir(rnd), name))

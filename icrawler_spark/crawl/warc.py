@@ -328,7 +328,7 @@ def _record_bytes(url: str, date: str, html: bytes, location: str | None,
 
 def write_warc(pages: DataFrame, out_dir: str, gzip_members: bool = True) -> DataFrame:
     """pages table → WARC segment files, one per partition (the inverse of
-    ``read_warc``): each executor partition writes ``seg-<part>-<uuid>.warc.gz``
+    ``read_warc``): each executor partition writes ``seg-<uuid>.warc.gz``
     with one gzip member per record, Common-Crawl style. Returns a DataFrame
     (path, n_records) of the written segments — an action the caller fires.
 
@@ -347,7 +347,10 @@ def write_warc(pages: DataFrame, out_dir: str, gzip_members: bool = True) -> Dat
     cols = [c for c in ("url", "warc_ts", "html", "redirect_to") if c in pages.columns]
 
     def write_part(batches):
-        fh, path, n = None, None, 0
+        # records stream into a hidden temp file that is renamed to its
+        # seg-* name only once the partition is complete: a failed or retried
+        # task must never leave a truncated segment for a seg-* glob to ingest
+        fh, path, tmp, n = None, None, None, 0
         try:
             for pdf in batches:
                 for row in pdf.itertuples(index=False):
@@ -361,19 +364,26 @@ def write_warc(pages: DataFrame, out_dir: str, gzip_members: bool = True) -> Dat
                     )
                     loc = getattr(row, "redirect_to", None)
                     if fh is None:
+                        seg = uuid.uuid4().hex
                         path = os.path.join(
                             out_dir,
-                            f"seg-{uuid.uuid4().hex}.warc" + (".gz" if gzip_members else ""),
+                            f"seg-{seg}.warc" + (".gz" if gzip_members else ""),
                         )
-                        fh = open(path, "wb")
+                        tmp = os.path.join(out_dir, f".seg-{seg}.tmp")
+                        fh = open(tmp, "wb")
                     fh.write(
                         _record_bytes(row.url, iso, bytes(row.html), loc or None,
                                       gzip_members=gzip_members)
                     )
                     n += 1
-        finally:
+        except BaseException:
             if fh is not None:
                 fh.close()
+                os.unlink(tmp)
+            raise
+        if fh is not None:
+            fh.close()
+            os.rename(tmp, path)
         if n == 0:
             yield pd.DataFrame({"path": [], "n_records": []})
             return

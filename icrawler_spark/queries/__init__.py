@@ -81,19 +81,27 @@ def _prioritized(pairs):
     return sorted(pairs, key=key)  # stable for the middle block
 
 
-def all_queries():
+def _registry():
+    """Merged ``name -> (callable, oracle_sql)`` over every module. The gate
+    lists must name registered queries and not overlap: a renamed query
+    would otherwise silently drop out of the intended gate order."""
     out = {}
     for mod in _MODULES:
-        for name, (fn, _sql) in mod.QUERIES.items():
+        for name, entry in mod.QUERIES.items():
             assert name not in out, f"duplicate query name {name}"
-            out[name] = fn
-    return dict(_prioritized(out.items()))
+            out[name] = entry
+    unknown = [n for n in _GATE_PRIORITY + _GATE_DEMOTE if n not in out]
+    assert not unknown, f"gate lists name unregistered queries: {unknown}"
+    both = set(_GATE_PRIORITY) & set(_GATE_DEMOTE)
+    assert not both, f"queries both prioritized and demoted: {sorted(both)}"
+    return out
+
+
+def all_queries():
+    return dict(_prioritized((n, fn) for n, (fn, _sql) in _registry().items()))
 
 
 def all_oracles():
-    out = {}
-    for mod in _MODULES:
-        for name, (_fn, sql) in mod.QUERIES.items():
-            if sql is not None:
-                out[name] = sql
-    return dict(_prioritized(out.items()))
+    return dict(
+        _prioritized((n, sql) for n, (_fn, sql) in _registry().items() if sql is not None)
+    )

@@ -349,30 +349,44 @@ def test_per_partition_lineage_checkpointed(spark, site, pages, tmp_path):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_high_fanout_round0_routes_distributed(spark):
+def _fanout_round0(spark):
+    """Round 0 of a crawl from 20 seeds with 12 links per page (~240
+    candidate links); returns the engine after the round."""
+    from icrawler_spark.crawl import synthetic_pages_df, synthetic_seed_df
+
+    eng = CrawlEngine(
+        spark,
+        synthetic_pages_df(spark, n_pages=400, n_hosts=37, links_per_page=12),
+        CrawlConfig(
+            start_url="https://hot.example.test/p/0.html",
+            max_rounds=1,
+            parse_entries=False,
+        ),
+        seeds_df=synthetic_seed_df(spark, n_pages=400, stride=20, n_hosts=37),
+    )
+    eng.run()
+    return eng
+
+
+@pytest.fixture(scope="module")
+def fanout_dense_pending(spark):
+    """(discovery_pos, url) of the round-0 frontier from the single-window
+    small-round path (default big-round threshold)."""
+    eng = _fanout_round0(spark)
+    assert eng._last_big_round is False
+    return sorted((r.discovery_pos, r.url) for r in eng.pending.collect())
+
+
+def test_high_fanout_round0_routes_distributed(spark, monkeypatch, fanout_dense_pending):
     """Big-round routing must use the OBSERVED link count, not last round's
     fanout estimate: a round-0 fanout explosion (many links from few pages,
     no previous round to estimate from) used to plan the single-partition
     global window (the r2 stall risk). links_per_page=12 on 20 seeds →
     ~240 candidate links > threshold 200, while the old estimate
     (n_fetched × default fanout 4.0 = 80) stays under it."""
-    from icrawler_spark.crawl import synthetic_pages_df, synthetic_seed_df
-
-    pages = synthetic_pages_df(spark, n_pages=400, n_hosts=37, links_per_page=12)
-    seeds_df = synthetic_seed_df(spark, n_pages=400, stride=20, n_hosts=37)
-    eng = CrawlEngine(
-        spark,
-        pages,
-        CrawlConfig(
-            start_url="https://hot.example.test/p/0.html",
-            max_rounds=1,
-            parse_entries=False,
-            big_round_threshold=200,
-        ),
-        seeds_df=seeds_df,
-    )
-    m = eng.run()
-    assert m[0].links_discovered > 200
+    monkeypatch.setattr(CrawlEngine, "_BIG_ROUND_THRESHOLD", 200)
+    eng = _fanout_round0(spark)
+    assert eng.metrics[0].links_discovered > 200
     assert eng._last_big_round is True
     # sparse big-round positions must be FIFO-unique and ORDER-IDENTICAL to
     # the dense small-round path over the same input (density itself is
@@ -380,21 +394,39 @@ def test_high_fanout_round0_routes_distributed(spark):
     # position, they all sort by it)
     pend = [(r.discovery_pos, r.url) for r in eng.pending.collect()]
     assert len({p for p, _ in pend}) == len(pend)  # unique
-    dense = CrawlEngine(
-        spark,
-        synthetic_pages_df(spark, n_pages=400, n_hosts=37, links_per_page=12),
-        CrawlConfig(
-            start_url="https://hot.example.test/p/0.html",
-            max_rounds=1,
-            parse_entries=False,
-            big_round_threshold=10**9,
-        ),
-        seeds_df=synthetic_seed_df(spark, n_pages=400, stride=20, n_hosts=37),
-    )
-    dense.run()
-    assert dense._last_big_round is False
-    dense_pend = [(r.discovery_pos, r.url) for r in dense.pending.collect()]
-    assert [u for _, u in sorted(pend)] == [u for _, u in sorted(dense_pend)]
+    assert [u for _, u in sorted(pend)] == [u for _, u in fanout_dense_pending]
+
+
+def test_big_round_past_position_ceiling_uses_dense_chunked(
+    spark, monkeypatch, fanout_dense_pending
+):
+    """A big round whose sparse id span would reach _POS_SPARSE_CEILING falls
+    back to the dense chunked window. Its positions are dense, so they equal
+    the single-window small-round path's exactly, not just in order."""
+    calls = []
+    real = CrawlEngine._assign_positions_dense_chunked
+
+    def spy(self, pinned, order):
+        calls.append(1)
+        return real(self, pinned, order)
+
+    monkeypatch.setattr(CrawlEngine, "_assign_positions_dense_chunked", spy)
+    monkeypatch.setattr(CrawlEngine, "_BIG_ROUND_THRESHOLD", 200)
+    monkeypatch.setattr(CrawlEngine, "_POS_SPARSE_CEILING", 1)
+    eng = _fanout_round0(spark)
+    assert eng._last_big_round is True
+    assert calls == [1]
+    pend = sorted((r.discovery_pos, r.url) for r in eng.pending.collect())
+    assert pend == fanout_dense_pending
+
+
+def test_position_ceiling_keeps_packed_src_pos_inside_int64():
+    """Any position below _POS_SPARSE_CEILING, with entry_pos and the
+    document index at their stride maxima, packs into a documents _src_pos
+    ``(pos * ENTRY + entry_pos) * DOC + doc index`` that fits a signed long."""
+    e, d = CrawlEngine._ENTRY_STRIDE, CrawlEngine._DOC_STRIDE
+    top = CrawlEngine._POS_SPARSE_CEILING - 1
+    assert (top * e + (e - 1)) * d + (d - 1) < 1 << 63
 
 
 def test_multi_snapshot_corpus_does_not_fan_out_metrics(spark, site, pages):
@@ -485,7 +517,7 @@ def test_bucketed_pages_join_has_no_corpus_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS pages_b_test")
 
 
-def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark):
+def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark, monkeypatch):
     """The keys-only fetch cache now covers the plain-corpus shuffle-hash
     path too (html has one consumer when both parses are off, so the payload
     persist was a pure regression there — 537 s vs ~130 s on the 1.28M-URL
@@ -498,13 +530,14 @@ def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark):
     plain = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
     plain.run()
 
+    # every batch takes the shuffle-hash join
+    monkeypatch.setattr(CrawlEngine, "_BROADCAST_BATCH_THRESHOLD", 0)
     sh = CrawlEngine(
         spark,
         pages,
         CrawlConfig(
             start_url=START,
             max_rounds=20,
-            broadcast_batch_threshold=0,  # every batch takes the shuffle-hash join
             parse_entries=False,  # single html consumer -> keys-only cache
         ),
     )
@@ -515,7 +548,7 @@ def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark):
     assert sh.crawl_order() == plain.crawl_order()
 
 
-def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path):
+def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path, monkeypatch):
     """Crawling from the bucketed table read must produce identical rounds,
     order, and seen-set as the plain DataFrame corpus."""
     from icrawler_spark.crawl import build_site, site_pages_df
@@ -536,23 +569,22 @@ def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path):
         bucketed = CrawlEngine(
             spark,
             spark.table("pages_b_site"),
-            CrawlConfig(start_url=START, max_rounds=20, pages_is_bucketed=True),
+            CrawlConfig(start_url=START, max_rounds=20),
         )
         bucketed.run()
         assert bucketed.crawl_order() == plain.crawl_order()
         assert bucketed.seen_urls() == plain.seen_urls()
-        # keys-only cache path (pages_is_bucketed) on a forced shuffle-hash
-        # round must be identical too: broadcast threshold 0 disables the
-        # broadcast fetch join, exercising reuse_html=False on the bucketed
-        # corpus — html streams from bucket-local scans, never persisted
+        # keys-only cache path on a forced shuffle-hash round must be
+        # identical too: broadcast threshold 0 disables the broadcast fetch
+        # join, exercising reuse_html=False on the bucketed corpus — html
+        # streams from bucket-local scans, never persisted
+        monkeypatch.setattr(CrawlEngine, "_BROADCAST_BATCH_THRESHOLD", 0)
         sh = CrawlEngine(
             spark,
             spark.table("pages_b_site"),
             CrawlConfig(
                 start_url=START,
                 max_rounds=20,
-                pages_is_bucketed=True,
-                broadcast_batch_threshold=0,
                 parse_entries=False,  # reuse_html=False: the keys-only path
             ),
         )
@@ -586,97 +618,6 @@ def test_parse_pagination_carry_and_slim_match_full(spark, pages):
     pos_by_url = {r.url: r.discovery_pos for r in inp.select("url", "discovery_pos").collect()}
     assert all(r.depth == 3 for r in s_rows)
     assert all(r.discovery_pos == pos_by_url[r.page_url] for r in s_rows)
-
-
-def test_cuckoo_no_false_negatives_and_fpp():
-    from icrawler_spark.crawl.cuckoo import CuckooFilter
-
-    cf = CuckooFilter(capacity=10_000)
-    added = pd.Series([f"https://h{i % 7}.test/p/{i}.html" for i in range(5000)])
-    cf.add_many(added)
-    assert cf.might_contain_many(added).all()
-    probes = pd.Series([f"https://other{i}.test/x/{i}" for i in range(5000)])
-    assert cf.might_contain_many(probes).mean() < 0.01  # ~1.2e-4 by design
-
-
-def test_cuckoo_roundtrip_merge_delete_determinism():
-    from icrawler_spark.crawl.cuckoo import CuckooFilter
-
-    vals = pd.Series([f"u{i}" for i in range(800)])
-    a = CuckooFilter(capacity=1000)
-    b = CuckooFilter(capacity=1000)
-    a.add_many(vals[:400])
-    b.add_many(vals[400:])
-    merged = CuckooFilter.from_bytes(a.to_bytes()).merge(b)
-    assert merged.might_contain_many(vals).all()
-    # deletion — the capability bloom lacks (recrawl invalidation)
-    assert merged.delete_many(vals[:100]).all()
-    assert merged.might_contain_many(vals[100:]).all()
-    assert merged.might_contain_many(vals[:100]).mean() < 0.02
-    # byte-identical rebuild (kick loop is RNG-free)
-    x1, x2 = CuckooFilter(capacity=1000), CuckooFilter(capacity=1000)
-    x1.add_many(vals)
-    x2.add_many(vals)
-    assert x1.to_bytes() == x2.to_bytes()
-    # multiset semantics (deletion safety): re-add stores a second copy, so
-    # one delete leaves the value still present
-    n0 = x1.n_items
-    x1.add_many(vals[:10])
-    assert x1.n_items == n0 + 10
-    assert x1.delete_many(vals[:10]).all()
-    assert x1.might_contain_many(vals[:10]).all()
-
-
-def test_cuckoo_overflow_autogrows_instead_of_failing():
-    """A visited set that outgrows the configured capacity must DEGRADE like
-    bloom (higher fpp), never crash mid-crawl: on kick exhaustion the filter
-    widens each bucket's slot count (bucket count is frozen by the missing
-    key bits), so adds keep succeeding, no added value ever goes
-    false-negative, and deletes/serialization stay valid."""
-    from icrawler_spark.crawl.cuckoo import CuckooFilter
-
-    cf = CuckooFilter(capacity=16)  # tiny geometry: m*4 slots ≈ 32
-    base_slots = cf.n_slots
-    vals = pd.Series([f"https://grow.test/{i}" for i in range(2000)])  # ~60× over
-    cf.add_many(vals)  # must not raise
-    assert cf.n_slots > base_slots
-    assert cf.n_items == 2000
-    assert cf.might_contain_many(vals).all()  # zero false negatives
-
-    # serialize → deserialize preserves the grown slot width bit-exactly
-    back = CuckooFilter.from_bytes(cf.to_bytes())
-    assert back.n_slots == cf.n_slots
-    assert back.to_bytes() == cf.to_bytes()
-    assert back.might_contain_many(vals).all()
-
-    # deletion still exact for added-once values
-    assert back.delete_many(vals[:50]).all()
-    assert back.might_contain_many(vals[50:]).all()
-
-    # growth is deterministic: same inserts ⇒ byte-identical table
-    dup = CuckooFilter(capacity=16)
-    dup.add_many(vals)
-    assert dup.to_bytes() == cf.to_bytes()
-
-    # merge across different slot widths (one shard grew, one did not)
-    small = CuckooFilter(capacity=16)
-    small.add_many(vals[:10])
-    merged = CuckooFilter.from_bytes(cf.to_bytes()).merge(small)
-    assert merged.might_contain_many(vals).all()
-
-
-def test_cuckoo_engine_matches_exact_only(spark, site, pages):
-    """Same equality gate as bloom's: the cuckoo-routed crawl is bit-equal
-    to the exact-anti-join-only crawl (false positives only ever cost a
-    redundant exact check)."""
-    e1 = CrawlEngine(spark, pages, CrawlConfig(start_url=START, use_bloom=False))
-    e1.run()
-    e2 = CrawlEngine(
-        spark, pages, CrawlConfig(start_url=START, use_bloom=True, seen_filter="cuckoo")
-    )
-    e2.run()
-    assert e1.crawl_order() == e2.crawl_order()
-    assert e1.seen_urls() == e2.seen_urls()
 
 
 def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_path, monkeypatch):
@@ -724,12 +665,13 @@ def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_p
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_invalidate_urls_refetches_only_those(spark, site, pages, kind):
+@pytest.mark.parametrize("use_bloom", [True, False], ids=["bloom", "exact"])
+def test_invalidate_urls_refetches_only_those(spark, site, pages, use_bloom):
     """Recrawl invalidation: invalidated pages are refetched at the frontier
-    tail; everything else (including their outlinks) stays deduped."""
+    tail; everything else (including their outlinks) stays deduped — with
+    the rebuilt bloom pre-filter and with the exact anti-join alone."""
     eng = CrawlEngine(
-        spark, pages, CrawlConfig(start_url=START, max_rounds=40, seen_filter=kind)
+        spark, pages, CrawlConfig(start_url=START, max_rounds=40, use_bloom=use_bloom)
     )
     eng.run()
     order0 = eng.crawl_order()
@@ -744,7 +686,7 @@ def test_invalidate_urls_refetches_only_those(spark, site, pages, kind):
     assert sorted(order1) == sorted(order0)      # same url set, no dups
     assert order1[-2:] == targets                 # refetched at the tail (FIFO by url)
     assert len(order1) == len(order0)
-    # unknown urls are ignored (also keeps cuckoo deletion safe)
+    # unknown urls are ignored
     assert (
         eng.invalidate_urls(
             spark.createDataFrame([("https://never.seen.test/x",)], "url string")

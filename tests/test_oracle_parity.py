@@ -115,3 +115,26 @@ def test_rows_only_queries_run(spark):
         df = q(spark, SF_DIR)
         assert df.columns
         assert df.count() >= 0
+
+
+@pytest.mark.parametrize(
+    "priority,demote",
+    [
+        (["no_such_query"], []),
+        ([], ["no_such_query"]),
+        (["search_topk"], ["search_topk"]),
+    ],
+    ids=["unknown-priority", "unknown-demote", "overlap"],
+)
+def test_gate_lists_are_validated(monkeypatch, priority, demote):
+    """Every gate-list name must be a registered query and the priority and
+    demote lists must be disjoint — a renamed query fails loudly instead of
+    silently dropping out of the gate order."""
+    import icrawler_spark.queries as registry
+
+    monkeypatch.setattr(registry, "_GATE_PRIORITY", priority)
+    monkeypatch.setattr(registry, "_GATE_DEMOTE", demote)
+    with pytest.raises(AssertionError):
+        registry.all_queries()
+    with pytest.raises(AssertionError):
+        registry.all_oracles()

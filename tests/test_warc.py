@@ -216,6 +216,37 @@ def test_write_warc_streams_records(tmp_path, spark):
     assert {r.url for r in back.collect()} == {r[0] for r in rows}
 
 
+def test_write_warc_failed_partition_leaves_no_segment(tmp_path, spark):
+    """A partition that fails after its first record was written must leave
+    no seg-* file behind: records stream into a hidden temp file that is
+    renamed only on success and unlinked on failure. One record per Arrow
+    batch; the second batch carries a timestamp pandas cannot represent, so
+    the task fails while reading it, after record one is on disk."""
+    import os
+
+    import pytest
+
+    from icrawler_spark.crawl.warc import write_warc
+
+    rows = [
+        ("https://f.test/a.html", dt.datetime(2024, 1, 1), b"<html>a</html>"),
+        ("https://f.test/b.html", dt.datetime(1, 1, 1), b"<html>b</html>"),
+    ]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp_ntz, html binary"
+    ).coalesce(1)
+    out = str(tmp_path / "failed")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(Exception):
+            write_warc(pages, out).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert os.listdir(out) == []
+
+
 def test_read_warc_malformed_date_is_null_not_fatal(tmp_path, spark):
     """A malformed WARC-Date in an otherwise well-framed record must not
     fail the read (ANSI cast would throw): try_to_timestamp → NULL."""
