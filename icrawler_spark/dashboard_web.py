@@ -10,8 +10,7 @@ This module reproduces that surface over the engine's DataFrames:
 - payload keys and status/reason strings match ``TaskOverview.to_jsonable``
   and ``_compute_status`` (ref :85-99, :190-203) exactly;
 - per-task counts come from one grouped aggregation over the normalized
-  state tables (``crawl.dashboard.task_overview`` shape) instead of walking
-  an in-memory dict per request;
+  state tables instead of walking an in-memory dict per request;
 - filesystem facts (state mtime, cache/output dir sizes) are computed when
   a per-task layout is provided, else null/0 exactly as a layout-less
   reference task would report;
@@ -20,7 +19,7 @@ This module reproduces that surface over the engine's DataFrames:
   ``window.__PBC_CONFIG__`` contract, with a small inline renderer that
   fetches ``/api/tasks``.
 
-Serving uses the same stdlib ThreadingHTTPServer pattern as ``httpapi``.
+Serving uses ``httpapi.ThreadedServer``, the policy API's server lifecycle.
 """
 
 from __future__ import annotations
@@ -29,13 +28,14 @@ import json
 import os
 import threading
 from datetime import datetime, timedelta
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.pure import safe_filename
+from .httpapi import ThreadedServer
 
 # ref runner.py:287-288 monitor cadence defaults
 _MIN_HOURS = 20.0
@@ -490,33 +490,8 @@ class _DashHandler(BaseHTTPRequestHandler):
             return self._send(500, {"error": str(exc)})
 
 
-class DashboardHTTPServer:
-    """Threaded stdlib server over a DashboardService; ``port=0`` → ephemeral."""
+class DashboardHTTPServer(ThreadedServer):
+    """Threaded stdlib server over a DashboardService."""
 
     def __init__(self, service: DashboardService, host: str = "127.0.0.1", port: int = 0):
-        handler = type("_BoundDashHandler", (_DashHandler,), {"service": service})
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._thread: threading.Thread | None = None
-
-    @property
-    def address(self) -> tuple[str, int]:
-        host, port = self._httpd.server_address[:2]
-        return str(host), int(port)
-
-    def start(self) -> tuple[str, int]:
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
-        return self.address
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-    def __enter__(self) -> tuple[str, int]:
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        super().__init__(type("_BoundDashHandler", (_DashHandler,), {"service": service}), host, port)

@@ -15,8 +15,8 @@ parameter names, error messages, and status codes mirror the reference:
 Every response body comes from the corresponding ``PolicyService`` payload
 function (serve.py), so the payload-parity tests transfer to the HTTP
 boundary unchanged. Concurrency model matches the reference's single shared
-``PolicyFinder``: one cached index DataFrame, one request per handler
-thread (Spark driver actions are thread-safe).
+``PolicyFinder``: one read-only catalog snapshot, one request per handler
+thread (the scoring routes' Spark driver actions are thread-safe).
 """
 
 from __future__ import annotations
@@ -211,8 +211,9 @@ class _Handler(BaseHTTPRequestHandler):
         return self._send(200, payload)
 
 
-class PolicyHTTPServer:
-    """Threaded stdlib server over a PolicyService; ``port=0`` → ephemeral.
+class ThreadedServer:
+    """Lifecycle shared by the stdlib servers: a ``ThreadingHTTPServer``
+    over ``handler`` on a daemon thread; ``port=0`` → ephemeral.
 
     Usage::
 
@@ -220,8 +221,7 @@ class PolicyHTTPServer:
             urllib.request.urlopen(f"http://{host}:{port}/search?q=...")
     """
 
-    def __init__(self, service: PolicyService, host: str = "127.0.0.1", port: int = 0):
-        handler = type("_BoundHandler", (_Handler,), {"service": service})
+    def __init__(self, handler: type, host: str, port: int):
         self._httpd = ThreadingHTTPServer((host, port), handler)
         self._thread: threading.Thread | None = None
 
@@ -247,3 +247,10 @@ class PolicyHTTPServer:
 
     def __exit__(self, *exc) -> None:
         self.stop()
+
+
+class PolicyHTTPServer(ThreadedServer):
+    """Threaded stdlib server over a PolicyService."""
+
+    def __init__(self, service: PolicyService, host: str = "127.0.0.1", port: int = 0):
+        super().__init__(type("_BoundHandler", (_Handler,), {"service": service}), host, port)

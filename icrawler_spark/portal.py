@@ -36,7 +36,7 @@ from .config import load_tasks
 from .crawl.export import state_json_to_tables
 from .dashboard_web import DashboardService, _DashHandler
 from .functions.pure import safe_filename
-from .httpapi import _Handler
+from .httpapi import ThreadedServer, _Handler
 from .runner import resolve_setting
 from .serve import PolicyService
 
@@ -90,47 +90,17 @@ class _PortalHandler(_Handler, _DashHandler):
         return self._dispatch("do_OPTIONS")
 
 
-class PortalHTTPServer:
-    """Threaded stdlib server mounting both services; ``port=0`` → ephemeral."""
+class PortalHTTPServer(ThreadedServer):
+    """Threaded stdlib server mounting both services."""
 
     def __init__(self, policy_service: PolicyService, dash_service: DashboardService,
                  host: str = "127.0.0.1", port: int = 0):
-        import threading
-        from http.server import ThreadingHTTPServer
-
         handler = type(
             "_BoundPortalHandler",
             (_PortalHandler,),
             {"policy_service": policy_service, "dash_service": dash_service},
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._threading = threading
-        self._thread = None
-
-    @property
-    def address(self) -> tuple[str, int]:
-        host, port = self._httpd.server_address[:2]
-        return str(host), int(port)
-
-    def start(self) -> tuple[str, int]:
-        self._thread = self._threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
-        return self.address
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-    def __enter__(self) -> tuple[str, int]:
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        super().__init__(handler, host, port)
 
 
 def resolve_state_path(task_name: str, cli_state: str | None, task_cfg: dict,

@@ -1,25 +1,27 @@
 """Driver-side serving shim: the reference's query entry points as payload
-functions over the search-index DataFrame.
+functions over one in-memory catalog snapshot.
 
 Mirrors the reference FastAPI surface (ref searcher/api_server.py:195-218
 ``_search_payload``, 269-325 ``/policies`` + ``/policies/{id}``, 327-411
 ``/clause``) without an HTTP framework: each function returns the exact JSON
 payload dict the corresponding route serializes. A real deployment would
-mount these on any ASGI app; the engine work — scoring, top-k, keyword
-two-phase, clause slicing, outline build — all happens in the DataFrame
-layer, so the shim only formats results.
+mount these on any ASGI app.
 
-Scale: the index is a cached DataFrame; ``search`` compiles to
+Scale: like the reference's ``PolicyFinder`` (a list of entries plus dict
+indexes, loaded once at boot), ``PolicyService`` collects the cached index,
+the documents and the texts to the driver once, when it is constructed —
+the catalog is ~10^3 rows. Per-entry lookups, document lists, texts and
+catalog pages are then dict probes and list slices that start no Spark job.
+Only scoring stays in the DataFrame layer: ``search`` compiles to
 TakeOrderedAndProject and ``keyword_search`` to the cheap-predicate-first
-two-phase plan (search/index.py). Per-entry lookups (``find_entry``) filter
-on serial/norm_title — partition-prunable on a serial-sorted index table.
+two-phase plan (search/index.py), both over the cached index.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .functions import pure
 from .search import build_search_index, keyword_search, search
@@ -89,8 +91,14 @@ def _entry_payload(row, include_documents: bool, documents: dict | None) -> dict
     for f in _ENTRY_FIELDS:
         payload[f] = getattr(row, f, None)
     if include_documents:
-        payload["documents"] = (documents or {}).get(row.entry_id, [])
+        payload["documents"] = [dict(d) for d in (documents or {}).get(row.entry_id, [])]
     return payload
+
+
+def _nulls_first(value):
+    """Sort key for a nullable string: NULL first, like Spark's ascending
+    sort; Python ``str`` order is Spark's UTF-8 byte order."""
+    return value is not None, value or ""
 
 
 def _compose_text(lines) -> str:
@@ -164,16 +172,49 @@ def _ref_dict(ref: ClauseReference) -> dict:
 
 @dataclass
 class PolicyService:
-    """The reference PolicyFinder surface over DataFrames.
+    """The reference PolicyFinder surface over one catalog snapshot.
 
     index:      build_search_index output (cache() it for a live service)
-    documents:  optional (entry_id, url, doc_type, title) for payloads
+    documents:  optional (entry_id, url, doc_type, title[, _src_pos]) for payloads
     texts:      optional (entry_id, text) — clause/outline/text routes
+
+    Construction collects all three once and builds the reference's dict
+    indexes (by entry_id, serial and normalized title) plus the catalog in
+    display order; every lookup answers from them without a Spark job.
+    ``search`` and ``keyword_search`` still score over ``index``.
     """
 
     index: DataFrame
     documents: DataFrame | None = None
     texts: DataFrame | None = None
+
+    def __post_init__(self) -> None:
+        rows = sorted(self.index.collect(), key=lambda r: _nulls_first(r.entry_id))
+        self._by_id = {r.entry_id: r for r in rows}
+        # serials are unique only per task, titles not at all: the lowest
+        # entry_id wins either lookup
+        self._by_serial: dict = {}
+        self._by_title: dict = {}
+        for r in rows:
+            self._by_serial.setdefault(r.serial, r)
+            self._by_title.setdefault(r.norm_title, r)
+        # display order: (norm_title, else title; entry_id)
+        self._catalog = sorted(
+            rows, key=lambda r: (_nulls_first(r.norm_title or r.title), _nulls_first(r.entry_id))
+        )
+        self._documents: dict = {}
+        if self.documents is not None:
+            cols = ["entry_id", "url", "doc_type", "title"]
+            cols += ["_src_pos"] if "_src_pos" in self.documents.columns else []
+            docs = self.documents.select(*cols).collect()
+            for r in sorted(docs, key=lambda r: getattr(r, "_src_pos", 0) or 0):
+                self._documents.setdefault(r.entry_id, []).append(
+                    {"url": r.url, "type": r.doc_type, "title": r.title}
+                )
+        self._texts: dict = {}
+        if self.texts is not None:
+            for r in self.texts.select("entry_id", "text").collect():
+                self._texts.setdefault(r.entry_id, r.text)
 
     @classmethod
     def from_state(cls, entries: DataFrame, documents: DataFrame,
@@ -181,17 +222,6 @@ class PolicyService:
         return cls(build_search_index(entries, documents).cache(), documents, texts)
 
     # -- lookups ---------------------------------------------------------------
-
-    def _documents_map(self, entry_ids) -> dict:
-        if self.documents is None or not entry_ids:
-            return {}
-        rows = self.documents.where(F.col("entry_id").isin(list(entry_ids))).collect()
-        out: dict = {}
-        for r in sorted(rows, key=lambda r: getattr(r, "_src_pos", 0) or 0):
-            out.setdefault(r.entry_id, []).append(
-                {"url": r.url, "type": r.doc_type, "title": r.title}
-            )
-        return out
 
     def find_entry(self, identifier) -> object | None:
         """ref find_entry (policy_finder.py:1395-1416): int → serial;
@@ -202,31 +232,13 @@ class PolicyService:
         if not s:
             return None
         try:
-            num = int(s)
+            hit = self._by_serial.get(int(s))
         except ValueError:
-            num = None
-        if num is not None:
-            hit = self.index.where(F.col("serial") == num).limit(1).collect()
-            if hit:
-                return hit[0]
-        normalized = pure.norm_text(s)
-        hit = (
-            self.index.where(F.col("norm_title") == normalized)
-            .orderBy("entry_id")
-            .limit(1)
-            .collect()
-        )
-        return hit[0] if hit else None
+            hit = None
+        return hit if hit is not None else self._by_title.get(pure.norm_text(s))
 
     def get_entry_text(self, entry_row) -> str | None:
-        if self.texts is None:
-            return None
-        hit = (
-            self.texts.where(F.col("entry_id") == entry_row.entry_id)
-            .limit(1)
-            .collect()
-        )
-        return hit[0].text if hit else None
+        return self._texts.get(entry_row.entry_id)
 
     # -- routes ----------------------------------------------------------------
 
@@ -235,10 +247,9 @@ class PolicyService:
         """GET/POST /search (ref api_server.py:195-218)."""
         clause_ref = parse_clause_reference(query)
         rows = search(self.index, query, topk=topk).collect()
-        docs = self._documents_map([r.entry_id for r in rows]) if include_documents else None
         results = []
         for r in rows:
-            payload = _entry_payload(r, include_documents, docs)
+            payload = _entry_payload(r, include_documents, self._documents)
             payload["score"] = r.score
             if clause_ref is not None:
                 payload["clause"] = extract_clause_result(
@@ -261,36 +272,18 @@ class PolicyService:
         """GET /policies (ref api_server.py:269-289): keyword filter or the
         full catalog sorted by normalized title.
 
-        The no-query route returns the WHOLE catalog — the reference's
-        contract, fine at its ~10^3 entries. That is a driver transfer: at a
-        100× catalog the ``offset``/``max_entries`` page is the explicit
-        boundary — the sorted read streams through ``toLocalIterator`` and
-        the driver holds AT MOST one page (offset rows are skipped without
-        being retained), never the catalog. Deterministic paging: the sort
-        key is (display title, entry_id) — a total order, so pages never
-        overlap or skip under re-execution."""
+        Without ``offset``/``max_entries`` the route returns every match —
+        the reference's contract. With them, both branches return the same
+        slice ``[offset, offset + max_entries)`` of their ordered list. The
+        catalog's display key (title, entry_id) is a total order, so pages
+        never overlap or skip."""
         if query:
             rows = keyword_search(self.index, self.texts, query).collect()
-            ids = [r.entry_id for r in rows]
-            by_id = {r.entry_id: r for r in
-                     self.index.where(F.col("entry_id").isin(ids)).collect()} if ids else {}
-            entries = [by_id[i] for i in ids if i in by_id]
+            entries = [self._by_id[r.entry_id] for r in rows if r.entry_id in self._by_id]
         else:
-            ordered = self.index.orderBy(
-                F.when(F.col("norm_title") != "", F.col("norm_title")).otherwise(F.col("title")),
-                F.col("entry_id"),
-            )
-            if max_entries is not None or offset:
-                entries, skipped = [], 0
-                for r in ordered.toLocalIterator():
-                    if skipped < offset:
-                        skipped += 1
-                        continue
-                    entries.append(r)
-                    if max_entries is not None and len(entries) >= max_entries:
-                        break
-            else:
-                entries = ordered.collect()
+            entries = self._catalog
+        stop = None if max_entries is None else offset + max_entries
+        entries = entries[offset:stop]
         payload = {
             "policies": [_entry_payload(r, False, None) for r in entries],
             "result_count": len(entries),

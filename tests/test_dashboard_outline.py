@@ -1,4 +1,4 @@
-"""Dashboard overview aggregates + outline builder."""
+"""Outline builder: driver-side nesting and the Spark UDF."""
 
 from __future__ import annotations
 
@@ -6,63 +6,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from icrawler_spark.crawl.dashboard import task_overview, type_histogram
 from icrawler_spark.search.outline import build_outline, outline_udf
-
-
-def _tables(spark):
-    entries = spark.createDataFrame(
-        [("e1", "t1", 1, "甲", ""), ("e2", "t1", 2, "乙", ""), ("e3", "t2", 3, "丙", "")],
-        "entry_id string, task string, serial int, title string, remark string",
-    )
-    documents = spark.createDataFrame(
-        [
-            ("e1", "http://x/a.pdf", "pdf", "a"),
-            ("e1", "http://x/a.html", "html", "a"),
-            ("e3", "http://x/c.pdf", "pdf", "c"),
-        ],
-        "entry_id string, url string, doc_type string, title string",
-    )
-    seen = spark.createDataFrame(
-        [
-            ("http://x/a.pdf", "e1", "a", "pdf", True, None),
-            ("http://x/a.html", "e1", "a", "html", False, None),
-            ("http://x/c.pdf", "e3", "c", "pdf", False, None),
-        ],
-        "url string, entry_id string, title string, doc_type string, "
-        "downloaded boolean, local_path string",
-    )
-    return entries, documents, seen
-
-
-def test_task_overview_counts(spark):
-    entries, documents, seen = _tables(spark)
-    rows = {r.task: r for r in task_overview(entries, documents, seen).collect()}
-    t1 = rows["t1"]
-    assert t1.entries_total == 2
-    assert t1.documents_total == 2
-    assert t1.downloaded_total == 1
-    assert t1.pending_total == 1
-    assert t1.entries_without_documents == 1  # e2 has no docs
-    assert t1.tracked_files == 3 and t1.tracked_downloaded == 1
-    assert t1.status == "attention"
-    t2 = rows["t2"]
-    assert t2.status == "attention" and t2.pending_total == 1
-
-
-def test_task_overview_ok_and_stale(spark):
-    entries, documents, seen = _tables(spark)
-    all_dl = seen.withColumn("downloaded", F.lit(True))
-    rows = {r.task: r for r in task_overview(entries, documents, all_dl).collect()}
-    assert rows["t1"].status == "ok"
-    stale = {r.task: r for r in task_overview(entries, documents, all_dl, cache_fresh=False).collect()}
-    assert stale["t1"].status == "stale"
-
-
-def test_type_histogram(spark):
-    _, _, seen = _tables(spark)
-    hist = {r.doc_type: r.n for r in type_histogram(seen).collect()}
-    assert hist == {"pdf": 2, "html": 1}
 
 
 OUTLINE_DOC = (

@@ -85,6 +85,18 @@ def test_status_strings_match_reference(frames):
         assert compute_status(*args) == _compute_status(*args)
 
 
+def test_compute_status_rollup():
+    """The four statuses and their reason strings (ref dashboard.py:190-203),
+    checked directly so they stay covered without the reference checkout."""
+    assert compute_status(0, 0, True, 0) == ("waiting", "No entries recorded yet")
+    assert compute_status(0, 3, False, 2) == ("waiting", "No entries recorded yet")
+    assert compute_status(5, 3, True, 2) == ("attention", "3 document(s) pending download")
+    assert compute_status(5, 1, False, 2) == ("attention", "1 document(s) pending download")
+    assert compute_status(5, 0, False, 2) == ("stale", "Listing cache is older than today")
+    assert compute_status(5, 0, False, 0) == ("ok", "Up to date")
+    assert compute_status(5, 0, True, 2) == ("ok", "Up to date")
+
+
 def test_overview_counts(frames):
     payloads = {p["name"]: p for p in task_overview_payloads(*frames)}
     main = payloads["主站"]

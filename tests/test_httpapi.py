@@ -112,6 +112,22 @@ def test_policies_routes_byte_equal_shim(server, service):  # noqa: F811
     assert _get(server, "/policies/999") == (404, {"detail": "policy_not_found"})
 
 
+def test_policies_query_pagination_over_http(server, service):  # noqa: F811
+    query = _q("人民银行")
+    status, body = _get(server, f"/policies?query={query}&limit=1&offset=1")
+    assert status == 200
+    want = service.policies_payload("人民银行", max_entries=1, offset=1)
+    assert body == json.loads(json.dumps(want, ensure_ascii=False))
+    assert body["result_count"] == 1 and body["offset"] == 1
+    status, body = _get(server, f"/policies?query={query}")
+    assert status == 200
+    assert body == json.loads(json.dumps(service.policies_payload("人民银行"), ensure_ascii=False))
+    assert body["result_count"] == 2 and "offset" not in body
+    for bad in ("limit=abc", "limit=-1", "offset=-1"):
+        assert _get(server, f"/policies?query={query}&{bad}") == (
+            400, {"error": "Invalid 'limit' or 'offset' parameter"})
+
+
 def test_clause_routes(server, service):  # noqa: F811
     path = f"/clause?title={_q('中国人民银行关于加强银行卡收单业务外包管理的通知')}&clause={_q('第二条')}"
     status, body = _get(server, path)

@@ -5,12 +5,14 @@ ref runner.py:17-125/533-543 as exercised by tests/test_pbc_monitor.py)."""
 from __future__ import annotations
 
 import json
+import uuid
 
 import pytest
 
 from icrawler_spark.config import load_tasks
 from icrawler_spark.crawl import build_site, site_pages_df
 from icrawler_spark.runner import build_tasks, parse_args, preview_action, resolve_setting, run_task
+from icrawler_spark.search import search
 from icrawler_spark.serve import PolicyService
 
 _TEXT = (
@@ -95,9 +97,9 @@ def test_policies_with_query(service):
 
 def test_policies_pagination_bounds_driver_transfer(spark):
     """VERDICT r3 item 9: at a 100× catalog the no-query route must have an
-    explicit driver-transfer boundary. offset/max_entries pages stream via
-    toLocalIterator (driver holds one page), pages are disjoint, ordered,
-    and cover the catalog exactly."""
+    explicit response-size boundary. offset/max_entries pages are slices of
+    the display-ordered catalog snapshot (a response holds one page), pages
+    are disjoint, ordered, and cover the catalog exactly."""
     n = 12_000
     entries = spark.range(n).selectExpr(
         "concat('e', lpad(cast(id as string), 6, '0')) as entry_id",
@@ -130,6 +132,75 @@ def test_policies_pagination_bounds_driver_transfer(spark):
     # middle page starts exactly where the previous ended (no overlap/skip)
     mid = svc.policies_payload(max_entries=3, offset=7)["policies"]
     assert [p["id"] for p in mid] == seen[7:10]
+
+
+def test_policies_query_pagination(service):
+    """The keyword branch honours max_entries/offset with the same slice as
+    the catalog branch; omitted, it returns the reference's full list."""
+    full = service.policies_payload("人民银行")
+    assert set(full) == {"policies", "result_count", "query"}
+    assert full["result_count"] == len(full["policies"]) == 2
+    page = service.policies_payload("人民银行", max_entries=1, offset=1)
+    assert page == {
+        "policies": full["policies"][1:2], "result_count": 1,
+        "query": "人民银行", "offset": 1,
+    }
+    first = service.policies_payload("人民银行", max_entries=1)
+    assert first == {"policies": full["policies"][:1], "result_count": 1, "query": "人民银行"}
+    assert service.policies_payload("人民银行", offset=5)["policies"] == []
+    assert service.policies_payload(max_entries=0)["policies"] == []
+
+
+def test_find_entry_shared_serial_picks_lowest_entry_id(spark):
+    """Serials are unique per task only: a numeric lookup across tasks that
+    share a serial resolves to the lowest entry_id, like the title path."""
+    entries = spark.createDataFrame(
+        [
+            ("t2-0001", "t2", 1, "乙任务规定", ""),
+            ("t2-0002", "t2", 2, "乙任务通知", ""),
+            ("t1-0001", "t1", 1, "甲任务规定", ""),
+        ],
+        "entry_id string, task string, serial int, title string, remark string",
+    ).repartition(3)
+    documents = spark.createDataFrame(
+        [("t1-0001", "http://x/a.html", "html", "a", 0)],
+        "entry_id string, url string, doc_type string, title string, _src_pos long",
+    )
+    svc = PolicyService.from_state(entries, documents, None)
+    assert svc.find_entry(1).entry_id == "t1-0001"
+    assert svc.find_entry("1").entry_id == "t1-0001"
+    assert svc.find_entry("2").entry_id == "t2-0002"
+    assert svc.policy_payload("1")["policy"]["title"] == "甲任务规定"
+    svc.index.unpersist()
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, read from the status tracker under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"serve-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serve job guard")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookups_start_no_spark_jobs(spark, service):
+    """Outline, clause, id/title lookups and catalog pages answer from the
+    construction-time snapshot; /search runs only its scoring query."""
+    title = "中国人民银行关于加强银行卡收单业务外包管理的通知"
+    assert _spark_jobs(spark, lambda: service.policy_payload("4", include=["outline"])) == 0
+    assert _spark_jobs(spark, lambda: service.clause_payload("4", "第三条第二款")) == 0
+    assert _spark_jobs(spark, lambda: service.clause_payload(title, "第三条")) == 0
+    assert _spark_jobs(spark, lambda: service.find_entry(4)) == 0
+    assert _spark_jobs(spark, lambda: service.find_entry(title)) == 0
+    assert _spark_jobs(spark, lambda: service.policies_payload(max_entries=2, offset=1)) == 0
+    scoring = _spark_jobs(spark, lambda: search(service.index, "人民银行公告", topk=2).collect())
+    assert scoring >= 1
+    assert _spark_jobs(spark, lambda: service.search_payload("人民银行公告", topk=2)) <= scoring
 
 
 def test_policy_meta_text_outline(service):
