@@ -79,12 +79,13 @@ def main() -> None:
         action()
         out[name] = round(time.time() - t0, 2)
 
-    # bloom build at round-0 batch size (320k urls, capacity 1.6M)
+    # bloom build at round-0 batch size (320k urls, capacity 1.6M) over the
+    # xxhash64 url keys the engine builds with
     from icrawler_spark.crawl import bloom as bloom_mod
 
-    batch = pages.select("url").limit(320_000).localCheckpoint(eager=True)
+    batch = pages.select(F.xxhash64("url").alias("_sk")).limit(320_000).localCheckpoint(eager=True)
     t0 = time.time()
-    bloom_mod.build_filter(batch, "url", 1_600_000, 0.01)
+    bloom_mod.build_filter(batch, "_sk", 1_600_000, 0.01)
     out["bloom_build"] = round(time.time() - t0, 2)
 
     print(json.dumps(out))

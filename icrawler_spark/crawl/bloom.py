@@ -2,9 +2,9 @@
 
 Spark's native bloom runtime filters (InjectRuntimeFilter) only fire inside
 join planning; the crawl loop needs a filter that *persists across rounds*,
-so we build our own: per-partition bitmaps built vectorized in an
-``applyInPandas``-style fold, OR-merged on the driver (a few MiB), broadcast
-back, and applied as a vectorized pandas UDF pre-filter.
+so we build our own: a driver-side bitmap, updated each round from a JVM
+aggregation over the round's keys, broadcast back, and applied as a
+vectorized pandas UDF pre-filter.
 
 Correctness contract (SURVEY §4 hard-part (f)): the Bloom answer "maybe seen"
 is only ever used to *route* candidates into the exact anti-join; a false
@@ -12,14 +12,23 @@ positive can cost a redundant exact check, never a dropped URL. The engine
 uses ``might_contain`` to short-circuit the definitely-new majority and sends
 the "maybe" minority through the exact anti-join.
 
-Hashing: ``pandas.util.hash_pandas_object`` (SipHash, fixed key) — vectorized
-C speed, deterministic across processes; k probe positions derive from two
-independent 64-bit hashes (Kirsch-Mitzenmacher double hashing).
+Hashing: keys are int64 transport keys (the engine's ``xxhash64(url)``),
+hashed once, in the JVM. The k probe positions come from the key itself by
+Kirsch-Mitzenmacher double hashing: ``h1 = pmod(key, n_bits)``,
+``h2 = key >>> 32``, ``pos_i = pmod(h1 + i·h2, n_bits)`` for ``i < k``. Every
+intermediate stays far below 2^63, so Spark's ANSI arithmetic never
+overflows, and numpy (``_positions``) and Spark (``_word_masks``) derive the
+same bits.
+
+Build: one Spark aggregation — explode the k positions, group by word
+``pos >> 6`` and ``bit_or`` the bit masks — fetched with ``toArrow()`` and
+OR-ed into a fresh bitmap. No Python worker runs, and the driver receives at
+most ``min(batch·k, n_words)`` rows instead of a full bitmap per partition.
 
 Sizing (VLDB'24 bloom-budgeting guidance): bits = n·ln(1/fpp)/ln2², k =
 (bits/n)·ln2. At 10^10 URLs / 1% fpp that is ~12 GiB total — sharded by
-``pmod(hash, n_shards)`` so each executor holds only its shard; in this
-sandbox a single bitmap suffices and the shard count is a constructor knob.
+``pmod(hash, n_shards)`` so each executor holds only its shard; at the
+sizes this package runs, a single bitmap suffices.
 """
 
 from __future__ import annotations
@@ -28,21 +37,11 @@ import math
 
 import numpy as np
 import pandas as pd
-
-# SipHash keys must be exactly 16 bytes
-_KEY1 = "icrawler_bloom1_"
-_KEY2 = "icrawler_bloom2_"
-
-
-def _hashes(values: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    s = values.astype(str)
-    h1 = pd.util.hash_pandas_object(s, index=False, hash_key=_KEY1).to_numpy(dtype=np.uint64)
-    h2 = pd.util.hash_pandas_object(s, index=False, hash_key=_KEY2).to_numpy(dtype=np.uint64)
-    return h1, h2
+from pyspark.sql import functions as F
 
 
 class BloomFilter:
-    """Fixed-size bitmap with vectorized add/contains."""
+    """Fixed-size bitmap with vectorized add/contains over int64 keys."""
 
     def __init__(self, capacity: int, fpp: float = 0.01):
         capacity = max(capacity, 16)
@@ -53,25 +52,22 @@ class BloomFilter:
         self.k = max(1, int(round((self.n_bits / capacity) * math.log(2))))
         self.bits = np.zeros(self.n_words, dtype=np.uint64)
 
-    def add_many(self, values: pd.Series) -> None:
-        if len(values) == 0:
-            return
-        h1, h2 = _hashes(values)
-        for i in range(self.k):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(self.n_bits)
-            np.bitwise_or.at(self.bits, (idx >> np.uint64(6)).astype(np.int64),
-                             np.uint64(1) << (idx & np.uint64(63)))
+    def _positions(self, keys) -> np.ndarray:
+        """(k, n) int64 bit positions of ``keys`` (see the module docstring)."""
+        keys = np.asarray(keys, dtype=np.int64)
+        h1 = np.mod(keys, self.n_bits)
+        h2 = (keys.view(np.uint64) >> np.uint64(32)).astype(np.int64)
+        i = np.arange(self.k, dtype=np.int64)[:, None]
+        return np.mod(h1 + i * h2, self.n_bits)
 
-    def might_contain_many(self, values: pd.Series) -> np.ndarray:
-        if len(values) == 0:
-            return np.zeros(0, dtype=bool)
-        h1, h2 = _hashes(values)
-        out = np.ones(len(values), dtype=bool)
-        for i in range(self.k):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(self.n_bits)
-            word = self.bits[(idx >> np.uint64(6)).astype(np.int64)]
-            out &= (word >> (idx & np.uint64(63))) & np.uint64(1) > 0
-        return out
+    def add_many(self, keys) -> None:
+        pos = self._positions(keys).ravel()
+        np.bitwise_or.at(self.bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
+
+    def might_contain_many(self, keys) -> np.ndarray:
+        pos = self._positions(keys)
+        bit = (self.bits[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)
+        return bit.astype(bool).all(axis=0)
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
         assert self.n_bits == other.n_bits and self.k == other.k
@@ -95,28 +91,30 @@ class BloomFilter:
         return obj
 
 
+def _word_masks(df, col: str, bf: BloomFilter):
+    """``(word, mask)`` rows: for each bitmap word the keys of ``df[col]``
+    touch, the OR of their bits — the JVM twin of ``BloomFilter.add_many``."""
+    key, n_bits = F.col(col).cast("long"), F.lit(bf.n_bits)
+    h1 = F.pmod(key, n_bits)
+    h2 = F.shiftrightunsigned(key, 32)
+    pos = F.explode(F.array(*[F.pmod(h1 + i * h2, n_bits) for i in range(bf.k)]))
+    bit = F.call_function("shiftleft", F.lit(1).cast("long"), F.col("pos").bitwiseAND(63))
+    return (
+        df.select(pos.alias("pos"))
+        .groupBy(F.shiftright("pos", 6).alias("word"))
+        .agg(F.bit_or(bit).alias("mask"))
+    )
+
+
 def build_filter(df, col: str, capacity: int, fpp: float = 0.01) -> BloomFilter:
-    """Distributed build: per-partition bitmaps in executors (mapInPandas),
-    OR-merge of the (identical-size) bitmaps on the driver."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    schema = StructType([StructField("bloom", BinaryType())])
-
-    def per_partition(batches):
-        bf = BloomFilter(capacity, fpp)
-        any_rows = False
-        for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                bf.add_many(pdf[col])
-        if any_rows:
-            yield pd.DataFrame({"bloom": [bf.to_bytes()]})
-
-    parts = df.select(col).mapInPandas(per_partition, schema).collect()
-    merged = BloomFilter(capacity, fpp)
-    for row in parts:
-        merged.merge(BloomFilter.from_bytes(bytes(row.bloom)))
-    return merged
+    """Bloom filter over the int64 keys in ``df[col]``: the set words are
+    aggregated in the JVM and OR-ed into a fresh bitmap on the driver."""
+    bf = BloomFilter(capacity, fpp)
+    t = _word_masks(df, col, bf).toArrow()
+    words = t.column("word").to_numpy()
+    masks = t.column("mask").to_numpy().view(np.uint64)
+    np.bitwise_or.at(bf.bits, words, masks)
+    return bf
 
 
 def prefilter_unseen(df, col: str, bloom_bytes_bc):

@@ -25,10 +25,11 @@ indexes by it, so density is the cheap thing to trade for the one
 per-round all-links exchange that profiling showed is a pure serial term
 on a shared memory bus.
 
-Seen-set: an *incremental* Bloom filter (only each round's batch is hashed,
-built per-partition on executors and OR-merged) routes the definitely-new
-majority around the exact anti-join; "maybe seen" candidates go through the
-exact anti-join, so Bloom false positives cannot drop URLs (§4 hard-part (f)).
+Seen-set: an *incremental* Bloom filter (only each round's batch is added:
+its set words are aggregated in the JVM from the batch's xxhash64 keys and
+OR-ed into the driver bitmap) routes the definitely-new majority around the
+exact anti-join; "maybe seen" candidates go through the exact anti-join, so
+Bloom false positives cannot drop URLs (§4 hard-part (f)).
 
 Skew: the fetch batch is repartitioned by ``pmod(xxhash64(netloc, round), N)``
 — the salt varies per round so a hot host never pins the same partition, and
@@ -78,12 +79,6 @@ class CrawlConfig:
                                        # from a seed (seeds are depth 0);
                                        # pruned BEFORE the link pin so
                                        # out-of-scope links never shuffle
-    follow_redirects: bool = True      # when the pages table carries a
-                                       # `redirect_to` column (3xx Location),
-                                       # targets enter the link stream at
-                                       # link_pos −1 — ahead of the page's
-                                       # parsed links, since a redirect is
-                                       # known before any parsing
     compact_visited_every: int = 16    # coalesce visited deltas every K rounds
     dedup_near_dups: bool = False      # dedup-before-store: each round's
                                        # fetched pages probe a crawl-lifetime
@@ -317,18 +312,21 @@ class CrawlEngine:
 
     def _sketch_path(self, rnd: int) -> str:
         """Per-round serialized seen-filter blob. The name carries the filter
-        kind AND key derivation (h64 = xxhash64 transport keys) so a format
-        change between runs can never deserialize-and-probe the wrong
-        content — an absent blob falls back to a rebuild from visited."""
+        kind AND the bit derivation (xxh64_km = Kirsch-Mitzenmacher positions
+        split from the xxhash64 transport key) so a blob written with another
+        derivation is never deserialized and probed — resume finds no blob
+        under this name and rebuilds from visited."""
         return os.path.join(
-            self.store.root, f"round={rnd:06d}", "seen_sketch_bloom_h64.bin"
+            self.store.root, f"round={rnd:06d}", "seen_sketch_bloom_xxh64_km.bin"
         )
 
     @staticmethod
     def _sketch_keys(df: DataFrame, col: str = "url") -> DataFrame:
         """Sketch transport keys: the sketch is built over and probed with
-        ``xxhash64(url)`` LONGS computed JVM-side, not the url strings — the
-        Arrow hop into the sketch's pandas UDFs then carries 8 bytes/row
+        ``xxhash64(url)`` LONGS computed JVM-side, not the url strings. They
+        are the only hash: the bloom derives its k bit positions from the
+        key itself, the build aggregates them without leaving the JVM, and
+        the probe's Arrow hop into the pandas UDF carries 8 bytes/row
         instead of a ~60-byte url (the prefilter over a 15M-candidate big
         round was profiled as part of the memory-bus-bound serial term). A
         64-bit collision only makes a never-seen url inherit "maybe seen"
@@ -664,7 +662,9 @@ class CrawlEngine:
         fetch_cols = ["task", "url", "html", "depth", "discovered_round", "discovery_pos"]
         if cfg.dedup_near_dups and "text" in self.pages.columns:
             fetch_cols.append("text")
-        follow_redirects = cfg.follow_redirects and "redirect_to" in self.pages.columns
+        # a `redirect_to` column (3xx Location) on the pages table turns on
+        # redirect following — see the link stream below
+        follow_redirects = "redirect_to" in self.pages.columns
         if follow_redirects:
             fetch_cols.append("redirect_to")
         fetched = self.pages.join(batch_side, "url", "inner").select(*fetch_cols)

@@ -10,16 +10,15 @@ Spark-first split:
 
 - :func:`normalize_filenames_plan` — the RENAME PLAN is columnar: expected
   name via the existing ``structured_filename`` pandas UDF, target path by
-  string ops, plan-level collision detection as a first-wins window over the
-  target path (two records wanting the same target: the first keeps the
-  rename, the rest become conflicts — exactly what the reference's
-  sequential walk produces when the second rename finds the target taken).
+  string ops.
 - :func:`apply_normalize_filenames` — filesystem renames and the state.json
   rewrite are driver-side by definition (one JSON artifact, local files):
   the collected plan is one row per downloaded file, the same contract
-  boundary as the state exporter. The on-disk existence checks at apply
-  time remain authoritative (a plan row downgrades to skip if its target
-  appeared meanwhile), matching the reference's semantics.
+  boundary as the state exporter. Renames run in discovery (``_src_pos``)
+  order like the reference's sequential walk: a target claimed by an earlier
+  rename (a dry-run rename claims too) or already on disk is skipped, and a
+  record skipped for a missing source file claims nothing, so the next
+  record wanting that target is renamed.
 """
 
 from __future__ import annotations
@@ -28,14 +27,14 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 def normalize_filenames_plan(seen: DataFrame) -> DataFrame:
     """seen(url, doc_type, downloaded, local_path, _src_pos) → plan rows
-    ``(url, local_path, new_path, action)`` for downloaded files only;
-    action ∈ already_ok | rename | conflict."""
+    ``(url, local_path, new_path, action, _src_pos)`` for downloaded files
+    only; action ∈ already_ok | rename."""
     from ..functions.pandas_udfs import structured_filename as sf_udf
 
     files = seen.where(
@@ -49,27 +48,16 @@ def normalize_filenames_plan(seen: DataFrame) -> DataFrame:
         F.regexp_replace(F.col("local_path"), "/[^/]*$", ""),
     ).otherwise(F.lit(""))
     expected = sf_udf(F.col("url"), F.col("doc_type"))
-    with_target = files.select(
+    return files.select(
         "url",
         "local_path",
-        "_src_pos",
         F.when(dirname == "", expected)
         .otherwise(F.concat(dirname, F.lit("/"), expected))
         .alias("new_path"),
-        (basename == expected).alias("_ok"),
-    )
-    w = Window.partitionBy("new_path").orderBy(F.asc("_src_pos"))
-    return (
-        with_target.withColumn("_rn", F.row_number().over(w))
-        .select(
-            "url",
-            "local_path",
-            "new_path",
-            F.when(F.col("_ok"), F.lit("already_ok"))
-            .when(F.col("_rn") == 1, F.lit("rename"))
-            .otherwise(F.lit("conflict"))
-            .alias("action"),
-        )
+        F.when(basename == expected, F.lit("already_ok"))
+        .otherwise(F.lit("rename"))
+        .alias("action"),
+        "_src_pos",
     )
 
 
@@ -92,7 +80,7 @@ def apply_normalize_filenames(
     with open(state_path, encoding="utf-8") as fh:
         data = json.load(fh)
     _entries, _documents, seen = state_json_to_tables(spark, data, task)
-    plan = normalize_filenames_plan(seen).collect()
+    plan = normalize_filenames_plan(seen).orderBy("_src_pos").collect()
 
     root = base_dir if base_dir is not None else (os.path.dirname(state_path) or ".")
 
@@ -101,24 +89,23 @@ def apply_normalize_filenames(
 
     renamed = skipped = already_ok = 0
     new_by_url: dict[str, str] = {}
+    claimed: set[str] = set()
     for row in plan:
         if row.action == "already_ok":
             already_ok += 1
             continue
-        if row.action == "conflict":
+        old_abs, new_abs = _abs(row.local_path), _abs(row.new_path)
+        if new_abs in claimed:
             print(f"Skipping rename for {row.url}: target {row.new_path} already claimed")
             skipped += 1
             continue
-        old_abs, new_abs = _abs(row.local_path), _abs(row.new_path)
         if os.path.exists(old_abs) and os.path.exists(new_abs) and old_abs != new_abs:
             print(f"Skipping rename for {row.url}: target {new_abs} already exists")
             skipped += 1
             continue
         if dry_run:
             renamed += 1
-            new_by_url[row.url] = row.new_path
-            continue
-        if os.path.exists(old_abs) and old_abs != new_abs:
+        elif os.path.exists(old_abs) and old_abs != new_abs:
             os.makedirs(os.path.dirname(new_abs) or ".", exist_ok=True)
             os.rename(old_abs, new_abs)
             renamed += 1
@@ -129,6 +116,7 @@ def apply_normalize_filenames(
             skipped += 1
             continue
         new_by_url[row.url] = row.new_path
+        claimed.add(new_abs)
 
     if not new_by_url:
         print("Filenames already normalized; no changes made.")

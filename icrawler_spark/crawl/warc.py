@@ -262,7 +262,7 @@ def read_warc(spark: SparkSession, path: str, opener=None) -> DataFrame:
                         rows["warc_ts"].append(headers.get("warc-date"))
                         rows["html"].append(body)
                         # 3xx Location → the engine's redirect_to column, so
-                        # a WARC corpus drives CrawlConfig.follow_redirects
+                        # a WARC corpus drives the engine's redirect following
                         rows["redirect_to"].append(_http_redirect(block))
                         nbytes += len(body)
                         if len(rows["url"]) >= _BATCH_RECORDS or nbytes >= _BATCH_BYTES:

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import shutil
 
+import numpy as np
 import pandas as pd
 import pytest
 
 from icrawler_spark.crawl import CrawlConfig, CrawlEngine, build_site, site_pages_df
+from icrawler_spark.crawl import bloom as bloom_mod
 from icrawler_spark.crawl.bloom import BloomFilter
 from icrawler_spark.crawl.reference_model import crawl_model
 
@@ -307,24 +309,57 @@ def test_distributed_seed_df_matches_list_seeding(spark, site, pages):
     assert by_df.seen_urls() == by_list.seen_urls()
 
 
+def _int64_keys(rng, n: int) -> np.ndarray:
+    return rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64, endpoint=True)
+
+
 def test_bloom_no_false_negatives():
+    rng = np.random.default_rng(11)
     bf = BloomFilter(capacity=10_000, fpp=0.01)
-    added = pd.Series([f"https://h{i % 7}.test/p/{i}.html" for i in range(5000)])
+    added = pd.Series(_int64_keys(rng, 5000))
     bf.add_many(added)
     assert bf.might_contain_many(added).all()
     # fp rate sane on disjoint probes
-    probes = pd.Series([f"https://other{i}.test/x/{i}" for i in range(5000)])
+    probes = pd.Series(np.setdiff1d(_int64_keys(rng, 5000), added))
     fpr = bf.might_contain_many(probes).mean()
     assert fpr < 0.05
 
 
 def test_bloom_roundtrip_and_merge():
+    keys = _int64_keys(np.random.default_rng(12), 3)
     a = BloomFilter(capacity=1000)
     b = BloomFilter(capacity=1000)
-    a.add_many(pd.Series(["u1", "u2"]))
-    b.add_many(pd.Series(["u3"]))
+    a.add_many(pd.Series(keys[:2]))
+    b.add_many(pd.Series(keys[2:]))
     merged = BloomFilter.from_bytes(a.to_bytes()).merge(b)
-    assert merged.might_contain_many(pd.Series(["u1", "u2", "u3"])).all()
+    assert merged.might_contain_many(pd.Series(keys)).all()
+
+
+def test_build_filter_matches_add_many(spark):
+    """The JVM build sets exactly the bits ``add_many`` sets (negative keys,
+    0 and the int64 edges included, empty partitions in the input), an empty
+    input gives an all-zero bitmap, and no Python worker runs."""
+    edges = np.array([0, 1, -1, 2**63 - 1, -(2**63), -(2**63) + 1, 2**32, -(2**32)], dtype=np.int64)
+    keys = np.concatenate([_int64_keys(np.random.default_rng(13), 3000), edges])
+    sc = spark.sparkContext
+    rows = sc.parallelize([(int(k),) for k in keys], 4).union(sc.parallelize([], 4))
+    df = spark.createDataFrame(rows, "k long")
+    assert 0 in df.rdd.glom().map(len).collect()
+
+    want = BloomFilter(capacity=5000)
+    want.add_many(keys)
+    assert bloom_mod.build_filter(df, "k", 5000).to_bytes() == want.to_bytes()
+
+    empty = bloom_mod.build_filter(spark.createDataFrame([], "k long"), "k", 5000)
+    assert empty.to_bytes() == BloomFilter(capacity=5000).to_bytes()
+    assert not empty.bits.any()
+
+    masks = bloom_mod._word_masks(df, "k", want)
+    masks.collect()
+    plan = masks._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
 
 
 def test_bloom_disabled_same_result(spark, site, pages):
@@ -627,8 +662,6 @@ def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_p
     import glob
     import os
 
-    from icrawler_spark.crawl import bloom as bloom_mod
-
     ckpt = str(tmp_path / "ckpt_sketch")
     full = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
     full.run()
@@ -636,7 +669,7 @@ def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_p
     CrawlEngine(
         spark, pages, CrawlConfig(start_url=START, max_rounds=1, checkpoint_dir=ckpt)
     ).run()
-    blobs = glob.glob(os.path.join(ckpt, "round=*", "seen_sketch_bloom_h64.bin"))
+    blobs = glob.glob(os.path.join(ckpt, "round=*", "seen_sketch_bloom_xxh64_km.bin"))
     assert blobs, "sketch blob not committed with the round"
 
     # resume must NOT rebuild: poison build_filter across resume_or_init only
@@ -659,6 +692,46 @@ def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_p
         pd.Series([start_key])
     ).all()
     monkeypatch.setattr(bloom_mod, "build_filter", real)
+    resumed.run()
+    assert resumed.crawl_order() == full.crawl_order()
+    assert resumed.seen_urls() == full.seen_urls()
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_old_format_sketch_blob_rebuilt_on_resume(spark, site, pages, tmp_path, monkeypatch):
+    """A blob left under the previous derivation's name
+    (``seen_sketch_bloom_h64.bin``) is never loaded: resume rebuilds the
+    filter from visited with exactly one build, and the crawl finishes as the
+    uninterrupted run does."""
+    import glob
+    import os
+
+    ckpt = str(tmp_path / "ckpt_old_sketch")
+    full = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
+    full.run()
+
+    CrawlEngine(
+        spark, pages, CrawlConfig(start_url=START, max_rounds=1, checkpoint_dir=ckpt)
+    ).run()
+    blobs = glob.glob(os.path.join(ckpt, "round=*", "seen_sketch_bloom_xxh64_km.bin"))
+    assert blobs
+    for b in blobs:
+        os.replace(b, os.path.join(os.path.dirname(b), "seen_sketch_bloom_h64.bin"))
+
+    calls = []
+    real = bloom_mod.build_filter
+
+    def _counting(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+
+    resumed = CrawlEngine(
+        spark, pages, CrawlConfig(start_url=START, max_rounds=20, checkpoint_dir=ckpt)
+    )
+    monkeypatch.setattr(bloom_mod, "build_filter", _counting)
+    resumed.resume_or_init()
+    monkeypatch.setattr(bloom_mod, "build_filter", real)
+    assert len(calls) == 1
     resumed.run()
     assert resumed.crawl_order() == full.crawl_order()
     assert resumed.seen_urls() == full.seen_urls()
@@ -754,12 +827,3 @@ def test_follow_redirects_chain_order_and_dedup(spark):
         f"{base}/parsed.html",  # BFS: discovered in round 0, before r2 (round 1)
         f"{base}/r2.html",      # chain resolved one hop per round, FIFO-faithful
     ]
-
-    # follow_redirects=False ignores the column entirely
-    off = CrawlEngine(
-        spark, pages,
-        CrawlConfig(start_url=f"{base}/seed.html", max_rounds=10, use_bloom=False,
-                    parse_entries=False, host_budget=1, follow_redirects=False),
-    )
-    off.run()
-    assert off.crawl_order() == [f"{base}/seed.html", f"{base}/parsed.html"]

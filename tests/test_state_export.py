@@ -227,3 +227,38 @@ def test_normalize_filenames_maintenance(spark, tmp_path):
     assert len(winners) == 1
     # missing file's record untouched
     assert docs["https://h.test/gone.pdf"]["local_path"] == "downloads/vanished.pdf"
+
+
+def test_normalize_filenames_missing_first_claimant_frees_target(spark, tmp_path):
+    """Renames run in discovery order like the reference's sequential walk:
+    when the first record wanting a target is skipped because its file is
+    missing, the second record wanting that target is renamed."""
+    import json
+
+    from icrawler_spark.crawl.maintenance import apply_normalize_filenames
+    from icrawler_spark.functions.pure import structured_filename
+
+    dl = tmp_path / "downloads"
+    dl.mkdir()
+    (dl / "old_b2.doc").write_bytes(b"b2")  # old_b1.doc is missing
+    state = {
+        "entries": [
+            {"title": "乙", "remark": "", "serial": 2, "documents": [
+                {"url": "https://h.test/b?x=1", "type": "doc",
+                 "downloaded": True, "local_path": "downloads/old_b1.doc"},
+                {"url": "https://h.test/b/?x=1", "type": "doc",
+                 "downloaded": True, "local_path": "downloads/old_b2.doc"},
+            ]},
+        ]
+    }
+    tgt = structured_filename("https://h.test/b?x=1", "doc")
+    assert tgt == structured_filename("https://h.test/b/?x=1", "doc")
+    sp = tmp_path / "state.json"
+    sp.write_text(json.dumps(state, ensure_ascii=False))
+
+    counters = apply_normalize_filenames(spark, str(sp))
+    assert counters == {"renamed": 1, "skipped": 1, "already_ok": 0}
+    assert (dl / tgt).read_bytes() == b"b2" and not (dl / "old_b2.doc").exists()
+    docs = {d["url"]: d for e in json.loads(sp.read_text())["entries"] for d in e["documents"]}
+    assert docs["https://h.test/b/?x=1"]["local_path"] == f"downloads/{tgt}"
+    assert docs["https://h.test/b?x=1"]["local_path"] == "downloads/old_b1.doc"
