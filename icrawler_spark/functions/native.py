@@ -141,13 +141,3 @@ def find_date_in_text(s: Column) -> Column:
     d1 = F.regexp_extract(s, _DATE_P1, 1)
     d2 = F.regexp_extract(s, _DATE_P2, 1)
     return F.when(d1 != "", d1).when(d2 != "", d2)
-
-
-# --- similarity --------------------------------------------------------------
-
-
-def token_jaccard(a: Column, b: Column) -> Column:
-    """Jaccard over token arrays. Ref policy_finder.py:1193-1199."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))

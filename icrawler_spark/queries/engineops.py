@@ -17,9 +17,9 @@ loop, the search scorer) through the driver's queries() harness:
 - ``search_topk`` is hash-gated by a DuckDB port of the additive fuzzy
   score (ref policy_finder.py:1201-1252): index-side derived columns are
   recomputed with the *pure-Python* twins (an independent implementation
-  of the native Column expressions the Spark path uses) and the score
+  of the native Column expressions the index build uses) and the score
   arithmetic runs as CASE/list SQL in the identical left-to-right addition
-  order, so the doubles must be bit-identical.
+  order, so the doubles must be bit-identical to the Python scorer's.
 """
 
 from __future__ import annotations
@@ -162,9 +162,10 @@ _SEARCH_TOPK = 3
 
 
 def search_topk(spark, sf_dir):
-    """Fuzzy top-k over a deterministic inline policy catalog — the scoring
-    expression end-to-end (ref policy_finder.py:1201-1252, 1366-1373)."""
-    from ..search import build_search_index, search
+    """Fuzzy top-k over a deterministic inline policy catalog with the
+    scorer the policy API serves from, end-to-end (ref policy_finder.py:
+    1201-1252, 1366-1373): build the index, collect it, score the rows."""
+    from ..search import build_search_index, prepare_rows, search
 
     entries = spark.createDataFrame(
         [r[:5] for r in _CATALOG],
@@ -174,8 +175,9 @@ def search_topk(spark, sf_dir):
         [(eid, url, dt, "d", 0) for eid, _t, _s, _ti, _r, url, dt in _CATALOG],
         "entry_id string, url string, doc_type string, title string, _src_pos long",
     )
-    idx = build_search_index(entries, documents)
-    return search(idx, _SEARCH_QUERY, topk=_SEARCH_TOPK).select("entry_id", "title", "score")
+    rows = prepare_rows(build_search_index(entries, documents).collect())
+    hits = search(rows, _SEARCH_QUERY, topk=_SEARCH_TOPK)
+    return spark.createDataFrame(hits, "entry_id string, title string, score double")
 
 
 def _search_topk_oracle_sql() -> str:
@@ -185,7 +187,7 @@ def _search_topk_oracle_sql() -> str:
     tokens) are recomputed here with the pure-Python twins — an independent
     implementation of the native Column expressions ``build_search_index``
     uses — and embedded as VALUES; query-side constants are folded in as
-    literals exactly as ``fuzzy_score_col`` folds them driver-side. Score
+    literals exactly as ``search.index.search`` computes them. Score
     terms are added in the identical left-to-right order so the resulting
     doubles are bit-identical across engines."""
     from ..functions import pure
@@ -238,7 +240,7 @@ def _search_topk_oracle_sql() -> str:
             f"{litlist(toks(title))})"
         )
 
-    # query-side constants: the same driver-side computation fuzzy_score_col does
+    # query-side constants: the same computation search.index.search does
     qn = pure.norm_text(_SEARCH_QUERY)
     q_doc = pure.extract_docno(qn)
     q_years = _re.findall(r"(19|20)\d{2}", qn)  # group-capture, like the ref

@@ -1,21 +1,22 @@
 """Search index + scoring (ref policy_finder.py).
 
-The reference scores every entry per query with a Python loop
-(policy_finder.py:1366-1373, O(N) scan). Here the index is a DataFrame
-projection built once (``Entry.build`` → derived columns,
-policy_finder.py:515-527) and a query becomes *pure column arithmetic* over
-it: the query-side constants (doc_no, years, doctype, agency, phrases,
-tokens) are extracted driver-side with the same pure functions and folded in
-as literals — a broadcast of the 1-row query side in relational terms.
-
-Scale: the index is a projection of entries ⋈ documents — cacheable,
-partition-prunable; top-k compiles to TakeOrderedAndProject (no global sort);
-keyword search does the reference's cheap-predicate-first two-phase plan
-(title hits short-circuit; only misses join the texts table —
+The index is a DataFrame projection built once (``Entry.build`` → derived
+columns, policy_finder.py:515-527): entries ⋈ documents, one row per entry,
+cacheable and partition-prunable. Scoring runs over the collected rows, as
+the reference's Python loop over its in-memory entries does
+(policy_finder.py:1366-1373): the catalog is ~10^3 rows, so a Spark job per
+query would cost more than the O(N) scan it runs. ``prepare_rows`` derives
+each row's scorer inputs once; ``search`` scores every row and keeps the
+top k; ``keyword_search`` is the reference's cheap-predicate-first
+two-phase rule (title hits short-circuit; only misses look at the texts —
 policy_finder.py:1488-1510, SURVEY §4).
 """
 
 from __future__ import annotations
+
+import heapq
+import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -90,82 +91,103 @@ def build_search_index(entries: DataFrame, documents: DataFrame) -> DataFrame:
     )
 
 
-def fuzzy_score_col(query: str):
-    """The additive score (ref fuzzy_score, policy_finder.py:1201-1252) as a
-    Column over the search-index schema. Query-side features computed
-    driver-side with the same pure functions the index columns use."""
+class SearchRow(NamedTuple):
+    """One index row's scorer inputs, derived once per catalog."""
+
+    entry_id: str
+    title: str | None
+    norm_title: str
+    doc_no: str | None
+    flat_doc: str  # doc_no without brackets, "" for NULL
+    year: str
+    doctype: str | None
+    agency: str  # "" for NULL
+    tokens: frozenset
+    is_pdf: bool  # best_path ends in .pdf (NULL: False)
+
+
+class Hit(NamedTuple):
+    entry_id: str
+    title: str | None
+    score: float
+
+
+class KeywordHit(NamedTuple):
+    entry_id: str
+    title: str | None
+    title_exact: int
+    title_hits: int
+    content_hits: int
+
+
+def prepare_rows(rows) -> list[SearchRow]:
+    """Collected ``build_search_index`` rows → scorer inputs. The token set,
+    the bracket-free doc_no and the pdf flag are computed here once, not
+    per query."""
+    return [
+        SearchRow(
+            r.entry_id, r.title, r.norm_title, r.doc_no,
+            (r.doc_no or "").replace("[", "").replace("]", ""),
+            r.year, r.doctype, r.agency or "", frozenset(r.tokens),
+            (r.best_path or "").lower().endswith(".pdf"),
+        )
+        for r in rows
+    ]
+
+
+def search(rows: list[SearchRow], query: str, topk: int = 10) -> list[Hit]:
+    """score-all → top-k (ref policy_finder.py:1366-1373): the additive
+    score (ref fuzzy_score, policy_finder.py:1201-1252) of every row, best
+    ``topk`` by score desc, then entry_id.
+
+    Query-side features come from the same pure functions the index columns
+    use. A NULL index field fails its term (scores 0), as in SQL, and the
+    terms are summed in one fixed left-to-right order, so the doubles equal
+    the DuckDB oracle's (``queries/engineops.py``) bit for bit."""
     qn = pure.norm_text(query)
     q_doc = pure.extract_docno(qn)
+    flat = q_doc.replace("[", "").replace("]", "") if q_doc else ""
     # group-capture findall, like the reference (policy_finder.py:1214):
     # query years are century prefixes too
-    q_years = [m for m in __import__("re").findall(r"(19|20)\d{2}", qn)]
+    q_years = set(re.findall(r"(19|20)\d{2}", qn))
     q_doctype = pure.guess_doctype(qn)
     q_agency = pure.guess_agency(qn)
-    import re as _re
+    phrases = [(ph, min(8.0, 2.0 + len(ph) * 0.8)) for ph in re.findall(r"[一-鿿]{2,}", qn)]
+    q_tokens = frozenset(pure.tokenize_zh(qn))
 
-    phrases = [p for p in _re.findall(r"[一-鿿]{2,}", qn)]
-    q_tokens = pure.tokenize_zh(qn)
-
-    score = F.lit(0.0)
-    # 1) doc number hard match
-    if q_doc:
-        flat = q_doc.replace("[", "").replace("]", "")
-        flat_doc = F.translate(F.coalesce(F.col("doc_no"), F.lit("")), "[]", "")
-        score = score + (
-            F.when(F.col("doc_no") == q_doc, 120.0)
-            .when(flat_doc.contains(flat), 80.0)
-            .otherwise(0.0)
-        )
-    # 2) year hint
-    if q_years:
-        score = score + (
-            F.when(F.col("year").isin(*q_years), 30.0)
-            .when(F.col("year") != "", -5.0)
-            .otherwise(0.0)
-        )
-    # 3) doctype hint
-    if q_doctype:
-        score = score + F.when(F.col("doctype") == q_doctype, 15.0).otherwise(0.0)
-    # 4) agency hint (substring containment either way)
-    if q_agency:
-        ag = F.coalesce(F.col("agency"), F.lit(""))
-        score = score + F.when(
-            (ag != "") & (ag.contains(q_agency) | F.lit(q_agency).contains(ag)), 10.0
-        ).otherwise(0.0)
-    # 5) CJK phrase presence in title
-    for ph in phrases:
-        score = score + F.when(
-            F.col("norm_title").contains(ph), min(8.0, 2.0 + len(ph) * 0.8)
-        ).otherwise(0.0)
-    # 6) token Jaccard × 40
-    if q_tokens:
-        qarr = F.array(*[F.lit(t) for t in dict.fromkeys(q_tokens)])
-        score = score + 40.0 * native.token_jaccard(F.array_distinct(F.col("tokens")), qarr)
-    # 7) exact substring boosts
-    score = score + F.when(
-        F.col("doc_no").isNotNull() & F.lit(qn).contains(F.col("doc_no")), 30.0
-    ).otherwise(0.0)
-    score = score + F.when(
-        F.col("doctype").isNotNull()
-        & F.lit(qn).contains(F.col("doctype"))
-        & F.col("title").contains(F.col("doctype")),
-        10.0,
-    ).otherwise(0.0)
-    # 8) pdf best_path preference
-    score = score + F.when(
-        F.lower(F.coalesce(F.col("best_path"), F.lit(""))).endswith(".pdf"), 3.0
-    ).otherwise(0.0)
-    return score
-
-
-def search(index: DataFrame, query: str, topk: int = 10) -> DataFrame:
-    """score-all → top-k (ref policy_finder.py:1366-1373) as
-    TakeOrderedAndProject."""
-    return (
-        index.withColumn("score", fuzzy_score_col(query))
-        .orderBy(F.desc("score"), F.asc("entry_id"))
-        .limit(topk)
-    )
+    scored = []
+    for i, r in enumerate(rows):
+        s = 0.0
+        # 1) doc number hard match
+        if q_doc:
+            s = s + (120.0 if r.doc_no == q_doc else 80.0 if flat in r.flat_doc else 0.0)
+        # 2) year hint
+        if q_years:
+            s = s + (30.0 if r.year in q_years else -5.0 if r.year != "" else 0.0)
+        # 3) doctype hint
+        if q_doctype:
+            s = s + (15.0 if r.doctype == q_doctype else 0.0)
+        # 4) agency hint (substring containment either way)
+        if q_agency:
+            ag = r.agency
+            s = s + (10.0 if ag != "" and (q_agency in ag or ag in q_agency) else 0.0)
+        # 5) CJK phrase presence in title
+        for ph, w in phrases:
+            s = s + (w if ph in r.norm_title else 0.0)
+        # 6) token Jaccard × 40
+        if q_tokens:
+            s = s + 40.0 * (len(r.tokens & q_tokens) / len(r.tokens | q_tokens))
+        # 7) exact substring boosts
+        s = s + (30.0 if r.doc_no is not None and r.doc_no in qn else 0.0)
+        dt = r.doctype
+        s = s + (10.0 if dt is not None and dt in qn and dt in (r.title or "") else 0.0)
+        # 8) pdf best_path preference
+        s = s + (3.0 if r.is_pdf else 0.0)
+        scored.append((-s, r.entry_id, i))
+    return [
+        Hit(rows[i].entry_id, rows[i].title, -neg)
+        for neg, _eid, i in heapq.nsmallest(topk, scored)
+    ]
 
 
 def dedupe_search_index(index: DataFrame) -> DataFrame:
@@ -203,54 +225,37 @@ def dedupe_search_index(index: DataFrame) -> DataFrame:
     return out.drop("_identity", "_rank", "_rn1", "_rn2", "_path_key")
 
 
-def keyword_search(index: DataFrame, texts: DataFrame | None, query: str) -> DataFrame:
+def keyword_search(rows: list[SearchRow], texts: dict, query: str) -> list[KeywordHit]:
     """Two-phase keyword search (ref policy_finder.py:1473-1516): title
-    hits computed cheaply for all entries; only title-miss entries join the
-    ``texts`` table for content hits (cheap-predicate-first, SURVEY §4)."""
+    hits are counted for every row; only title misses look up their
+    ``texts`` (entry_id → text) for content hits (cheap-predicate-first,
+    SURVEY §4).
+
+    Ordered by title_exact, title_hits, content_hits (desc), then title
+    (NULL first) and entry_id: a total order, so slices of the result never
+    overlap or skip, whatever the partition layout the index came from."""
     qn = pure.norm_text(query)
+    if not qn:
+        return []
     tokens = list(dict.fromkeys(pure.tokenize_zh(qn)))
-    if not qn and not tokens:
-        return index.limit(0).select(
-            "entry_id", "title",
-            F.lit(0).alias("title_exact"), F.lit(0).alias("title_hits"),
-            F.lit(0).alias("content_hits"),
-        )
-    tok_arr = F.array(*[F.lit(t) for t in tokens]) if tokens else F.array().cast("array<string>")
-    title_exact = (
-        F.when(F.lit(qn != "") & F.col("norm_title").contains(qn), 1).otherwise(0)
-        if qn
-        else F.lit(0)
-    )
-    title_hits = F.size(F.filter(tok_arr, lambda t: F.col("norm_title").contains(t)))
-    base = index.select(
-        "entry_id", "title", "norm_title",
-        title_exact.alias("title_exact"), title_hits.alias("title_hits"),
-    )
-    hits = base.where((F.col("title_exact") == 1) | (F.col("title_hits") > 0)).withColumn(
-        "content_hits",
-        F.when(F.lit(len(tokens) > 0), F.col("title_hits"))
-        .otherwise(F.col("title_exact")),
-    )
-    misses = base.where((F.col("title_exact") == 0) & (F.col("title_hits") == 0))
-    if texts is not None:
-        joined = misses.join(texts.select("entry_id", "text"), "entry_id", "left")
-        content_hits = (
-            F.when(
-                F.lit(len(tokens) > 0),
-                F.size(F.filter(tok_arr, lambda t: F.coalesce(F.col("text"), F.lit("")).contains(t))),
-            )
-            .otherwise(
-                F.when(F.coalesce(F.col("text"), F.lit("")).contains(qn), 1).otherwise(0)
-            )
-        )
-        misses = joined.withColumn("content_hits", content_hits).drop("text")
-    else:
-        misses = misses.withColumn("content_hits", F.lit(0))
-    out = hits.unionByName(misses).where(
-        (F.col("title_exact") == 1) | (F.col("title_hits") > 0) | (F.col("content_hits") > 0)
-    )
-    return out.select(
-        "entry_id", "title", "title_exact", "title_hits", "content_hits"
-    ).orderBy(
-        F.desc("title_exact"), F.desc("title_hits"), F.desc("content_hits"), F.asc("title")
-    )
+    out = []
+    for r in rows:
+        exact = 1 if qn in r.norm_title else 0
+        hits = sum(1 for t in tokens if t in r.norm_title)
+        if exact or hits:
+            content = hits if tokens else exact
+        else:
+            text = texts.get(r.entry_id) or ""
+            content = sum(1 for t in tokens if t in text) if tokens else int(qn in text)
+        if exact or hits or content:
+            out.append(KeywordHit(r.entry_id, r.title, exact, hits, content))
+    out.sort(key=lambda h: (
+        -h.title_exact, -h.title_hits, -h.content_hits, nulls_first(h.title), h.entry_id,
+    ))
+    return out
+
+
+def nulls_first(value):
+    """Sort key for a nullable string: NULL first, like Spark's ascending
+    sort; Python ``str`` order is Spark's UTF-8 byte order."""
+    return value is not None, value or ""

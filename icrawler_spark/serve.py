@@ -11,10 +11,9 @@ Scale: like the reference's ``PolicyFinder`` (a list of entries plus dict
 indexes, loaded once at boot), ``PolicyService`` collects the cached index,
 the documents and the texts to the driver once, when it is constructed —
 the catalog is ~10^3 rows. Per-entry lookups, document lists, texts and
-catalog pages are then dict probes and list slices that start no Spark job.
-Only scoring stays in the DataFrame layer: ``search`` compiles to
-TakeOrderedAndProject and ``keyword_search`` to the cheap-predicate-first
-two-phase plan (search/index.py), both over the cached index.
+catalog pages are then dict probes and list slices, and ``search`` and
+``keyword_search`` score the collected rows in Python (search/index.py):
+no request starts a Spark job.
 """
 
 from __future__ import annotations
@@ -24,8 +23,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from .functions import pure
-from .search import build_search_index, keyword_search, search
+from .search import build_search_index, keyword_search, prepare_rows, search
 from .search.clause import ClauseReference, _article_slice, _item_slice_text, _normalize_line, _paragraph_slice, parse_clause_reference
+from .search.index import nulls_first
 from .search.outline import build_outline
 
 _ENTRY_FIELDS = (
@@ -93,12 +93,6 @@ def _entry_payload(row, include_documents: bool, documents: dict | None) -> dict
     if include_documents:
         payload["documents"] = [dict(d) for d in (documents or {}).get(row.entry_id, [])]
     return payload
-
-
-def _nulls_first(value):
-    """Sort key for a nullable string: NULL first, like Spark's ascending
-    sort; Python ``str`` order is Spark's UTF-8 byte order."""
-    return value is not None, value or ""
 
 
 def _compose_text(lines) -> str:
@@ -180,8 +174,8 @@ class PolicyService:
 
     Construction collects all three once and builds the reference's dict
     indexes (by entry_id, serial and normalized title) plus the catalog in
-    display order; every lookup answers from them without a Spark job.
-    ``search`` and ``keyword_search`` still score over ``index``.
+    display order, and prepares each row's scorer inputs; every route
+    answers from them without a Spark job.
     """
 
     index: DataFrame
@@ -189,8 +183,9 @@ class PolicyService:
     texts: DataFrame | None = None
 
     def __post_init__(self) -> None:
-        rows = sorted(self.index.collect(), key=lambda r: _nulls_first(r.entry_id))
+        rows = sorted(self.index.collect(), key=lambda r: nulls_first(r.entry_id))
         self._by_id = {r.entry_id: r for r in rows}
+        self._search_rows = prepare_rows(rows)
         # serials are unique only per task, titles not at all: the lowest
         # entry_id wins either lookup
         self._by_serial: dict = {}
@@ -200,7 +195,7 @@ class PolicyService:
             self._by_title.setdefault(r.norm_title, r)
         # display order: (norm_title, else title; entry_id)
         self._catalog = sorted(
-            rows, key=lambda r: (_nulls_first(r.norm_title or r.title), _nulls_first(r.entry_id))
+            rows, key=lambda r: (nulls_first(r.norm_title or r.title), nulls_first(r.entry_id))
         )
         self._documents: dict = {}
         if self.documents is not None:
@@ -246,11 +241,11 @@ class PolicyService:
                        include_documents: bool = True) -> dict:
         """GET/POST /search (ref api_server.py:195-218)."""
         clause_ref = parse_clause_reference(query)
-        rows = search(self.index, query, topk=topk).collect()
         results = []
-        for r in rows:
+        for hit in search(self._search_rows, query, topk=topk):
+            r = self._by_id[hit.entry_id]
             payload = _entry_payload(r, include_documents, self._documents)
-            payload["score"] = r.score
+            payload["score"] = hit.score
             if clause_ref is not None:
                 payload["clause"] = extract_clause_result(
                     self.get_entry_text(r), clause_ref, source=r.best_path
@@ -274,12 +269,11 @@ class PolicyService:
 
         Without ``offset``/``max_entries`` the route returns every match —
         the reference's contract. With them, both branches return the same
-        slice ``[offset, offset + max_entries)`` of their ordered list. The
-        catalog's display key (title, entry_id) is a total order, so pages
-        never overlap or skip."""
+        slice ``[offset, offset + max_entries)`` of their ordered list. Both
+        orders end on entry_id, so pages never overlap or skip."""
         if query:
-            rows = keyword_search(self.index, self.texts, query).collect()
-            entries = [self._by_id[r.entry_id] for r in rows if r.entry_id in self._by_id]
+            hits = keyword_search(self._search_rows, self._texts, query)
+            entries = [self._by_id[h.entry_id] for h in hits]
         else:
             entries = self._catalog
         stop = None if max_entries is None else offset + max_entries

@@ -166,3 +166,55 @@ def test_concurrent_requests(server):
     with concurrent.futures.ThreadPoolExecutor(max_workers=6) as ex:
         results = list(ex.map(lambda p: _get(server, p)[0], paths))
     assert results == [200] * len(paths)
+
+
+def test_null_fields_and_missing_documents(spark):
+    """An entry with NULL title and remark and an entry with no documents
+    (NULL best_path): every payload returns, NULL fields fail their score
+    terms, and the HTTP routes answer 200 with the server still up."""
+    from icrawler_spark.serve import PolicyService
+
+    entries = spark.createDataFrame(
+        [
+            ("n1", "t", 1, None, None),
+            ("n2", "t", 2, "支付业务管理通知", ""),
+            ("n3", "t", 3, "支付业务管理通知", ""),
+        ],
+        "entry_id string, task string, serial int, title string, remark string",
+    )
+    documents = spark.createDataFrame(
+        [("n1", "http://x/1.pdf", "pdf", None, 0), ("n2", "http://x/2.html", "html", "d", 1)],
+        "entry_id string, url string, doc_type string, title string, _src_pos long",
+    )
+    texts = spark.createDataFrame([("n1", "正文提到支付业务")], "entry_id string, text string")
+    svc = PolicyService.from_state(entries, documents, texts)
+    try:
+        found = svc.search_payload("支付业务管理通知", topk=3)
+        scores = {r["id"]: r["score"] for r in found["results"]}
+        assert found["result_count"] == 3
+        # NULL best_path scores like a non-pdf path; the NULL title scores
+        # only its pdf term (doctype, phrases, tokens and title boost are 0)
+        assert scores[3] == scores[2] > 0.0
+        assert scores[1] == 0.0 + 3.0
+        assert next(r for r in found["results"] if r["id"] == 3)["documents"] == []
+        keyword = svc.policies_payload("支付业务")
+        assert [p["id"] for p in keyword["policies"]] == [2, 3, 1]  # title hits first
+        assert [p["id"] for p in svc.policies_payload()["policies"]] == [1, 2, 3]
+        assert svc.policies_payload(max_entries=1, offset=1)["policies"][0]["id"] == 2
+
+        srv = PolicyHTTPServer(svc)
+        host, port = srv.start()
+        base = f"http://{host}:{port}"
+        try:
+            status, body = _get(base, f"/search?query={_q('支付业务管理通知')}&topk=3")
+            assert status == 200
+            assert body == json.loads(json.dumps(found, ensure_ascii=False))
+            assert _get(base, f"/policies?query={_q('支付业务')}") == (
+                200, json.loads(json.dumps(keyword, ensure_ascii=False)))
+            assert _get(base, "/policies?limit=2&offset=1")[0] == 200
+            assert _get(base, "/policies/1?include=all")[0] == 200
+            assert _get(base, "/health") == (200, {"status": "ok"})
+        finally:
+            srv.stop()
+    finally:
+        svc.index.unpersist()

@@ -37,7 +37,7 @@ install_reference_stubs()
 from pbc_regulations.icrawler.state import PBCState  # noqa: E402
 from pbc_regulations.searcher import policy_finder as ref_pf  # noqa: E402
 
-from icrawler_spark.search import build_search_index, search  # noqa: E402
+from icrawler_spark.search import build_search_index, prepare_rows, search  # noqa: E402
 
 TASK = "t"
 
@@ -348,9 +348,9 @@ def test_fuzzy_score_matches_reference(spark, query):
         [(str(eid), url, dtype, "d", 0) for eid, _ti, _r, url, dtype in _CATALOG],
         "entry_id string, url string, doc_type string, title string, _src_pos long",
     )
-    idx = build_search_index(entries, documents)
+    rows = prepare_rows(build_search_index(entries, documents).collect())
     got = {
         int(r.entry_id): r.score
-        for r in search(idx, query, topk=len(_CATALOG)).collect()
+        for r in search(rows, query, topk=len(_CATALOG))
     }
     assert got == want, f"query={query}: {got} vs {want}"

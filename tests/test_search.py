@@ -13,8 +13,12 @@ from icrawler_spark.search import (
     extract_clause_text,
     keyword_search,
     parse_clause_reference,
+    prepare_rows,
     search,
 )
+from icrawler_spark.search.index import SearchRow
+from perfbench import gen
+from perfbench.oracles import SearchOracle
 
 
 @pytest.fixture(scope="module")
@@ -41,6 +45,11 @@ def index(spark):
     return build_search_index(entries, documents).cache()
 
 
+@pytest.fixture(scope="module")
+def rows(index):
+    return prepare_rows(index.collect())
+
+
 def test_index_derived_columns(index):
     rows = {r.entry_id: r for r in index.collect()}
     assert rows["e1"].doc_no == "银发[2023]12号"
@@ -55,14 +64,14 @@ def test_index_derived_columns(index):
     assert rows["e2"].doc_no == "公告[2021]第3号"
 
 
-def test_fuzzy_search_docno_exact_wins(index):
-    top = search(index, "银发〔2023〕12号", topk=2).collect()
+def test_fuzzy_search_docno_exact_wins(rows):
+    top = search(rows, "银发〔2023〕12号", topk=2)
     assert top[0].entry_id in ("e1", "e4")
     assert top[0].score >= 120.0
 
 
-def test_fuzzy_search_year_and_doctype(index):
-    top = search(index, "2021年存款利率管理办法", topk=1).collect()
+def test_fuzzy_search_year_and_doctype(rows):
+    top = search(rows, "2021年存款利率管理办法", topk=1)
     assert top[0].entry_id == "e2"
 
 
@@ -74,18 +83,48 @@ def test_dedupe_keeps_best_per_docno(index):
     assert "e2" in ids and "e3" in ids
 
 
-def test_keyword_search_title_shortcircuit(spark, index):
+def test_keyword_search_title_shortcircuit(rows):
     # content must contain the contiguous CJK run — tokenize_zh yields whole
     # CJK runs, and containment is substring (matches reference semantics)
-    texts = spark.createDataFrame(
-        [("e3", "这里提到存款利率管理问题")],
-        "entry_id string, text string",
-    )
-    res = keyword_search(index, texts, "存款利率").collect()
+    texts = {"e3": "这里提到存款利率管理问题"}
+    res = keyword_search(rows, texts, "存款利率")
     by_id = {r.entry_id: r for r in res}
     assert by_id["e2"].title_hits > 0           # title hit, no content join
     assert by_id["e3"].content_hits > 0          # miss → content join
     assert res[0].entry_id == "e2"               # title hits rank first
+
+
+def test_search_topk_matches_independent_oracle(spark):
+    """The served scorer against perfbench's independent re-scoring on a
+    generated catalog: same top-5 serials, bit-identical scores."""
+    seed = 11
+    entries, documents, _texts = gen.policy_catalog(seed, 200)
+    idx = build_search_index(
+        spark.createDataFrame(
+            entries, "entry_id string, task string, serial int, title string, remark string"),
+        spark.createDataFrame(
+            documents, "entry_id string, url string, doc_type string, title string, _src_pos long"),
+    )
+    collected = idx.collect()
+    serial = {r.entry_id: r.serial for r in collected}
+    rows = prepare_rows(collected)
+    oracle = SearchOracle(entries, documents)
+    for query in gen.search_queries(seed, 40):
+        got = [[serial[h.entry_id], h.score] for h in search(rows, query, topk=5)]
+        assert got == oracle.topk(query, 5), query
+
+
+def test_scorer_null_fields_score_zero():
+    """A NULL title or best_path fails its term, as SQL NULL logic did: the
+    doctype-in-title and pdf terms add 0 while the doctype hint still
+    counts."""
+    base = SearchRow("n1", "通知", "通知", None, "", "", "通知", "", frozenset(), True)
+    with_null = base._replace(entry_id="n2", title=None, is_pdf=False)
+    by_id = {h.entry_id: h.score for h in search([base, with_null], "通知", topk=2)}
+    # doctype hint and phrase (通知 is a stopword: no token term), then the
+    # doctype-in-title boost and the pdf term
+    assert by_id["n2"] == 0.0 + 15.0 + min(8.0, 2.0 + 2 * 0.8)
+    assert by_id["n1"] == by_id["n2"] + 10.0 + 3.0
 
 
 # --- clause extraction (ref tests/test_clause_extraction.py) ------------------

@@ -12,7 +12,6 @@ import pytest
 from icrawler_spark.config import load_tasks
 from icrawler_spark.crawl import build_site, site_pages_df
 from icrawler_spark.runner import build_tasks, parse_args, preview_action, resolve_setting, run_task
-from icrawler_spark.search import search
 from icrawler_spark.serve import PolicyService
 
 _TEXT = (
@@ -189,8 +188,9 @@ def _spark_jobs(spark, fn) -> int:
 
 
 def test_lookups_start_no_spark_jobs(spark, service):
-    """Outline, clause, id/title lookups and catalog pages answer from the
-    construction-time snapshot; /search runs only its scoring query."""
+    """Every route answers from the construction-time snapshot: outline,
+    clause, id/title lookups, catalog pages, /search (with and without a
+    clause reference) and keyword /policies start no Spark job."""
     title = "中国人民银行关于加强银行卡收单业务外包管理的通知"
     assert _spark_jobs(spark, lambda: service.policy_payload("4", include=["outline"])) == 0
     assert _spark_jobs(spark, lambda: service.clause_payload("4", "第三条第二款")) == 0
@@ -198,9 +198,42 @@ def test_lookups_start_no_spark_jobs(spark, service):
     assert _spark_jobs(spark, lambda: service.find_entry(4)) == 0
     assert _spark_jobs(spark, lambda: service.find_entry(title)) == 0
     assert _spark_jobs(spark, lambda: service.policies_payload(max_entries=2, offset=1)) == 0
-    scoring = _spark_jobs(spark, lambda: search(service.index, "人民银行公告", topk=2).collect())
-    assert scoring >= 1
-    assert _spark_jobs(spark, lambda: service.search_payload("人民银行公告", topk=2)) <= scoring
+    assert _spark_jobs(spark, lambda: service.search_payload("人民银行公告", topk=2)) == 0
+    clause_query = "银行卡收单业务外包管理 第三条第一款（一）项"
+    assert _spark_jobs(spark, lambda: service.search_payload(clause_query, topk=1)) == 0
+    assert _spark_jobs(spark, lambda: service.policies_payload("人民银行")) == 0
+    assert _spark_jobs(spark, lambda: service.policies_payload("外包管理", max_entries=1)) == 0
+
+
+def test_keyword_pages_total_order_over_duplicate_titles(spark):
+    """Keyword matches that tie on every score and share a title break the
+    tie on entry_id: the order is the same whatever partition layout the
+    catalog came from, and pages are disjoint and complete."""
+    titles = ["支付业务管理通知", "支付结算规定", "支付机构办法"]
+    rows = [
+        (f"e{i:02d}", "t", i, titles[i % len(titles)], "") for i in range(12)
+    ]
+    documents = spark.createDataFrame(
+        [("e00", "http://x/0.html", "html", "d", 0)],
+        "entry_id string, url string, doc_type string, title string, _src_pos long",
+    )
+    orders = []
+    for inputs, parts in ((rows, 1), (rows[::-1], 3), (rows[5:] + rows[:5], 4)):
+        entries = spark.createDataFrame(
+            inputs, "entry_id string, task string, serial int, title string, remark string",
+        ).repartition(parts)
+        svc = PolicyService.from_state(entries, documents, None)
+        full = [p["id"] for p in svc.policies_payload("支付")["policies"]]
+        paged = []
+        for offset in range(0, 14, 5):
+            paged += [p["id"] for p in svc.policies_payload("支付", max_entries=5, offset=offset)["policies"]]
+        assert paged == full
+        assert sorted(full) == list(range(12))  # disjoint and complete
+        orders.append(full)
+        svc.index.unpersist()
+    assert orders[0] == orders[1] == orders[2]
+    # ties on title break on entry_id (serial order here)
+    assert orders[0] == sorted(range(12), key=lambda i: (titles[i % 3], i))
 
 
 def test_policy_meta_text_outline(service):
