@@ -10,7 +10,8 @@ The headline metric follows BASELINE.json: URLs fetched+deduped per second on
 a synthetic Common-Crawl-style frontier (the pure frontier loop: politeness
 rank → fetch join → pagination-parse UDF → dedup → bloom+anti-join), plus
 per-query wall times for the analytic operator suite. Scaling evidence
-(local[8] vs local[32]) lives in bench/frontier_bench.py + BENCH/BASELINE.md.
+from earlier rounds (local[8] vs local[32]) is kept in BENCH/BASELINE.md;
+current measurements come from perfbench/.
 """
 
 from __future__ import annotations

@@ -59,7 +59,7 @@ from .state import SnapshotStore, merge_documents, merge_entries, merge_seen, re
 @dataclass
 class CrawlConfig:
     start_url: str | None = None
-    seed_urls: list[str] | None = None  # wide-frontier seeding (bench/recrawl)
+    seed_urls: list[str] | None = None  # wide-frontier seeding (recrawl lists)
     task: str = "task"
     dialect: str = "default"
     max_rounds: int = 1000
@@ -75,17 +75,6 @@ class CrawlConfig:
                                        # engine's `images` table
     allowed_types: list[str] | None = None  # download-type filter (ref 588-590)
     checkpoint_dir: str | None = None  # None → in-memory (localCheckpoint)
-    max_depth: int | None = None       # drop links deeper than this many hops
-                                       # from a seed (seeds are depth 0);
-                                       # pruned BEFORE the link pin so
-                                       # out-of-scope links never shuffle
-    compact_visited_every: int = 16    # coalesce visited deltas every K rounds
-    dedup_near_dups: bool = False      # dedup-before-store: each round's
-                                       # fetched pages probe a crawl-lifetime
-                                       # SimHash index (Hamming ≤ 6, exact
-                                       # pigeonhole recall); near-dups of a
-                                       # PRIOR round are not parsed — their
-                                       # links never enter the frontier
 
     def seeds(self) -> list[str]:
         if self.seed_urls:
@@ -111,13 +100,12 @@ class RoundMetrics:
     wall_s: float
     files_downloaded: int = 0
     files_reused: int = 0
-    near_dups_skipped: int = 0
 
     def as_tuple(self):
         return (
             self.round, self.pages_fetched, self.pages_missing, self.links_discovered,
             self.links_new, self.entries_seen, self.documents_seen, float(self.wall_s),
-            self.files_downloaded, self.files_reused, self.near_dups_skipped,
+            self.files_downloaded, self.files_reused,
         )
 
 
@@ -153,7 +141,7 @@ def _obs_long(obs: Observation, key: str, fallback) -> int:
 _METRICS_SCHEMA = (
     "round int, pages_fetched long, pages_missing long, links_discovered long, "
     "links_new long, entries_seen long, documents_seen long, wall_s double, "
-    "files_downloaded long, files_reused long, near_dups_skipped long"
+    "files_downloaded long, files_reused long"
 )
 
 
@@ -239,8 +227,6 @@ class CrawlEngine:
         self._force_compact = False  # set by invalidate_urls: persist the
                                      # shrunken visited with the next commit
         self._initialized = False    # resume_or_init runs once per engine
-        self._simhash_index: DataFrame | None = None  # (url, simhash) of all
-                                                      # stored (non-dup) pages
         self._corpus_urls: DataFrame | None = None  # pinned distinct corpus
                                                     # urls (collect_images)
         self._pos_span = None  # id-space consumed by a sparse big round
@@ -268,18 +254,14 @@ class CrawlEngine:
                 F.lit(c.task).alias("task"),
                 F.col("url"),
                 _netloc_col(F.col("url")).alias("netloc"),
-                F.lit(0).alias("depth"),
                 F.lit(0).alias("discovered_round"),
                 F.col("pos").cast("long").alias("discovery_pos"),
             )
-        rows = [
-            (c.task, u, _netloc_py(u), 0, 0, i)
-            for i, u in enumerate(c.seeds())
-        ]
+        rows = [(c.task, u, _netloc_py(u), 0, i) for i, u in enumerate(c.seeds())]
         return self.spark.createDataFrame(
             rows,
-            "task string, url string, netloc string, depth int, "
-            "discovered_round int, discovery_pos bigint",
+            "task string, url string, netloc string, discovered_round int, "
+            "discovery_pos bigint",
         )
 
     def _union_visited(self) -> DataFrame | None:
@@ -291,14 +273,14 @@ class CrawlEngine:
         return out
 
     def _maybe_compact_visited(self, rnd: int) -> None:
-        """Cap the visited-union fan-in: every K rounds, coalesce the
-        per-round deltas into one pinned snapshot, so the seen-set anti-join
-        reads one table instead of a crawl-age-deep union — a 1000-round
-        crawl would otherwise pay a linearly growing plan every round. In
+        """Cap the visited-union fan-in: every ``_COMPACT_VISITED_EVERY``
+        rounds, coalesce the per-round deltas into one pinned snapshot, so
+        the seen-set anti-join reads one table instead of a crawl-age-deep
+        union — a 1000-round crawl would otherwise pay a linearly growing
+        plan every round. In
         checkpoint mode the snapshot lands as ``visited_full`` inside the
         round dir (before the commit marker) and resume prefers it."""
-        k = self.cfg.compact_visited_every
-        if not self._force_compact and (k <= 0 or len(self._visited_parts) < k):
+        if not self._force_compact and len(self._visited_parts) < self._COMPACT_VISITED_EVERY:
             return
         self._force_compact = False
         merged = self._union_visited()
@@ -379,7 +361,10 @@ class CrawlEngine:
                 ]
                 self._visited_parts = parts
                 self.visited = self._union_visited()
-                self.pending = self.store.read(last, "pending")
+                # older checkpoints carry a `depth` column the frontier no
+                # longer has; drop it so pending's columns match the
+                # new_frontier / requeue rows unioned into it
+                self.pending = self.store.read(last, "pending").drop("depth")
                 self.seen = self.store.read(last, "seen") if self.store.has_table(last, "seen") else None
                 self.entries = self.store.read(last, "entries") if self.store.has_table(last, "entries") else None
                 self.documents = (
@@ -387,11 +372,6 @@ class CrawlEngine:
                 )
                 self.images = (
                     self.store.read(last, "images") if self.store.has_table(last, "images") else None
-                )
-                self._simhash_index = (
-                    self.store.read(last, "simhash_index")
-                    if self.store.has_table(last, "simhash_index")
-                    else None
                 )
                 row = self.pending.agg(F.max("discovery_pos").alias("m")).collect()[0]
                 vmax = self.visited.agg(F.max("global_pos").alias("m")).collect()[0]
@@ -435,6 +415,8 @@ class CrawlEngine:
     # rounds with more candidate links than this assign positions with the
     # distributed (shuffle-free) path instead of one global window
     _BIG_ROUND_THRESHOLD = 50_000
+    # coalesce the per-round visited deltas into one snapshot every K rounds
+    _COMPACT_VISITED_EVERY = 16
     # fetch-join batches up to this many URLs are broadcast; larger ones
     # take a shuffle-hash join with the batch as build side
     _BROADCAST_BATCH_THRESHOLD = 1_000_000
@@ -659,9 +641,7 @@ class CrawlEngine:
             batch_side = F.broadcast(batch)
         else:
             batch_side = batch.hint("shuffle_hash")
-        fetch_cols = ["task", "url", "html", "depth", "discovered_round", "discovery_pos"]
-        if cfg.dedup_near_dups and "text" in self.pages.columns:
-            fetch_cols.append("text")
+        fetch_cols = ["task", "url", "html", "discovered_round", "discovery_pos"]
         # a `redirect_to` column (3xx Location) on the pages table turns on
         # redirect following — see the link stream below
         follow_redirects = "redirect_to" in self.pages.columns
@@ -674,12 +654,12 @@ class CrawlEngine:
         # that is bandwidth-bound, not CPU-bound, so it does NOT shrink with
         # more cores (measured flat 90.6 s → 84.2 s from 4 to 16 cores on a
         # 320k-page round). The rule: cache the payload IFF html has two or
-        # more consumers. With the entries parse off and near-dup dedup off,
-        # html is consumed exactly ONCE (the links parse) — cache only the
-        # fetched KEYS (url/depth/discovery_pos; their re-derivation is a
+        # more consumers. With the entries parse and image harvest off, html
+        # is consumed exactly ONCE (the links parse) — cache only the
+        # fetched KEYS (url/discovery_pos; their re-derivation is a
         # column-pruned corpus scan plus a keys-only batch exchange) and
         # stream html straight from the corpus scan into the Arrow parse.
-        # With a second html consumer (entries parse, near-dup probe) the
+        # With a second html consumer (entries parse, image harvest) the
         # payload cache pays for itself.
         #
         # History, because this line has flip-flopped on measurements from
@@ -699,10 +679,10 @@ class CrawlEngine:
         # r4_ab_bisect.jsonl; the 537 reproduced to 0.1% across two runs) —
         # the persist writes ~20 GB through the block manager and evicts
         # the corpus cache for a payload that is consumed once.
-        reuse_html = cfg.parse_entries or cfg.dedup_near_dups or cfg.collect_images
+        reuse_html = cfg.parse_entries or cfg.collect_images
         # redirect_to rides the KEYS cache (a short string per row) so the
         # redirect-target stream below never re-derives the fetch join
-        key_cols = ["url", "depth", "discovery_pos"] + (
+        key_cols = ["url", "discovery_pos"] + (
             ["redirect_to"] if follow_redirects else []
         )
         if reuse_html:
@@ -788,78 +768,23 @@ class CrawlEngine:
             self.images = self._pin(merged, rnd, "images")
             _mark("images")
 
-        # dedup-before-store (north-star incremental-crawl step): this
-        # round's fetched pages probe the crawl-lifetime SimHash index; a
-        # page within Hamming ≤ 6 of any PRIOR round's page is near-dup —
-        # still visited (we did fetch it), but its content is dropped: no
-        # link expansion, no entries parse, not added to the index. The
-        # probe is the asymmetric block-and-flip equi-join
-        # (textops.simhash_pairs_between): only the per-round batch explodes
-        # the 52 probe keys; the index side keeps its 4 build keys — at
-        # 10^10 the index is an Iceberg table bucketed by block key.
-        n_near_dups = 0
-        fetched_for_parse = fetched
-        if cfg.dedup_near_dups:
-            from ..queries.textops import simhash_expr, simhash_pairs_between
-
-            # binary→string via cast, NOT decode(): ANSI decode throws
-            # MALFORMED_CHARACTER_CODING on invalid UTF-8 — and crawled html
-            # is routinely mis-encoded; the cast substitutes and the
-            # signature stays deterministic
-            html_str = F.col("html").cast("string")
-            content = (
-                F.coalesce(F.nullif(F.col("text"), F.lit("")), html_str)
-                if "text" in fetched.columns
-                else html_str
-            )
-            new_sigs = (
-                fetched.select("url", simhash_expr(content).alias("simhash"))
-                .groupBy("url")
-                .agg(F.min("simhash").alias("simhash"))
-            )
-            dup_urls = None
-            if self._simhash_index is not None:
-                pairs = simhash_pairs_between(
-                    new_sigs.select(F.col("url").alias("doc_id"), "simhash"),
-                    self._simhash_index.select(F.col("url").alias("doc_id"), "simhash"),
-                )
-                dup_urls = (
-                    pairs.select(F.col("new_id").alias("url"))
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                n_near_dups = dup_urls.count()
-            fresh_sigs = (
-                new_sigs if dup_urls is None else new_sigs.join(dup_urls, "url", "left_anti")
-            )
-            merged_index = (
-                fresh_sigs
-                if self._simhash_index is None
-                else self._simhash_index.unionByName(fresh_sigs)
-            )
-            self._simhash_index = self._pin(merged_index, rnd, "simhash_index")
-            if dup_urls is not None and n_near_dups:
-                fetched_for_parse = fetched.join(dup_urls, "url", "left_anti")
-            _mark("near_dup_index")
-
         # parse pagination links (Arrow-batched UDF), first-wins dedup in FIFO
         # append order (parent pos, link pos)
-        page_inputs = fetched_for_parse.withColumn("start_url", F.lit(cfg.scope_url))
+        page_inputs = fetched.withColumn("start_url", F.lit(cfg.scope_url))
         obs_links = Observation(f"links_r{rnd}")
-        # (depth, discovery_pos) ride THROUGH the Arrow parse as carry
-        # columns instead of a join back to fetched_keys: the join shuffled
-        # every candidate link row (~fanout x round size) to re-attach two
-        # integers the parse input already had. Multi-snapshot corpora stay
+        # discovery_pos rides THROUGH the Arrow parse as a carry column
+        # instead of a join back to fetched_keys: the join shuffled every
+        # candidate link row (~fanout x round size) to re-attach an integer
+        # the parse input already had. Multi-snapshot corpora stay
         # correct: the parse runs once per snapshot (S×), each carrying the
-        # same (depth, pos) — exactly what the old DISTINCT join-back
+        # same pos — exactly what the old DISTINCT join-back
         # produced — and first-wins link dedup below collapses them. Full
         # S→1 belongs at the source (sources.latest_snapshot_view).
         links = udfs.parse_pagination_links(
-            page_inputs, carry=("depth", "discovery_pos"), slim=True
+            page_inputs, carry=("discovery_pos",), slim=True
         ).select(
             "task",
             "url",
-            (F.col("depth") + 1).alias("depth"),
             F.lit(rnd + 1).alias("discovered_round"),
             F.col("discovery_pos").alias("parent_pos"),
             "link_pos",
@@ -877,17 +802,11 @@ class CrawlEngine:
             ).select(
                 F.lit(cfg.task).alias("task"),
                 F.col("redirect_to").alias("url"),
-                (F.col("depth") + 1).alias("depth"),
                 F.lit(rnd + 1).alias("discovered_round"),
                 F.col("discovery_pos").alias("parent_pos"),
                 F.lit(-1).cast("long").alias("link_pos"),
             )
             links = links.unionByName(rlinks)
-        if cfg.max_depth is not None:
-            # scope cut at the source: links beyond the depth budget never
-            # reach the pin/dedup/anti-join pipeline, and n_links (the
-            # big-round routing input) counts only frontier-eligible links
-            links = links.where(F.col("depth") <= cfg.max_depth)
         links = links.observe(obs_links, F.count(F.lit(1)).alias("n_links"))
         # eager pin: the bloom split + dedup branch the plan, so the parse
         # output must be cached either way — checkpointing it NOW also fires
@@ -951,7 +870,6 @@ class CrawlEngine:
             "task",
             "url",
             _netloc_col(F.col("url")).alias("netloc"),
-            "depth",
             "discovered_round",
             "discovery_pos",
         )
@@ -964,7 +882,7 @@ class CrawlEngine:
         obs_entries = obs_docs = None
         if cfg.parse_entries:
             parsed = udfs.parse_listing_entries(
-                fetched_for_parse.withColumn("dialect", F.lit(cfg.dialect))
+                fetched.withColumn("dialect", F.lit(cfg.dialect))
             ).join(
                 fetched_keys.select(
                     F.col("url").alias("page_url"), "discovery_pos"
@@ -1102,7 +1020,6 @@ class CrawlEngine:
             wall_s=time.time() - t0,
             files_downloaded=n_dl,
             files_reused=n_reused,
-            near_dups_skipped=n_near_dups,
         )
         self.metrics.append(m)
         if self.store is not None:
@@ -1174,7 +1091,6 @@ class CrawlEngine:
             F.lit(self.cfg.task).alias("task"),
             "url",
             _netloc_col(F.col("url")).alias("netloc"),
-            F.lit(0).alias("depth"),
             F.lit(self._round).alias("discovered_round"),
             (F.row_number().over(w) - 1 + F.lit(self._next_pos))
             .cast("long")

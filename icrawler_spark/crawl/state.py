@@ -35,16 +35,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-SEEN_SCHEMA = (
-    "url string, entry_id string, title string, doc_type string, "
-    "downloaded boolean, local_path string"
-)
-
-FRONTIER_SCHEMA = (
-    "task string, url string, netloc string, depth int, discovered_round int, "
-    "discovery_pos bigint, status string"
-)
-
 
 class SnapshotStore:
     """Per-round parquet snapshots with atomic commit markers."""

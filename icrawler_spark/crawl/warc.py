@@ -46,10 +46,6 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
-
 _CRLF2 = b"\r\n\r\n"
 
 # read_warc emits a pandas frame whenever either bound trips: keeps Arrow

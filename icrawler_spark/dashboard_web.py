@@ -41,17 +41,6 @@ from .httpapi import ThreadedServer
 _MIN_HOURS = 20.0
 _MAX_HOURS = 32.0
 
-_OVERVIEW_KEYS = (
-    "name", "slug", "start_url", "entries_total", "documents_total",
-    "downloaded_total", "pending_total", "entries_without_documents",
-    "tracked_files", "tracked_downloaded", "document_type_counts",
-    "state_file", "state_last_updated", "output_dir", "output_files",
-    "output_size_bytes", "page_cache_dir", "pages_cached",
-    "page_cache_fresh", "page_cache_last_fetch", "delay", "jitter",
-    "timeout", "min_hours", "max_hours", "next_run_earliest",
-    "next_run_latest", "status", "status_reason", "parser_spec",
-)
-
 
 def make_task_slug(name: str, counts: dict) -> str:
     """ref dashboard.py:101-107."""

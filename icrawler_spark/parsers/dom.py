@@ -127,15 +127,6 @@ class Element(Node):
         return sep.join(pieces)
 
 
-def node_text(node: Node, sep: str = " ", strip: bool = True) -> str:
-    """Text of either a text node or an element (whitespace-collapsed later by callers)."""
-    if isinstance(node, TextNode):
-        return node.data
-    if isinstance(node, Element):
-        return node.get_text(sep, strip=strip)
-    return ""
-
-
 class _TreeBuilder(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

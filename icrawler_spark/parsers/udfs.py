@@ -125,10 +125,10 @@ def parse_pagination_links(
 
     ``carry`` names long-typed input columns echoed verbatim onto every link
     row of their page — Arrow pass-through at a few bytes per row. The crawl
-    frontier carries (depth, discovery_pos) this way instead of joining the
-    parse output back to the fetched-keys table: at 10^7-pages/round scale
-    that join shuffled every candidate link row (~12x the round size) just to
-    re-attach two integers the parse input already had.
+    frontier carries discovery_pos this way instead of joining the parse
+    output back to the fetched-keys table: at 10^7-pages/round scale that
+    join shuffled every candidate link row (~12x the round size) just to
+    re-attach an integer the parse input already had.
 
     ``slim`` drops the (text, kind) columns from the output — the frontier
     never reads them, and at 10^7 pages/round the anchor text alone is

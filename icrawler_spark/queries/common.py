@@ -21,11 +21,3 @@ def money(col):
     regardless of aggregation order. Final results cast back to double.
     """
     return F.col(col).cast(MONEY) if isinstance(col, str) else col.cast(MONEY)
-
-
-def dbl(c):
-    return c.cast("double")
-
-
-def lng(c):
-    return c.cast("long")

@@ -699,8 +699,8 @@ def simhash(spark, sf_dir):
 
 def simhash_expr(text_col):
     """The 48-bit SimHash as a reusable Column expression over any text
-    column — the crawl engine computes it on fetched page text for
-    dedup-before-store (``CrawlConfig.dedup_near_dups``)."""
+    column — the registry's ``simhash`` query and the streaming page ingest
+    (``streaming.jobs.streaming_page_ingest``) share it."""
     toks = F.array_distinct(_tokens(text_col))
     hashes = F.transform(toks, lambda t: _hash48(t))
     seq48 = F.sequence(F.lit(0), F.lit(47))
@@ -839,9 +839,9 @@ def incremental_simhash_dedup(spark, sf_dir):
     the corpus splits into a historical index (doc_id % 3 ≠ 0) and a new
     batch (doc_id % 3 = 0) — the round-N-vs-prior-rounds shape — and every
     new doc within Hamming ≤ 6 of an indexed doc is reported with its best
-    (lowest-Hamming, then lowest-id) match. The crawl engine runs exactly
-    this join per round on fetched page text (``CrawlConfig.dedup_near_dups``,
-    tests/test_crawl.py)."""
+    (lowest-Hamming, then lowest-id) match. An incremental crawl's
+    dedup-before-store step is this join, with fetched page text on the
+    batch side."""
     sig = simhash(spark, sf_dir).localCheckpoint(eager=True)
     new = sig.where(F.col("doc_id") % 3 == 0)
     hist = sig.where(F.col("doc_id") % 3 != 0)

@@ -214,14 +214,3 @@ def extract_clause_text(text: str, ref: ClauseReference) -> str | None:
         item = _item_slice_text(out, ref)
         return item
     return out or None
-
-
-def clause_udf(ref: ClauseReference):
-    """Scalar pandas UDF: texts.text → clause slice for a fixed reference."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    def _slice(texts):
-        return texts.map(lambda t: extract_clause_text(t or "", ref))
-
-    return pandas_udf(_slice, StringType())

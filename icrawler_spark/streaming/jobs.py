@@ -75,10 +75,10 @@ def run_available_now(
 
 
 def streaming_page_ingest(pages: DataFrame, watermark: str = "24 hours") -> DataFrame:
-    """Streaming page ingest — the crawl engine's dedup-before-store stage as
-    a Structured Streaming job: new page snapshots (url, warc_ts, html[, text])
-    arrive as file drops; each gets its content identity (md5) and its 48-bit
-    SimHash (the same codegen expression the batch engine uses, so batch and
+    """Streaming page ingest — dedup-before-store as a Structured Streaming
+    job: new page snapshots (url, warc_ts, html[, text]) arrive as file
+    drops; each gets its content identity (md5) and its 48-bit SimHash (the
+    same codegen expression the batch ``simhash`` query uses, so batch and
     stream agree bit-for-bit), then exact duplicates within the watermark
     horizon are dropped on the content hash — ONE representative per
     distinct content survives (which url wins is arrival-order within the

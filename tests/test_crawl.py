@@ -141,55 +141,6 @@ def test_priority_frontier_default_is_fifo(spark, site, pages):
     assert eng.seen_urls() == ref_seen
 
 
-def test_dedup_near_dups_skips_round_n_plus_1(spark):
-    """VERDICT r3 item 7: with ``dedup_near_dups`` on, a page fetched in
-    round N+1 that is a SimHash near-dup (Hamming ≤ 6) of a round-N page is
-    fetched-but-dropped — its links never enter the frontier — while the
-    same crawl without the flag follows them."""
-    import datetime as dt
-
-    base = "https://dup.example.test"
-    t_common = " ".join(f"token{i} word{i}" for i in range(150))
-    t_neardup = t_common.replace("token100", "tokenX")  # one-token delta
-    t_distinct = " ".join(f"other{i} thing{i}" for i in range(150))
-
-    def row(path, text, link=None):
-        a = f'<a href="{base}/{link}">下一页</a>' if link else ""
-        html = f"<html><body><p>page {path}</p>{a}</body></html>"
-        return (
-            f"{base}/{path}",
-            dt.datetime(2024, 1, 1),
-            html.encode("utf-8"),
-            text,
-            "en",
-        )
-
-    pages = spark.createDataFrame(
-        [
-            row("p0.html", "tiny seed page", link="p1.html"),
-            row("p1.html", t_common, link="p2.html"),
-            row("p2.html", t_neardup, link="p3.html"),  # near-dup of p1
-            row("p3.html", t_distinct),
-        ],
-        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
-    )
-    kw = dict(start_url=f"{base}/p0.html", max_rounds=10, use_bloom=False,
-              parse_entries=False, host_budget=1)
-
-    eng = CrawlEngine(spark, pages, CrawlConfig(dedup_near_dups=True, **kw))
-    eng.run()
-    urls = {r.url: r.status for r in eng.visited.collect()}
-    assert urls.get(f"{base}/p2.html") == "fetched"  # the dup IS fetched...
-    assert f"{base}/p3.html" not in urls             # ...but never expanded
-    skipped = {m.round: m.near_dups_skipped for m in eng.metrics}
-    assert skipped[2] == 1 and skipped[0] == 0 and skipped[1] == 0
-
-    control = CrawlEngine(spark, pages, CrawlConfig(**kw))
-    control.run()
-    assert f"{base}/p3.html" in {r.url for r in control.visited.collect()}
-    assert all(m.near_dups_skipped == 0 for m in control.metrics)
-
-
 def test_missing_pages_marked_visited(spark, site):
     # drop one listing page from the corpus: engine must mark it missing and
     # never retry it, matching the model's visited semantics
@@ -243,14 +194,44 @@ def test_uncommitted_round_is_ignored_on_resume(spark, site, pages, tmp_path):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_visited_compaction_preserves_semantics(spark, site, pages):
-    """compact_visited_every=1 (compact after every round) must not change
-    crawl order or seen-set — the compacted snapshot replaces the delta
-    union transparently."""
-    eng = CrawlEngine(
-        spark, pages,
-        CrawlConfig(start_url=START, max_rounds=20, compact_visited_every=1),
+def test_resume_drops_legacy_depth_column(spark, site, pages, tmp_path):
+    """A checkpoint whose ``pending`` still carries a ``depth`` column (the
+    older frontier schema) resumes to the same host-budgeted crawl: the
+    deferred rows union with the new frontier, so their columns must match."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    ckpt = str(tmp_path / "ckpt_depth")
+    kw = dict(start_url=START, host_budget=1)
+    full = CrawlEngine(spark, pages, CrawlConfig(max_rounds=30, **kw))
+    full.run()
+
+    CrawlEngine(spark, pages, CrawlConfig(max_rounds=1, checkpoint_dir=ckpt, **kw)).run()
+    path = os.path.join(ckpt, "round=000000", "pending")
+    legacy = spark.read.parquet(path).withColumn("depth", F.lit(1))
+    legacy.write.parquet(path + "_legacy")
+    shutil.rmtree(path)
+    os.rename(path + "_legacy", path)
+    assert "depth" in spark.read.parquet(path).columns
+
+    resumed = CrawlEngine(
+        spark, pages, CrawlConfig(max_rounds=30, checkpoint_dir=ckpt, **kw)
     )
+    resumed.run()
+    assert "depth" not in resumed.pending.columns
+    ref_order, ref_seen, _ = crawl_model(site, START, host_budget=1)
+    assert resumed.crawl_order() == full.crawl_order() == ref_order
+    assert resumed.seen_urls() == full.seen_urls() == ref_seen
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_visited_compaction_preserves_semantics(spark, site, pages, monkeypatch):
+    """Compacting after every round must not change crawl order or
+    seen-set — the compacted snapshot replaces the delta union
+    transparently."""
+    monkeypatch.setattr(CrawlEngine, "_COMPACT_VISITED_EVERY", 1)
+    eng = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
     eng.run()
     ref_order, ref_seen, _ = crawl_model(site, START)
     assert eng.crawl_order() == ref_order
@@ -259,17 +240,17 @@ def test_visited_compaction_preserves_semantics(spark, site, pages):
     assert len(eng._visited_parts) == 1
 
 
-def test_resume_prefers_compacted_snapshot(spark, site, pages, tmp_path):
+def test_resume_prefers_compacted_snapshot(spark, site, pages, tmp_path, monkeypatch):
     """Resume from a checkpoint whose rounds carry visited_full snapshots:
     the resumed crawl must equal the uninterrupted one."""
     ckpt = str(tmp_path / "ckpt_compact")
     full = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
     full.run()
 
+    monkeypatch.setattr(CrawlEngine, "_COMPACT_VISITED_EVERY", 1)
     CrawlEngine(
         spark, pages,
-        CrawlConfig(start_url=START, max_rounds=2, checkpoint_dir=ckpt,
-                    compact_visited_every=1),
+        CrawlConfig(start_url=START, max_rounds=2, checkpoint_dir=ckpt),
     ).run()
     import os
 
@@ -279,8 +260,7 @@ def test_resume_prefers_compacted_snapshot(spark, site, pages, tmp_path):
     )
     resumed = CrawlEngine(
         spark, pages,
-        CrawlConfig(start_url=START, max_rounds=20, checkpoint_dir=ckpt,
-                    compact_visited_every=1),
+        CrawlConfig(start_url=START, max_rounds=20, checkpoint_dir=ckpt),
     )
     resumed.run()
     assert resumed.crawl_order() == full.crawl_order()
@@ -632,7 +612,7 @@ def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path, monkeypatch):
 def test_parse_pagination_carry_and_slim_match_full(spark, pages):
     """The frontier's carry/slim parse (one shuffle join removed per round)
     must emit the SAME link set as the full parse, with the carried
-    (depth, discovery_pos) equal to the parent page's input values."""
+    discovery_pos equal to the parent page's input value."""
     from pyspark.sql import functions as F
 
     from icrawler_spark.parsers import udfs
@@ -640,18 +620,16 @@ def test_parse_pagination_carry_and_slim_match_full(spark, pages):
     inp = (
         pages.withColumn("task", F.lit("t"))
         .withColumn("start_url", F.lit(START))
-        .withColumn("depth", F.lit(3).cast("long"))
         .withColumn("discovery_pos", F.monotonically_increasing_id())
     )
     full = udfs.parse_pagination_links(inp)
-    slim = udfs.parse_pagination_links(inp, carry=("depth", "discovery_pos"), slim=True)
-    assert slim.columns == ["task", "page_url", "link_pos", "url", "depth", "discovery_pos"]
+    slim = udfs.parse_pagination_links(inp, carry=("discovery_pos",), slim=True)
+    assert slim.columns == ["task", "page_url", "link_pos", "url", "discovery_pos"]
     f = {(r.task, r.page_url, r.link_pos, r.url) for r in full.collect()}
     s_rows = slim.collect()
     assert len(s_rows) > 0
     assert f == {(r.task, r.page_url, r.link_pos, r.url) for r in s_rows}
     pos_by_url = {r.url: r.discovery_pos for r in inp.select("url", "discovery_pos").collect()}
-    assert all(r.depth == 3 for r in s_rows)
     assert all(r.discovery_pos == pos_by_url[r.page_url] for r in s_rows)
 
 

@@ -36,12 +36,12 @@ def test_apply_robots_longest_match(spark):
     rules = robots_rules_df(spark, {"www.example.test": ROBOTS})
     frontier = spark.createDataFrame(
         [
-            ("t", "https://www.example.test/list/detail_1.html", "www.example.test", 0, 0, 0),
-            ("t", "https://www.example.test/list/detail_2.html", "www.example.test", 0, 0, 1),
-            ("t", "https://www.example.test/list/index.html", "www.example.test", 0, 0, 2),
-            ("t", "https://other.test/list/detail_9.html", "other.test", 0, 0, 3),
+            ("t", "https://www.example.test/list/detail_1.html", "www.example.test", 0, 0),
+            ("t", "https://www.example.test/list/detail_2.html", "www.example.test", 0, 1),
+            ("t", "https://www.example.test/list/index.html", "www.example.test", 0, 2),
+            ("t", "https://other.test/list/detail_9.html", "other.test", 0, 3),
         ],
-        "task string, url string, netloc string, depth int, discovered_round int, discovery_pos bigint",
+        "task string, url string, netloc string, discovered_round int, discovery_pos bigint",
     )
     kept = {r.url for r in apply_robots_filter(frontier, rules).collect()}
     assert "https://www.example.test/list/detail_1.html" in kept   # Allow wins (longer)
@@ -142,21 +142,16 @@ def test_engine_crawl_delay_budget_spreads_rounds(spark):
     assert len({r.url for r in eng.visited.collect()}) == 9  # nothing dropped
 
 
-def test_robots_docs_from_pages_and_max_depth(spark):
-    """Robots corpus derived from the pages table drives rules + budgets;
-    max_depth prunes the frontier at the link source."""
+def test_robots_docs_from_pages(spark):
+    """Robots corpus derived from the pages table drives rules + budgets."""
     import datetime as dt
 
     from icrawler_spark.crawl.robots import robots_docs_from_pages
 
-    host = "https://depth.test"
+    host = "https://robots.test"
 
-    def page(path, link=None, ts=0):
-        a = f'<a href="{host}/{link}">下一页</a>' if link else ""
-        return (f"{host}/{path}", dt.datetime(2024, 1, 1, 0, 0, ts),
-                f"<html><body>{a}</body></html>".encode(), "", "en")
-
-    rows = [page(f"d{i}.html", link=f"d{i+1}.html" if i < 5 else None) for i in range(6)]
+    # a non-robots page row is ignored
+    rows = [(f"{host}/d0.html", dt.datetime(2024, 1, 1), b"<html><body></body></html>", "", "en")]
     # robots.txt as a corpus row (newest snapshot wins)
     rows.append((f"{host}/robots.txt", dt.datetime(2024, 1, 1),
                  b"User-agent: *\nDisallow: /old", "", "en"))
@@ -167,18 +162,9 @@ def test_robots_docs_from_pages_and_max_depth(spark):
     )
 
     docs = robots_docs_from_pages(pages)
-    assert set(docs) == {"depth.test"}
-    assert "Crawl-delay: 30" in docs["depth.test"]  # newest snapshot won
+    assert set(docs) == {"robots.test"}
+    assert "Crawl-delay: 30" in docs["robots.test"]  # newest snapshot won
 
     from icrawler_spark.crawl.robots import parse_crawl_delay
 
-    assert parse_crawl_delay(docs["depth.test"]) == 30.0
-
-    eng = CrawlEngine(
-        spark, pages,
-        CrawlConfig(start_url=f"{host}/d0.html", max_rounds=10, use_bloom=False,
-                    parse_entries=False, max_depth=2),
-    )
-    eng.run()
-    # depth 0,1,2 fetched; d3+ never enqueued
-    assert eng.crawl_order() == [f"{host}/d{i}.html" for i in range(3)]
+    assert parse_crawl_delay(docs["robots.test"]) == 30.0
