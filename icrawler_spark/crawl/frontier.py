@@ -7,9 +7,13 @@ deferrals), executed as a dataflow:
 
     pending ──rank(netloc budget)──▶ batch ──join pages──▶ fetched
        ▲                                                     │
-       │                                  ┌─parse pagination UDF─▶ new links
-       └──deferred ∪ (new ⟂ seen ⟂ pending ⟂ batch)◀──────────┘
-                                          └─parse entries UDF─▶ merge state
+       │                                 page-parse UDF, pinned once
+       │                                        ┌───links────┴───entries──▶ merge state
+       └──deferred ∪ (new ⟂ seen ⟂ pending ⟂ batch)◀┘
+
+Each fetched page is decoded and parsed once per round: one Arrow-batched
+UDF emits the page's pagination links and listing entries, and both the
+link stream and the entries merge read its one pin.
 
 Crawl-order determinism (SURVEY §4 hard-part (a)): FIFO order is carried AS
 DATA — every frontier row has ``(discovered_round, discovery_pos)`` where
@@ -648,49 +652,18 @@ class CrawlEngine:
         if follow_redirects:
             fetch_cols.append("redirect_to")
         fetched = self.pages.join(batch_side, "url", "inner").select(*fetch_cols)
-        # What to cache from the fetch join is THE big-round scaling decision:
-        # caching the html column writes the whole fetched payload (~30 KB/row
-        # × round size) through the memory bus into the JVM cache — a cost
-        # that is bandwidth-bound, not CPU-bound, so it does NOT shrink with
-        # more cores (measured flat 90.6 s → 84.2 s from 4 to 16 cores on a
-        # 320k-page round). The rule: cache the payload IFF html has two or
-        # more consumers. With the entries parse and image harvest off, html
-        # is consumed exactly ONCE (the links parse) — cache only the
-        # fetched KEYS (url/discovery_pos; their re-derivation is a
-        # column-pruned corpus scan plus a keys-only batch exchange) and
-        # stream html straight from the corpus scan into the Arrow parse.
-        # With a second html consumer (entries parse, image harvest) the
-        # payload cache pays for itself.
-        #
-        # History, because this line has flip-flopped on measurements from
-        # two different regimes: an r3 commit forced the payload persist on
-        # the whole shuffle-hash plain-table path after a 10M-URL round
-        # measured 810 s keys-only vs 310 s persisted. That 10M corpus was a
-        # 75 GB MEMORY_AND_DISK persist that had SPILLED — and a "pruned"
-        # re-scan against disk-spilled cache blocks deserializes whole
-        # partitions, so the keys re-derivation re-read all 75 GB of html
-        # from disk. That regime is the anti-scale configuration the r3
-        # crash note retired (no fleet caches 100 TB of html): a 10^10
-        # corpus is a url-bucketed Iceberg/parquet table, where the pruned
-        # re-scan reads only the key columns. In the regime that fits
-        # memory, the forced persist was a 4x regression: interleaved
-        # same-window A/B at 16c on the 1.28M-URL big round measured 537 s
-        # with the payload persist vs ~130 s keys-only (BENCH/
-        # r4_ab_bisect.jsonl; the 537 reproduced to 0.1% across two runs) —
-        # the persist writes ~20 GB through the block manager and evicts
-        # the corpus cache for a payload that is consumed once.
-        reuse_html = cfg.parse_entries or cfg.collect_images
-        # redirect_to rides the KEYS cache (a short string per row) so the
-        # redirect-target stream below never re-derives the fetch join
-        key_cols = ["url", "discovery_pos"] + (
-            ["redirect_to"] if follow_redirects else []
-        )
-        if reuse_html:
+        # Cache the html payload IFF it has two consumers: the page parse
+        # always reads it once, and the image harvest is the only other
+        # reader. Otherwise cache only the fetched urls and stream html from
+        # the corpus scan into the parse — a once-read payload cache writes
+        # the whole round through the memory bus and measured 4x slower on a
+        # 1.28M-URL round (BENCH/r4_ab_bisect.jsonl).
+        if cfg.collect_images:
             fetched = fetched.persist()
-            fetched_keys = fetched.select(*key_cols)
+            fetched_keys = fetched.select("url")
             fetch_cache = fetched
         else:
-            fetched_keys = fetched.select(*key_cols).persist()
+            fetched_keys = fetched.select("url").persist()
             fetch_cache = fetched_keys
 
         obs_visited = Observation(f"visited_r{rnd}")
@@ -699,7 +672,7 @@ class CrawlEngine:
         # duplicate visited rows, inflated n_batch/n_fetched, negative
         # n_deferred. distinct() here shuffles url strings only, never html.
         batch_visited = batch.join(
-            fetched_keys.select("url").distinct().withColumn("_st", F.lit("fetched")),
+            fetched_keys.distinct().withColumn("_st", F.lit("fetched")),
             "url",
             "left",
         ).select(
@@ -720,7 +693,7 @@ class CrawlEngine:
         self.visited = self._union_visited()
         n_batch = _obs_long(obs_visited, "n_batch", batch.count)
         n_fetched = _obs_long(
-            obs_visited, "n_fetched", lambda: fetched_keys.select("url").distinct().count()
+            obs_visited, "n_fetched", lambda: fetched_keys.distinct().count()
         )
         n_missing = n_batch - n_fetched
         n_deferred = n_pending_before - n_batch
@@ -768,26 +741,42 @@ class CrawlEngine:
             self.images = self._pin(merged, rnd, "images")
             _mark("images")
 
-        # parse pagination links (Arrow-batched UDF), first-wins dedup in FIFO
-        # append order (parent pos, link pos)
-        page_inputs = fetched.withColumn("start_url", F.lit(cfg.scope_url))
+        # ONE parse per fetched page (Arrow-batched UDF): pagination links
+        # always, listing entries when the round merges them. The output is
+        # pinned once and both the link stream and the entries merge read
+        # the pin, so no later pin re-runs the Python parse.
+        # discovery_pos (and redirect_to) ride THROUGH the parse as carry
+        # columns instead of a join back to fetched_keys. Multi-snapshot
+        # corpora stay correct: the parse runs once per snapshot (S×), each
+        # carrying the same pos, and first-wins link dedup below collapses
+        # them. Full S→1 belongs at the source (sources.latest_snapshot_view).
+        carry = ("discovery_pos",) + (("redirect_to",) if follow_redirects else ())
+        page_inputs = fetched.select(
+            "task", "url", "html", *carry, F.lit(cfg.scope_url).alias("start_url")
+        )
+        if cfg.parse_entries:
+            page_inputs = page_inputs.withColumn("dialect", F.lit(cfg.dialect))
+        n_link_rows = F.size("links")
+        if follow_redirects:
+            # empty-string Location values (malformed 3xx) are dropped like
+            # NULL — they would otherwise enqueue a bogus "" frontier row
+            has_redirect = F.col("redirect_to").isNotNull() & (F.col("redirect_to") != "")
+            n_link_rows = n_link_rows + has_redirect.cast("int")
         obs_links = Observation(f"links_r{rnd}")
-        # discovery_pos rides THROUGH the Arrow parse as a carry column
-        # instead of a join back to fetched_keys: the join shuffled every
-        # candidate link row (~fanout x round size) to re-attach an integer
-        # the parse input already had. Multi-snapshot corpora stay
-        # correct: the parse runs once per snapshot (S×), each carrying the
-        # same pos — exactly what the old DISTINCT join-back
-        # produced — and first-wins link dedup below collapses them. Full
-        # S→1 belongs at the source (sources.latest_snapshot_view).
-        links = udfs.parse_pagination_links(
-            page_inputs, carry=("discovery_pos",), slim=True
-        ).select(
-            "task",
-            "url",
-            F.lit(rnd + 1).alias("discovered_round"),
-            F.col("discovery_pos").alias("parent_pos"),
-            "link_pos",
+        # eager pin: the bloom split + dedup and the entries/documents/seen
+        # pins all branch off the parse, so it must be cached either way —
+        # checkpointing it NOW also fires obs_links, making the big-round
+        # routing decision exact (the r2 design estimated this round's links
+        # as n_fetched × last round's fanout; a fanout explosion — e.g.
+        # default-estimate round 0 — could push a multi-million-link sort
+        # through one partition)
+        parsed_pages = (
+            udfs.parse_pages(page_inputs, carry=carry)
+            .observe(obs_links, F.sum(n_link_rows).alias("n_links"))
+            .localCheckpoint(eager=True)
+        )
+        links = parsed_pages.select(
+            "task", "discovery_pos", F.posexplode("links").alias("link_pos", "url")
         )
         if follow_redirects:
             # 3xx targets join the link stream at link_pos −1: a redirect is
@@ -795,30 +784,25 @@ class CrawlEngine:
             # of the page's parsed links. Everything downstream (first-wins
             # dedup, seen filtering, politeness, positions) applies to
             # redirect targets exactly as to parsed links — no special path.
-            # empty-string Location values (malformed 3xx) are dropped like
-            # NULL — they would otherwise enqueue a bogus "" frontier row
-            rlinks = fetched_keys.where(
-                F.col("redirect_to").isNotNull() & (F.col("redirect_to") != "")
-            ).select(
-                F.lit(cfg.task).alias("task"),
-                F.col("redirect_to").alias("url"),
-                F.lit(rnd + 1).alias("discovered_round"),
-                F.col("discovery_pos").alias("parent_pos"),
-                F.lit(-1).cast("long").alias("link_pos"),
+            links = links.unionByName(
+                parsed_pages.where(has_redirect).select(
+                    F.lit(cfg.task).alias("task"),
+                    "discovery_pos",
+                    F.lit(-1).alias("link_pos"),
+                    F.col("redirect_to").alias("url"),
+                )
             )
-            links = links.unionByName(rlinks)
-        links = links.observe(obs_links, F.count(F.lit(1)).alias("n_links"))
-        # eager pin: the bloom split + dedup branch the plan, so the parse
-        # output must be cached either way — checkpointing it NOW also fires
-        # obs_links, making the big-round routing decision exact (the r2
-        # design estimated this round's links as n_fetched × last round's
-        # fanout; a fanout explosion — e.g. default-estimate round 0 — could
-        # push a multi-million-link sort through one partition)
-        links = links.localCheckpoint(eager=True)
+        links = links.select(
+            "task",
+            "url",
+            F.lit(rnd + 1).alias("discovered_round"),
+            F.col("discovery_pos").alias("parent_pos"),
+            F.col("link_pos").cast("long"),
+        )
         n_links = _obs_long(obs_links, "n_links", links.count)
         big_round = n_links > self._BIG_ROUND_THRESHOLD
         self._last_big_round = big_round
-        _mark("parse+pin_links")
+        _mark("parse+pin_pages")
 
         # seen-set filtering FIRST, dedup-window SECOND. Order is semantics-
         # preserving: the bloom verdict and both anti-joins are url-level —
@@ -881,17 +865,17 @@ class CrawlEngine:
         n_entries = n_docs = 0
         obs_entries = obs_docs = None
         if cfg.parse_entries:
-            parsed = udfs.parse_listing_entries(
-                fetched.withColumn("dialect", F.lit(cfg.dialect))
-            ).join(
-                fetched_keys.select(
-                    F.col("url").alias("page_url"), "discovery_pos"
-                ).distinct(),
+            parsed = parsed_pages.select(
+                "task",
                 "page_url",
-            )
-            parsed = parsed.withColumn(
-                "_src_pos",
-                F.col("discovery_pos") * self._ENTRY_STRIDE + F.col("entry_pos"),
+                "discovery_pos",
+                F.posexplode("entries").alias("entry_pos", "_e"),
+            ).select(
+                "task",
+                "page_url",
+                "entry_pos",
+                "_e.*",
+                (F.col("discovery_pos") * self._ENTRY_STRIDE + F.col("entry_pos")).alias("_src_pos"),
             )
             obs_entries = Observation(f"entries_r{rnd}")
             with_ids = resolve_entry_identity(parsed, self.documents).observe(
@@ -993,7 +977,7 @@ class CrawlEngine:
 
         batch.unpersist()
         fetch_cache.unpersist()
-        links.unpersist()
+        parsed_pages.unpersist()
         if self.store is None and prev_pending is not None:
             prev_pending.unpersist()
         # the round's bloom broadcast (megabytes per round at real capacity)

@@ -11,9 +11,11 @@ reference parser dialects:
 - detail-page attachment discovery (ref pbc_monitor.py:532-569)
 - filename-title repair via anchor text (ref pbc_monitor.py:74-107)
 
-These are pure functions ``(url, html:str) -> list[dict]`` — no Spark imports;
+These are pure functions ``(url, html) -> list[dict]`` — no Spark imports;
 ``udfs.py`` lifts them into Arrow-batched mapInPandas stages so the Spark-side
-hot path stays columnar.
+hot path stays columnar. ``html`` is the page text or its ``parse_html``
+tree: the page-parse UDF parses each page once and hands the one tree to both
+the pagination walk and the dialect entry parser.
 """
 
 from __future__ import annotations
@@ -62,6 +64,10 @@ _GENERIC_PHRASES = [
 
 _PAGINATED_INDEX = re.compile(r"^index(?:[_-]?\d+)\.html$", re.IGNORECASE)
 _ONCLICK_URL = re.compile(r"""['"]([^'"]+)['"]""")
+
+
+def _tree(html: str | Element) -> Element:
+    return html if isinstance(html, Element) else parse_html(html)
 
 
 def _collapse(text: str) -> str:
@@ -367,10 +373,10 @@ def _parse_legacy_links(page_url: str, root: Element, suffixes) -> list[dict]:
 
 
 def extract_listing_entries_default(
-    page_url: str, html: str, suffixes=ATTACHMENT_SUFFIXES
+    page_url: str, html: str | Element, suffixes=ATTACHMENT_SUFFIXES
 ) -> list[dict]:
     """table → txtlist → legacy-flat cascade (ref parser.py:470-497)."""
-    root = parse_html(html)
+    root = _tree(html)
     entries = _parse_table_rows(page_url, root, suffixes)
     if entries:
         return entries
@@ -486,10 +492,10 @@ def _tiaofasi_attachments(anchor: Element, page_url: str, suffixes) -> list[dict
 
 
 def extract_listing_entries_tiaofasi(
-    page_url: str, html: str, suffixes=ATTACHMENT_SUFFIXES
+    page_url: str, html: str | Element, suffixes=ATTACHMENT_SUFFIXES
 ) -> list[dict]:
     """Anchor-walk dialect (ref parser_tiaofasi.py:153-222); falls back to default."""
-    root = parse_html(html)
+    root = _tree(html)
     entries: list[dict] = []
     seen: set[str] = set()
     start_path = urlparse(page_url).path
@@ -533,7 +539,7 @@ def extract_listing_entries_tiaofasi(
 
     if entries:
         return entries
-    return extract_listing_entries_default(page_url, html, suffixes)
+    return extract_listing_entries_default(page_url, root, suffixes)
 
 
 # --- dialect dispatch -----------------------------------------------------------
@@ -545,7 +551,7 @@ DIALECTS = {
 }
 
 
-def extract_listing_entries(page_url: str, html: str, dialect: str = "default",
+def extract_listing_entries(page_url: str, html: str | Element, dialect: str = "default",
                             suffixes=ATTACHMENT_SUFFIXES) -> list[dict]:
     fn = DIALECTS.get((dialect or "default").lower(), extract_listing_entries_default)
     return fn(page_url, html, suffixes)
@@ -583,8 +589,8 @@ def _is_pagination_label(anchor: Element, text: str) -> bool:
     return bool(rel_tokens & {"next", "prev", "previous", "first", "last"})
 
 
-def extract_pagination_meta(current_url: str, html: str, start_url: str) -> dict:
-    root = parse_html(html)
+def extract_pagination_meta(current_url: str, html: str | Element, start_url: str) -> dict:
+    root = _tree(html)
     meta: dict = {"next": None, "prev": None, "first": None, "last": None, "links": []}
     anchors: list[Element] = []
     for container in root.find_all(None, class_="list_page"):
@@ -656,12 +662,11 @@ def extract_file_links(page_url: str, html: str, dialect: str = "default",
                        suffixes=ATTACHMENT_SUFFIXES) -> list[tuple[str, str]]:
     """Non-html documents of all entries as (url, title), with titles equal to
     the URL basename repaired from the matching anchor's title/text."""
-    entries = extract_listing_entries(page_url, html, dialect, suffixes)
+    root = parse_html(html)
+    entries = extract_listing_entries(page_url, root, dialect, suffixes)
     links = [(d["url"], d.get("title", ""))
              for e in entries for d in e.get("documents", [])
              if d.get("type") != "html" and d.get("url")]
-
-    root = parse_html(html)
 
     def _anchor_text_for(target: str) -> str | None:
         for anchor in root.find_all("a", href=True):

@@ -6,6 +6,13 @@ JVM↔Python boundary as Arrow columns (no per-row serialization), matching the
 input_hint's "vectorized pandas/Arrow UDFs, no per-row Python [at the Spark
 level]" contract.
 
+There are two: ``parse_pages`` decodes and parses each listing page ONCE and
+emits its pagination links and listing entries as arrays on one row per page
+(the crawl frontier pins that output once per round and reads both streams
+from the pin), and ``parse_detail_attachments`` reads downloaded detail
+pages. ``parse_pagination_links`` and ``parse_listing_entries`` are
+``posexplode`` views over ``parse_pages``.
+
 Page-size note for 100 TB: one input row = one page (≤ a few MB of html), so
 an Arrow batch of the default 10k rows stays well under executor memory; cap
 with spark.sql.execution.arrow.maxRecordsPerBatch when pages are large.
@@ -17,10 +24,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -28,6 +35,7 @@ from pyspark.sql.types import (
 
 from ..functions.pure import decode_html_bytes
 from . import listing
+from .dom import parse_html
 
 DOCUMENT_STRUCT = StructType([
     StructField("doc_type", StringType()),
@@ -35,23 +43,11 @@ DOCUMENT_STRUCT = StructType([
     StructField("title", StringType()),
 ])
 
-ENTRY_SCHEMA = StructType([
-    StructField("task", StringType()),
-    StructField("page_url", StringType()),
-    StructField("entry_pos", IntegerType()),
+ENTRY_STRUCT = StructType([
     StructField("serial", IntegerType()),
     StructField("title", StringType()),
     StructField("remark", StringType()),
     StructField("documents", ArrayType(DOCUMENT_STRUCT)),
-])
-
-PAGINATION_SCHEMA = StructType([
-    StructField("task", StringType()),
-    StructField("page_url", StringType()),
-    StructField("link_pos", LongType()),
-    StructField("url", StringType()),
-    StructField("text", StringType()),
-    StructField("kind", StringType()),
 ])
 
 ATTACHMENT_SCHEMA = StructType([
@@ -78,95 +74,81 @@ def _html_of(value) -> str:
     return str(value)
 
 
-def parse_listing_entries(pages: DataFrame) -> DataFrame:
-    """pages(task, url, html, dialect) → one row per listing entry.
+def parse_pages(pages: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """pages(task, url, html[, start_url][, dialect][, *carry]) → one row per
+    page: (task, page_url, *carry[, links][, entries]).
 
-    ``entry_pos`` is the document-order position within the page — carried as
+    Each page's html is decoded and parsed ONCE; the one tree feeds every
+    requested extractor. The input columns choose the outputs: ``start_url``
+    adds ``links`` (pagination urls in document order — the reference's FIFO
+    append order), ``dialect`` adds ``entries`` (listing entry structs in
+    document order). Array positions are the link/entry positions, carried as
     data so BFS ordering survives any partitioning (SURVEY §4 hard-part (a)).
-    """
+
+    ``carry`` names input columns echoed verbatim onto their page's row —
+    the crawl frontier carries discovery_pos (and redirect_to) this way
+    instead of joining the parse output back to the fetched-keys table."""
     cols = set(pages.columns)
-    required = {"task", "url", "html"}
-    missing = required - cols
+    missing = {"task", "url", "html"} - cols
     if missing:
-        raise ValueError(f"parse_listing_entries: missing columns {sorted(missing)}")
-    has_dialect = "dialect" in cols
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("task", "page_url", "entry_pos", "serial",
-                                     "title", "remark", "documents")}
-            for row in pdf.itertuples(index=False):
-                html = _html_of(row.html)
-                dialect = getattr(row, "dialect", "default") if has_dialect else "default"
-                for pos, e in enumerate(
-                    listing.extract_listing_entries(row.url, html, dialect or "default")
-                ):
-                    out["task"].append(row.task)
-                    out["page_url"].append(row.url)
-                    out["entry_pos"].append(pos)
-                    out["serial"].append(e.get("serial"))
-                    out["title"].append(e.get("title"))
-                    out["remark"].append(e.get("remark"))
-                    out["documents"].append(
-                        [{"doc_type": d.get("type"), "url": d.get("url"),
-                          "title": d.get("title")} for d in e.get("documents", [])]
-                    )
-            yield _frame(out)
-
-    return pages.mapInPandas(run, ENTRY_SCHEMA)
-
-
-def parse_pagination_links(
-    pages: DataFrame, carry: tuple[str, ...] = (), slim: bool = False
-) -> DataFrame:
-    """pages(task, url, html, start_url[, *carry]) → pagination link rows in
-    document order (``link_pos`` reproduces the reference's FIFO append order).
-
-    ``carry`` names long-typed input columns echoed verbatim onto every link
-    row of their page — Arrow pass-through at a few bytes per row. The crawl
-    frontier carries discovery_pos this way instead of joining the parse
-    output back to the fetched-keys table: at 10^7-pages/round scale that
-    join shuffled every candidate link row (~12x the round size) just to
-    re-attach an integer the parse input already had.
-
-    ``slim`` drops the (text, kind) columns from the output — the frontier
-    never reads them, and at 10^7 pages/round the anchor text alone is
-    ~0.5-1 GB of Arrow transfer plus the same again through the links pin
-    on a memory-bandwidth-bound stage."""
-    base = (
-        [f for f in PAGINATION_SCHEMA.fields if f.name not in ("text", "kind")]
-        if slim
-        else list(PAGINATION_SCHEMA.fields)
+        raise ValueError(f"parse_pages: missing columns {sorted(missing)}")
+    with_links = "start_url" in cols
+    with_entries = "dialect" in cols
+    schema = StructType(
+        [StructField("task", StringType()), StructField("page_url", StringType())]
+        + [StructField(c, pages.schema[c].dataType) for c in carry]
+        + ([StructField("links", ArrayType(StringType()))] if with_links else [])
+        + ([StructField("entries", ArrayType(ENTRY_STRUCT))] if with_entries else [])
     )
-    carry_schema = StructType(base + [StructField(c, LongType()) for c in carry])
-    cols = tuple(f.name for f in carry_schema.fields)
+    names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
+            out: dict[str, list] = {k: [] for k in names}
             for row in pdf.itertuples(index=False):
-                html = _html_of(row.html)
-                meta = listing.extract_pagination_meta(row.url, html, row.start_url)
-                kinds = (
-                    {}
-                    if slim
-                    else {meta[k]: k for k in ("next", "prev", "first", "last") if meta[k]}
-                )
-                carried = [(c, getattr(row, c)) for c in carry]
-                for pos, item in enumerate(meta["links"]):
-                    out["task"].append(row.task)
-                    out["page_url"].append(row.url)
-                    out["link_pos"].append(pos)
-                    out["url"].append(item["url"])
-                    if not slim:
-                        out["text"].append(item["text"])
-                        out["kind"].append(kinds.get(item["url"]))
-                    for c, v in carried:
-                        out[c].append(v)
+                root = parse_html(_html_of(row.html))
+                out["task"].append(row.task)
+                out["page_url"].append(row.url)
+                for c in carry:
+                    out[c].append(getattr(row, c))
+                if with_links:
+                    meta = listing.extract_pagination_meta(row.url, root, row.start_url)
+                    out["links"].append([item["url"] for item in meta["links"]])
+                if with_entries:
+                    out["entries"].append([
+                        {"serial": e.get("serial"), "title": e.get("title"),
+                         "remark": e.get("remark"),
+                         "documents": [{"doc_type": d.get("type"), "url": d.get("url"),
+                                        "title": d.get("title")}
+                                       for d in e.get("documents", [])]}
+                        for e in listing.extract_listing_entries(
+                            row.url, root, row.dialect or "default"
+                        )
+                    ])
             yield _frame(out)
 
-    return pages.mapInPandas(run, carry_schema)
+    return pages.mapInPandas(run, schema)
+
+
+def parse_listing_entries(pages: DataFrame) -> DataFrame:
+    """pages(task, url, html[, dialect]) → one row per listing entry
+    (task, page_url, entry_pos, serial, title, remark, documents): the
+    exploded ``entries`` of :func:`parse_pages`."""
+    if "dialect" not in pages.columns:
+        pages = pages.withColumn("dialect", F.lit("default"))
+    return parse_pages(pages.select("task", "url", "html", "dialect")).select(
+        "task", "page_url", F.posexplode("entries").alias("entry_pos", "_e")
+    ).select("task", "page_url", "entry_pos", "_e.*")
+
+
+def parse_pagination_links(pages: DataFrame, slim: bool = True) -> DataFrame:
+    """pages(task, url, html, start_url) → (task, page_url, link_pos, url)
+    pagination link rows: the exploded ``links`` of :func:`parse_pages`.
+    ``slim`` is kept for existing callers; the output is always slim."""
+    return parse_pages(pages.select("task", "url", "html", "start_url")).select(
+        "task", "page_url",
+        F.posexplode("links").alias("link_pos", "url"),
+    ).select("task", "page_url", F.col("link_pos").cast("long"), "url")
 
 
 def parse_detail_attachments(pages: DataFrame) -> DataFrame:

@@ -533,11 +533,12 @@ def test_bucketed_pages_join_has_no_corpus_exchange(spark, tmp_path):
 
 
 def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark, monkeypatch):
-    """The keys-only fetch cache now covers the plain-corpus shuffle-hash
-    path too (html has one consumer when both parses are off, so the payload
-    persist was a pure regression there — 537 s vs ~130 s on the 1.28M-URL
-    big round at 16c, BENCH/r4_ab_bisect.jsonl). Forcing every round onto
-    the shuffle-hash path must not change crawl order or the seen-set."""
+    """The fetch join caches only the fetched urls unless the image harvest
+    needs the html a second time (the page parse reads it once; a once-read
+    payload persist was a pure regression — 537 s vs ~130 s on the
+    1.28M-URL big round at 16c, BENCH/r4_ab_bisect.jsonl). Forcing every
+    round onto the plain-corpus shuffle-hash path must not change crawl
+    order or the seen-set."""
     from icrawler_spark.crawl import build_site, site_pages_df
 
     site = build_site(n_pages=4, entries_per_page=3)
@@ -547,20 +548,10 @@ def test_keysonly_cache_on_plain_shuffle_hash_matches_plain(spark, monkeypatch):
 
     # every batch takes the shuffle-hash join
     monkeypatch.setattr(CrawlEngine, "_BROADCAST_BATCH_THRESHOLD", 0)
-    sh = CrawlEngine(
-        spark,
-        pages,
-        CrawlConfig(
-            start_url=START,
-            max_rounds=20,
-            parse_entries=False,  # single html consumer -> keys-only cache
-        ),
-    )
+    sh = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=20))
     sh.run()
-    # crawl_order is the full frontier contract (BFS order + politeness +
-    # dedup); seen_urls is an entries-parse artifact and parse_entries must
-    # be off to reach the keys-only branch, so it is not comparable here.
     assert sh.crawl_order() == plain.crawl_order()
+    assert sh.seen_urls() == plain.seen_urls()
 
 
 def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path, monkeypatch):
@@ -589,48 +580,69 @@ def test_crawl_from_bucketed_table_matches_plain(spark, tmp_path, monkeypatch):
         bucketed.run()
         assert bucketed.crawl_order() == plain.crawl_order()
         assert bucketed.seen_urls() == plain.seen_urls()
-        # keys-only cache path on a forced shuffle-hash round must be
+        # the keys-only cache on a forced shuffle-hash round must be
         # identical too: broadcast threshold 0 disables the broadcast fetch
-        # join, exercising reuse_html=False on the bucketed corpus — html
-        # streams from bucket-local scans, never persisted
+        # join, so html streams from bucket-local scans, never persisted
         monkeypatch.setattr(CrawlEngine, "_BROADCAST_BATCH_THRESHOLD", 0)
         sh = CrawlEngine(
             spark,
             spark.table("pages_b_site"),
-            CrawlConfig(
-                start_url=START,
-                max_rounds=20,
-                parse_entries=False,  # reuse_html=False: the keys-only path
-            ),
+            CrawlConfig(start_url=START, max_rounds=20),
         )
         sh.run()
         assert sh.crawl_order() == plain.crawl_order()
+        assert sh.seen_urls() == plain.seen_urls()
     finally:
         spark.sql("DROP TABLE IF EXISTS pages_b_site")
 
 
-def test_parse_pagination_carry_and_slim_match_full(spark, pages):
-    """The frontier's carry/slim parse (one shuffle join removed per round)
-    must emit the SAME link set as the full parse, with the carried
-    discovery_pos equal to the parent page's input value."""
+def test_parse_pages_carries_pos_and_matches_listing_parsers(spark, pages):
+    """The one page-parse UDF carries discovery_pos unchanged, and its
+    exploded links and entries equal the pure listing parsers page by page,
+    in document order."""
     from pyspark.sql import functions as F
 
-    from icrawler_spark.parsers import udfs
+    from icrawler_spark.parsers import listing, udfs
 
     inp = (
         pages.withColumn("task", F.lit("t"))
         .withColumn("start_url", F.lit(START))
+        .withColumn("dialect", F.lit("default"))
         .withColumn("discovery_pos", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
     )
-    full = udfs.parse_pagination_links(inp)
-    slim = udfs.parse_pagination_links(inp, carry=("discovery_pos",), slim=True)
-    assert slim.columns == ["task", "page_url", "link_pos", "url", "discovery_pos"]
-    f = {(r.task, r.page_url, r.link_pos, r.url) for r in full.collect()}
-    s_rows = slim.collect()
-    assert len(s_rows) > 0
-    assert f == {(r.task, r.page_url, r.link_pos, r.url) for r in s_rows}
-    pos_by_url = {r.url: r.discovery_pos for r in inp.select("url", "discovery_pos").collect()}
-    assert all(r.discovery_pos == pos_by_url[r.page_url] for r in s_rows)
+    parsed = udfs.parse_pages(inp, carry=("discovery_pos",))
+    assert parsed.columns == ["task", "page_url", "discovery_pos", "links", "entries"]
+    rows = {r.page_url: r for r in parsed.collect()}
+    by_url = {r.url: r for r in inp.select("url", "html", "discovery_pos").collect()}
+    assert rows.keys() == by_url.keys()
+    links = {
+        (r.page_url, r.link_pos): r.url
+        for r in udfs.parse_pagination_links(inp, slim=True).collect()
+    }
+    entries = {
+        (r.page_url, r.entry_pos): r for r in udfs.parse_listing_entries(inp).collect()
+    }
+    assert links and entries
+    for url, src in by_url.items():
+        html = bytes(src.html).decode("utf-8")
+        assert rows[url].discovery_pos == src.discovery_pos
+        want_links = [x["url"] for x in listing.extract_pagination_meta(url, html, START)["links"]]
+        assert rows[url].links == want_links
+        assert [links[(url, i)] for i in range(len(want_links))] == want_links
+        want_entries = [
+            (e["serial"], e["title"], e["remark"],
+             [(d["type"], d["url"], d["title"]) for d in e["documents"]])
+            for e in listing.extract_listing_entries(url, html, "default")
+        ]
+        for got in (rows[url].entries, [entries[(url, i)] for i in range(len(want_entries))]):
+            assert [
+                (e.serial, e.title, e.remark,
+                 [(d.doc_type, d.url, d.title) for d in e.documents])
+                for e in got
+            ] == want_entries
+    assert len(links) == sum(len(r.links) for r in rows.values())
+    assert len(entries) == sum(len(r.entries) for r in rows.values())
 
 
 def test_seen_sketch_checkpointed_and_loaded_on_resume(spark, site, pages, tmp_path, monkeypatch):

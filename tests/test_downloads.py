@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import pstats
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,3 +130,53 @@ def test_engine_integrated_download(spark, site):
     want_downloaded, _wd, want_n = download_model(site, entries)
     assert _downloaded(eng.seen) == want_downloaded
     assert sum(m.files_downloaded for m in ms) >= want_n  # retries may re-mark
+
+
+def _udf_calls(spark, path: str) -> Counter:
+    """Python UDF call counts by (module file, function) since the last
+    ``spark.profile.clear()``, read back from the perf profiler's pstats."""
+    spark.profile.dump(path, type="perf")
+    files = glob.glob(os.path.join(path, "*.pstats"))
+    calls: Counter = Counter()
+    if files:
+        for (fname, _line, func), (_cc, nc, *_rest) in pstats.Stats(*files).stats.items():
+            calls[(os.path.basename(fname), func)] += nc
+    return calls
+
+
+def test_each_fetched_page_parsed_once_per_round(spark, site, tmp_path):
+    """Every fetched page is decoded and parsed exactly once per round: one
+    page-parse UDF serves the pagination walk and the entry parser, its pin
+    serves the links and every state merge, and the download stage's detail
+    attachment parse runs once per downloaded html page."""
+    pages = site_pages_df(spark, site).cache()
+    eng = CrawlEngine(
+        spark,
+        pages,
+        CrawlConfig(start_url=START, max_rounds=10, download_docs=True,
+                    checkpoint_dir=str(tmp_path / "ckpt")),
+    )
+    eng.resume_or_init()
+    html_done = 0
+    rounds = []
+    spark.profile.clear()
+    spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
+    try:
+        while eng._n_pending:
+            m = eng.run_round()
+            calls = _udf_calls(spark, str(tmp_path / f"prof_{m.round}"))
+            spark.profile.clear()
+            done = eng.seen.where(F.col("downloaded") & (F.col("doc_type") == "html")).count()
+            rounds.append((m.pages_fetched, done - html_done, calls))
+            html_done = done
+    finally:
+        spark.profile.clear()
+        spark.conf.unset("spark.sql.pyspark.udf.profiler")
+        pages.unpersist()
+    assert len(rounds) >= 2 and rounds[1][0] >= 2  # a round with history, 2+ pages
+    for n_listing, n_detail, calls in rounds:
+        assert n_detail > 0
+        assert calls[("dom.py", "parse_html")] == n_listing + n_detail
+        assert calls[("listing.py", "extract_listing_entries_default")] == n_listing
+        assert calls[("listing.py", "extract_pagination_meta")] == n_listing
+        assert calls[("listing.py", "discover_detail_attachments")] == n_detail
