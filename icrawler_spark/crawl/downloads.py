@@ -9,35 +9,43 @@ The batch dataflow runs the same rules as set operations per round:
       ⟂ scheme/type filters                      (pbc_monitor.py:525-529, 588-590)
       → verify_local: downloaded ∧ file missing → cleared   (263-300)
       → reuse: structured filename ∈ listing → mark reused  (444-464)
-      → fetch join pages → mark downloaded, local_path      (665-725)
+      → fetch semi-join pages → mark downloaded, local_path (665-725)
       → html fetches → parse_detail_attachments UDF         (532-569, 734-761)
-        → allowed filter → merge docs/seen → SECOND fetch pass (non-html by
-          construction, so the recursion terminates at depth 1)
+        → allowed filter → SECOND fetch pass (non-html by construction, so
+          the recursion terminates at depth 1)
+      → returns rows: attachment documents, attachment seen rows, marks
+
+``download_rows`` merges nothing: the crawl engine folds its rows into the
+round's one ``merge_documents`` and one ``merge_seen``, and
+``run_download_stage`` (the stand-alone stage) does the same with its own
+two merges.
 
 Downloads are idempotent per URL, so the batch outcome (downloaded set,
 document tree) equals the reference's serial walk outcome — pinned by
 tests/test_downloads.py against the extended pure-Python model.
 
-Stage counters ride as ``observe()`` metrics on the returned plan and
-resolve LAZILY (VERDICT r3 item 1): inside the crawl engine they fire with
-the per-round state pins — zero standalone count() jobs — while a direct
-caller that touches ``metrics[...]`` before any action falls back to
-count() on the stage caches, the r3 behavior. The attachment expansion is
-built unconditionally (an empty attachment set makes every added operator a
-runtime no-op under AQE's empty-relation propagation), because branching on
-the count was the one counter the plan needed eagerly.
+Stage counters ride as ``observe()`` metrics on the stage's caches and are
+read by a function the caller invokes after its own materializing action:
+inside the crawl engine they fire with the per-round state pins — zero
+standalone count() jobs — while a direct caller that reads them before any
+action falls back to count() on the stage caches. The attachment expansion
+is built unconditionally (an empty attachment set makes every added
+operator a runtime no-op under AQE's empty-relation propagation), because
+branching on the count was the one counter the plan needed eagerly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import native
 from ..functions.pandas_udfs import structured_filename as structured_filename_udf
 from ..parsers import udfs
 from .frontier import _obs_long
-from .state import merge_documents, merge_seen
+from .state import merge_documents, merge_seen, seen_rows
 
 
 def _allowed(col, allowed_types: list[str] | None):
@@ -52,41 +60,109 @@ def _norm_type():
     )
 
 
-class LazyDownloadMetrics:
-    """Mapping facade over the stage's observe()-carried counters.
+def download_rows(
+    pages: DataFrame,
+    seen: DataFrame,
+    allowed_types: list[str] | None = None,
+    existing_files: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, Callable[[], dict]]:
+    """One round's download work over the candidate set ``seen``, merging
+    nothing. Returns (atts, att_seen, marks, metrics): the attachment rows
+    for ``merge_documents``; the attachments as undownloaded seen rows and
+    one downloaded mark per fetched or reused url, both for ``merge_seen`` in
+    that order; and a function returning the stage counters. Call it AFTER
+    the caller's materializing action (the engine does, after its state
+    pins) to keep the stage count-job-free; it releases the stage caches.
 
-    First access resolves every counter (observation if its action already
-    ran, count() fallback otherwise) and releases the stage caches."""
+    ``pages`` doubles as the network: a URL "downloads" iff present there,
+    and is fetched, marked and counted once however many snapshot rows it
+    has. ``existing_files(local_path)`` is the output-dir listing for the
+    reuse-existing join."""
+    cand = (
+        seen.where(~F.coalesce("downloaded", F.lit(False)))
+        .withColumn("_ntype", _norm_type())
+        .where(native.is_supported_scheme(F.col("url")))
+        .where(_allowed(F.col("_ntype"), allowed_types))
+        .withColumn("_fname", structured_filename_udf(F.col("url"), F.col("_ntype")))
+    )
 
-    def __init__(self, resolver):
-        self._resolver = resolver
-        self._data: dict | None = None
+    # reuse-existing: expected structured filename already on disk
+    obs_reused = reused = None
+    if existing_files is not None:
+        listing = existing_files.select(F.col("local_path").alias("_fname")).distinct()
+        obs_reused = Observation()
+        reused = cand.join(F.broadcast(listing), "_fname", "left_semi").observe(
+            obs_reused, F.count(F.lit(1)).alias("n")
+        )
+        cand = cand.join(F.broadcast(listing), "_fname", "left_anti")
 
-    def _resolve(self) -> dict:
-        if self._data is None:
-            self._data = self._resolver()
-        return self._data
+    def fetch(c: DataFrame, obs: Observation) -> DataFrame:
+        # a semi-join: a url with several snapshot rows is fetched once
+        return c.join(pages.select("url"), "url", "left_semi").observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).persist()
 
-    def __getitem__(self, key):
-        return self._resolve()[key]
+    obs_first = Observation()
+    first = fetch(cand, obs_first)
 
-    def get(self, key, default=None):
-        return self._resolve().get(key, default)
+    # html fetches → one level of detail-attachment expansion. The parse's
+    # pass-through label column carries each page's entry_id. Each snapshot
+    # of a page is parsed; dropDuplicates folds identical snapshots' rows.
+    html_pages = first.where(F.col("_ntype") == "html").select(
+        F.col("entry_id").alias("task"), "url"
+    ).join(pages.select("url", "html"), "url")
+    obs_atts = Observation()
+    atts = udfs.parse_detail_attachments(html_pages).withColumn(
+        "_ntype", _norm_type()
+    ).where(
+        native.is_supported_scheme(F.col("url")) & _allowed(F.col("_ntype"), allowed_types)
+    ).select(
+        F.col("task").alias("entry_id"), "url", F.col("_ntype").alias("doc_type"), "title",
+        F.col("att_pos").cast("long").alias("_src_pos"),
+    ).dropDuplicates().observe(obs_atts, F.count(F.lit(1)).alias("n")).persist()
 
-    def __contains__(self, key):
-        return key in self._resolve()
+    # second fetch pass: attachments not already in seen, one row per url
+    # (an attachment linked from several detail pages downloads once); the
+    # newest-wins pick of merge_seen, with a total order for ties
+    newest = Window.partitionBy("url").orderBy(F.desc("_src_pos"), "entry_id", "title")
+    att_cand = (
+        atts.join(seen.select("url"), "url", "left_anti")
+        .withColumn("_rn", F.row_number().over(newest))
+        .where(F.col("_rn") == 1)
+        .select(
+            "entry_id", "url", "title", F.col("doc_type").alias("_ntype"),
+            structured_filename_udf(F.col("url"), F.col("doc_type")).alias("_fname"),
+        )
+    )
+    obs_second = Observation()
+    second = fetch(att_cand, obs_second)
 
-    def __iter__(self):
-        return iter(self._resolve())
+    def mark(df: DataFrame) -> DataFrame:
+        # one mark per url: first, second and reused are disjoint url sets
+        return df.select(
+            "url", "entry_id", "title", F.col("_ntype").alias("doc_type"),
+            F.lit(True).alias("downloaded"), F.col("_fname").alias("local_path"),
+            F.lit(0).cast("long").alias("_src_pos"),
+        )
 
-    def __len__(self):
-        return len(self._resolve())
+    marks = mark(first).unionByName(mark(second))
+    if reused is not None:
+        marks = marks.unionByName(mark(reused))
 
-    def keys(self):
-        return self._resolve().keys()
+    def metrics() -> dict:
+        n_first = _obs_long(obs_first, "n", first.count)
+        n_atts = _obs_long(obs_atts, "n", atts.count)
+        n_second = _obs_long(obs_second, "n", second.count)
+        n_reused = _obs_long(obs_reused, "n", reused.count) if reused is not None else 0
+        for df in (first, atts, second):
+            df.unpersist()
+        return {
+            "files_downloaded": n_first + n_second,
+            "files_reused": n_reused,
+            "attachments_discovered": n_atts,
+        }
 
-    def items(self):
-        return self._resolve().items()
+    return atts, seen_rows(atts), marks, metrics
 
 
 def run_download_stage(
@@ -97,15 +173,11 @@ def run_download_stage(
     allowed_types: list[str] | None = None,
     existing_files: DataFrame | None = None,
     verify_local: bool = False,
-) -> tuple[DataFrame, DataFrame, LazyDownloadMetrics]:
-    """One download round. Returns (seen', documents', lazy metrics).
-
-    ``pages`` doubles as the network: a URL "downloads" iff present there.
-    ``existing_files(local_path)`` is the output-dir listing for the
-    reuse-existing and verify-local joins. Resolve ``metrics`` AFTER the
-    caller's materializing action (the engine reads it after the state
-    pins) to keep the stage count-job-free."""
-    # verify_local: downloaded rows whose local file vanished lose the flag
+) -> tuple[DataFrame, DataFrame, Callable[[], dict]]:
+    """One download round on its own: ``download_rows`` plus one merge per
+    table. Returns (seen', documents', metrics) — ``metrics`` as in
+    ``download_rows``. ``verify_local`` first clears the flag of downloaded
+    rows whose file is missing from ``existing_files``."""
     if verify_local and existing_files is not None:
         listing = existing_files.select(F.col("local_path").alias("_lp")).distinct()
         seen = (
@@ -119,110 +191,5 @@ def run_download_stage(
             )
             .drop("_lp")
         )
-
-    cand = (
-        seen.where(~F.coalesce("downloaded", F.lit(False)))
-        .withColumn("_ntype", _norm_type())
-        .where(native.is_supported_scheme(F.col("url")))
-        .where(_allowed(F.col("_ntype"), allowed_types))
-        .withColumn("_fname", structured_filename_udf(F.col("url"), F.col("_ntype")))
-    )
-
-    # reuse-existing: expected structured filename already on disk
-    obs_reused = None
-    if existing_files is not None:
-        listing = existing_files.select(F.col("local_path").alias("_fname")).distinct()
-        obs_reused = Observation()
-        reused = cand.join(F.broadcast(listing), "_fname", "left_semi").observe(
-            obs_reused, F.count(F.lit(1)).alias("n")
-        )
-        cand = cand.join(F.broadcast(listing), "_fname", "left_anti")
-    else:
-        reused = None
-
-    def fetch_and_mark(c: DataFrame) -> DataFrame:
-        """candidates ⋈ pages → downloaded rows (url, entry_id, _ntype, _fname, html)."""
-        return c.join(pages.select("url", "html"), "url", "inner")
-
-    obs_first = Observation()
-    first = fetch_and_mark(cand).observe(obs_first, F.count(F.lit(1)).alias("n")).persist()
-
-    # html fetches → one level of detail-attachment expansion
-    html_pages = first.where(F.col("_ntype") == "html").select(
-        F.col("entry_id"), F.col("url"), F.col("html")
-    )
-    obs_atts = Observation()
-    atts = udfs.parse_detail_attachments(
-        html_pages.select(F.lit("task").alias("task"), "url", "html")
-    ).join(
-        html_pages.select(F.col("url").alias("page_url"), "entry_id"), "page_url"
-    ).withColumn("_ntype", _norm_type()).where(
-        native.is_supported_scheme(F.col("url")) & _allowed(F.col("_ntype"), allowed_types)
-    ).select(
-        "entry_id", "url", F.col("_ntype").alias("doc_type"), "title",
-        (F.col("att_pos")).cast("long").alias("_src_pos"),
-    ).observe(obs_atts, F.count(F.lit(1)).alias("n")).persist()
-
-    documents = merge_documents(documents, atts)
-    att_cand = (
-        atts.join(seen.select("url"), "url", "left_anti")
-        .withColumn("_ntype", _norm_type())
-        .withColumn("_fname", structured_filename_udf(F.col("url"), F.col("_ntype")))
-        .select("entry_id", "url", "title", "_ntype", "_fname")
-    )
-    obs_second = Observation()
-    second = (
-        fetch_and_mark(att_cand)
-        .observe(obs_second, F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-
-    def downloaded_rows(df: DataFrame) -> DataFrame:
-        # marks are per-url unique; the hash is only a deterministic
-        # (repartition-stable) tie-break for merge_seen's newest-wins window
-        return df.select(
-            "url",
-            "entry_id",
-            F.col("title"),
-            F.col("_ntype").alias("doc_type"),
-            F.lit(True).alias("downloaded"),
-            F.col("_fname").alias("local_path"),
-            F.xxhash64("url").alias("_src_pos"),
-        )
-
-    marks = downloaded_rows(first).unionByName(downloaded_rows(second))
-    att_seen = atts.select(
-        "url", "entry_id", "title", "doc_type",
-        F.lit(False).alias("downloaded"),
-        F.lit(None).cast("string").alias("local_path"),
-        "_src_pos",
-    )
-    seen = merge_seen(seen, att_seen)
-    if reused is not None:
-        marks = marks.unionByName(
-            reused.select(
-                "url", "entry_id", "title",
-                F.col("_ntype").alias("doc_type"),
-                F.lit(True).alias("downloaded"),
-                F.col("_fname").alias("local_path"),
-                F.xxhash64("url").alias("_src_pos"),
-            )
-        )
-    seen = merge_seen(seen, marks)
-
-    def _resolve() -> dict:
-        n_first = _obs_long(obs_first, "n", first.count)
-        n_atts = _obs_long(obs_atts, "n", atts.count)
-        n_second = _obs_long(obs_second, "n", second.count)
-        n_reused = (
-            _obs_long(obs_reused, "n", reused.count) if obs_reused is not None else 0
-        )
-        for df in (first, atts, second):
-            df.unpersist()
-        return {
-            "files_downloaded": n_first + n_second,
-            "files_reused": n_reused,
-            "attachments_discovered": n_atts,
-        }
-
-    return seen, documents, LazyDownloadMetrics(_resolve)
+    atts, att_seen, marks, metrics = download_rows(pages, seen, allowed_types, existing_files)
+    return merge_seen(seen, att_seen, marks), merge_documents(documents, atts), metrics

@@ -39,11 +39,13 @@ Skew: the fetch batch is repartitioned by ``pmod(xxhash64(netloc, round), N)``
 — the salt varies per round so a hot host never pins the same partition, and
 AQE's skew-join splitting covers the join side.
 
-Scale notes: per-round state merges are full-snapshot rewrites here (parquet
-stand-in); on a cluster each merge is an Iceberg ``MERGE INTO`` commit and
-the pages "fetch" join targets a url-bucketed table so only the batch side
-shuffles. The driver only ever sees counts and partition offsets — no row
-data is collected.
+Scale notes: each state table is merged once per round — the listing
+deltas and the download stage's rows (attachments, marks) fold in one
+window per table — and written as a full snapshot here (parquet stand-in);
+on a cluster each merge is an Iceberg ``MERGE INTO`` commit and the pages
+"fetch" join targets a url-bucketed table so only the batch side shuffles.
+The driver only ever sees counts and partition offsets — no row data is
+collected.
 """
 
 from __future__ import annotations
@@ -57,7 +59,9 @@ from pyspark.sql import functions as F
 
 from ..parsers import udfs
 from . import bloom as bloom_mod
-from .state import SnapshotStore, merge_documents, merge_entries, merge_seen, resolve_entry_identity
+from .state import (
+    SnapshotStore, merge_documents, merge_entries, merge_seen, resolve_entry_identity, seen_rows,
+)
 
 
 @dataclass
@@ -860,10 +864,11 @@ class CrawlEngine:
         _mark("positions(plan)")
 
         # entries/documents/seen merge (the listing side of the round).
-        # Counters observe the parse output and fire with the entries/
-        # documents pins below — no standalone count jobs.
+        # Counters observe the identity pin — no standalone count jobs.
         n_entries = n_docs = 0
-        obs_entries = obs_docs = None
+        with_ids = None
+        docs_new: list[DataFrame] = []
+        seen_new: list[DataFrame] = []
         if cfg.parse_entries:
             parsed = parsed_pages.select(
                 "task",
@@ -878,45 +883,48 @@ class CrawlEngine:
                 (F.col("discovery_pos") * self._ENTRY_STRIDE + F.col("entry_pos")).alias("_src_pos"),
             )
             obs_entries = Observation(f"entries_r{rnd}")
-            with_ids = resolve_entry_identity(parsed, self.documents).observe(
-                obs_entries, F.count(F.lit(1)).alias("n")
+            # pinned once: the entries, documents and seen merges all read it
+            with_ids = (
+                resolve_entry_identity(parsed, self.documents)
+                .observe(obs_entries, F.count(F.lit(1)).alias("n"),
+                         F.sum(F.size("documents")).alias("n_docs"))
+                .localCheckpoint(eager=True)
             )
             batch_entries = with_ids.select("entry_id", "task", "serial", "title", "remark", "_src_pos")
-            obs_docs = Observation(f"docs_r{rnd}")
-            batch_docs = (
-                with_ids.select("entry_id", "_src_pos", F.posexplode("documents").alias("_p", "_d"))
-                .select(
-                    "entry_id",
-                    F.col("_d.url").alias("url"),
-                    F.col("_d.doc_type").alias("doc_type"),
-                    F.col("_d.title").alias("title"),
-                    (F.col("_src_pos") * self._DOC_STRIDE + F.col("_p")).alias("_src_pos"),
-                )
-                .observe(obs_docs, F.count(F.lit(1)).alias("n"))
+            batch_docs = with_ids.select(
+                "entry_id", "_src_pos", F.posexplode("documents").alias("_p", "_d")
+            ).select(
+                "entry_id",
+                F.col("_d.url").alias("url"),
+                F.col("_d.doc_type").alias("doc_type"),
+                F.col("_d.title").alias("title"),
+                (F.col("_src_pos") * self._DOC_STRIDE + F.col("_p")).alias("_src_pos"),
             )
+            n_entries = _obs_long(obs_entries, "n", with_ids.count)
+            n_docs = _obs_long(obs_entries, "n_docs", batch_docs.count)
             self.entries = merge_entries(self.entries, batch_entries)
-            self.documents = merge_documents(self.documents, batch_docs)
-            batch_seen = batch_docs.select(
-                "url", "entry_id", "title", "doc_type",
-                F.lit(False).alias("downloaded"), F.lit(None).cast("string").alias("local_path"),
-                "_src_pos",
-            )
-            self.seen = merge_seen(self.seen, batch_seen)
+            docs_new.append(batch_docs)
+            seen_new.append(seen_rows(batch_docs))
 
-        # document download stage (ref pbc_monitor.py:572-813 work-queue).
-        # Its metrics are observe()-carried and LAZY: resolved after the
-        # seen/documents pins below, so the stage adds no count() jobs.
+        # document download stage (ref pbc_monitor.py:572-813 work-queue)
+        # over the candidate view (seen with this round's listing documents
+        # folded in). It returns rows; the one documents merge and the one
+        # seen merge below fold them with the listing deltas. Its metrics are
+        # observe()-carried, read after the pins: no count() jobs.
+        cand_seen = merge_seen(self.seen, *seen_new) if seen_new else self.seen
         dl_metrics = None
-        if cfg.download_docs and self.seen is not None:
-            from .downloads import run_download_stage
+        if cfg.download_docs and cand_seen is not None:
+            from .downloads import download_rows
 
-            self.seen, self.documents, dl_metrics = run_download_stage(
-                self.spark,
-                self.pages,
-                self.seen,
-                self.documents,
-                allowed_types=cfg.allowed_types,
+            atts, att_seen, marks, dl_metrics = download_rows(
+                self.pages, cand_seen, allowed_types=cfg.allowed_types
             )
+            docs_new.append(atts)
+            seen_new += [att_seen, marks]
+        if docs_new:
+            self.documents = merge_documents(self.documents, *docs_new)
+        if seen_new:
+            self.seen = merge_seen(self.seen, *seen_new)
 
         # fold state, update bloom with this round's batch, pin lineage.
         # (the visited delta was pinned up front, before the parse stage)
@@ -945,16 +953,10 @@ class CrawlEngine:
         self.documents = self._pin(self.documents, rnd, "documents")
         self.seen = self._pin(self.seen, rnd, "seen")
 
-        # deep observations (fired by the pins); cached-input fallbacks cover
-        # AQE-pruned end-of-crawl rounds (n_links was read at the links pin)
-        if obs_entries is not None:
-            n_entries = _obs_long(obs_entries, "n", with_ids.count)
-        if obs_docs is not None:
-            n_docs = _obs_long(obs_docs, "n", batch_docs.count)
         n_dl = n_reused = 0
         if dl_metrics is not None:
-            n_dl = dl_metrics["files_downloaded"]
-            n_reused = dl_metrics["files_reused"]
+            dl = dl_metrics()
+            n_dl, n_reused = dl["files_downloaded"], dl["files_reused"]
         n_new = self._n_pending - n_deferred
         # dense rounds consume exactly n_new ids; sparse big rounds consume
         # the span _assign_positions reserved (near-dense: ≈ raw link count)
@@ -978,6 +980,8 @@ class CrawlEngine:
         batch.unpersist()
         fetch_cache.unpersist()
         parsed_pages.unpersist()
+        if with_ids is not None:
+            with_ids.unpersist()
         if self.store is None and prev_pending is not None:
             prev_pending.unpersist()
         # the round's bloom broadcast (megabytes per round at real capacity)

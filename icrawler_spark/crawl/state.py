@@ -15,21 +15,24 @@ gives the two properties the north_rule demands:
 On a real cluster these tables are Iceberg ``MERGE INTO`` targets; the merge
 functions below implement the same upsert semantics as deterministic
 DataFrame batch operations (one merge per table per round — SURVEY §4 hard
-part (d)).
+part (d)): ``merge_seen`` and ``merge_documents`` fold all of a round's
+deltas in one window, ordered by generation (``existing`` = 0), then
+``_src_pos``.
 
 Merge semantics replicated from the reference:
-- ``merge_seen``     — per-URL upsert; ``downloaded`` is never un-set
-                       (ref state.py:164-172, 186-228)
+- ``merge_seen``     — per-URL upsert, newest generation first; ``downloaded``
+                       is never un-set (ref state.py:164-172, 186-228)
 - ``resolve_entry_identity`` — incoming entries adopt the entry_id of any
                        existing entry sharing a document URL; otherwise a
                        derived id: first html doc url → first doc url →
                        title::remark → serial::N (ref state.py:17-44, 56-132)
-- ``merge_documents`` — per-(entry,url) dedup, first-wins in discovery order
-                       (ref state.py:134-184)
+- ``merge_documents`` — per-(entry,url) dedup, oldest generation first, then
+                       first-wins in discovery order (ref state.py:134-184)
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -68,32 +71,54 @@ class SnapshotStore:
 # --- merge semantics ----------------------------------------------------------
 
 
-def merge_seen(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-    """MERGE INTO seen USING batch ON url (ref state.py:173-228).
+def _with_pos(df: DataFrame) -> DataFrame:
+    """Rows without ``_src_pos`` get a deterministic content-hash
+    pseudo-order (repartition-stable) — never ``monotonically_increasing_id``,
+    whose partition-layout dependence would make the winner flip under an
+    upstream repartition."""
+    if "_src_pos" in df.columns:
+        return df
+    return df.withColumn("_src_pos", F.xxhash64(*[F.col(c) for c in df.columns]))
+
+
+def _generations(existing: DataFrame | None, deltas: tuple[DataFrame, ...], cols: list[str]) -> DataFrame:
+    """``existing`` as generation 0 (``_src_pos`` −1 where it has none) stacked
+    with ``deltas[i]`` as generation i+1, projected to ``cols``."""
+    if existing is not None and "_src_pos" not in existing.columns:
+        existing = existing.withColumn("_src_pos", F.lit(-1).cast("long"))
+    parts = [] if existing is None else [existing.select(*cols, F.lit(0).alias("_gen"))]
+    parts += [_with_pos(d).select(*cols, F.lit(g).alias("_gen")) for g, d in enumerate(deltas, 1)]
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def seen_rows(docs: DataFrame) -> DataFrame:
+    """Document rows as not-yet-downloaded ``merge_seen`` delta rows."""
+    return docs.select(
+        "url", "entry_id", "title", "doc_type", F.lit(False).alias("downloaded"),
+        F.lit(None).cast("string").alias("local_path"), "_src_pos",
+    )
+
+
+def merge_seen(existing: DataFrame | None, *deltas: DataFrame) -> DataFrame:
+    """MERGE INTO seen USING each delta ON url (ref state.py:173-228), every
+    delta of a round folded in ONE window.
 
     - new URLs are inserted;
     - matched URLs take the NEWEST provided (non-null) title/type/path —
       ``mark_downloaded`` overwrites these fields in the reference
       (state.py:186-228) — while ``downloaded`` only ever upgrades
       false→true (state.py:164-172);
-    - batch order is discovery order (``_src_pos``), newest = greatest.
+    - newest = the latest delta, then the greatest ``_src_pos`` (discovery
+      order) within it; ``existing`` is oldest.
 
-    Batches without ``_src_pos`` get a deterministic content-hash
-    pseudo-order (repartition-stable) — never
-    ``monotonically_increasing_id``, whose partition-layout dependence
-    would make the winner flip under an upstream repartition.
-    """
-    b = batch
-    if "_src_pos" not in b.columns:
-        b = b.withColumn("_src_pos", F.xxhash64(*[F.col(c) for c in b.columns]))
-    b = b.withColumn("_is_new", F.lit(1))
-    if existing is not None:
-        e = existing.withColumn("_src_pos", F.lit(-1).cast("long")).withColumn("_is_new", F.lit(0))
-        b = e.unionByName(b.select(*e.columns))
-    newest = Window.partitionBy("url").orderBy(F.desc("_is_new"), F.desc("_src_pos")).rowsBetween(
+    Equal to folding the deltas one merge at a time, in the given order."""
+    cols = ["url", "entry_id", "title", "doc_type", "downloaded", "local_path", "_src_pos"]
+    b = _generations(existing, deltas, cols)
+    order = (F.desc("_gen"), F.desc("_src_pos"))
+    newest = Window.partitionBy("url").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    pick = Window.partitionBy("url").orderBy(F.desc("_is_new"), F.desc("_src_pos"))
+    pick = Window.partitionBy("url").orderBy(*order)
     # truthy-wins like the reference file records (state.py:173-184): an
     # empty-string title/type/path never overwrites a real value
     return (
@@ -174,28 +199,24 @@ def resolve_entry_identity(new_entries: DataFrame, existing_documents: DataFrame
     )
 
 
-def merge_documents(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-    """Per-(entry_id, url) dedup, existing rows win, then first-in-batch
-    (ref state.py:134-184). batch: (entry_id, url, doc_type, title, _src_pos).
+def merge_documents(existing: DataFrame | None, *deltas: DataFrame) -> DataFrame:
+    """Per-(entry_id, url) dedup in ONE window over every delta of a round
+    (ref state.py:134-184): existing rows win, then the earliest delta, then
+    first-in-delta (least ``_src_pos``) — equal to folding the deltas one
+    merge at a time, in the given order. Each delta: (entry_id, url,
+    doc_type, title, _src_pos).
 
     The output RETAINS ``_src_pos`` (each row's original discovery
     position): downstream consumers — the state-export document arrays and
     the search index's best_path pick — need the insertion order the
     reference preserves, and it must survive merges as data."""
-    b = batch
-    if "_src_pos" not in b.columns:
-        b = b.withColumn("_src_pos", F.xxhash64(*[F.col(c) for c in b.columns]))
-    b = b.withColumn("_is_new", F.lit(1))
-    if existing is not None:
-        e = existing.withColumn("_is_new", F.lit(0))
-        if "_src_pos" not in e.columns:
-            e = e.withColumn("_src_pos", F.lit(-1).cast("long"))
-        b = e.select(*b.columns).unionByName(b)
-    w = Window.partitionBy("entry_id", "url").orderBy("_is_new", "_src_pos")
+    cols = ["entry_id", "url", "doc_type", "title", "_src_pos"]
+    w = Window.partitionBy("entry_id", "url").orderBy("_gen", "_src_pos")
     return (
-        b.withColumn("_rn", F.row_number().over(w))
+        _generations(existing, deltas, cols)
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select("entry_id", "url", "doc_type", "title", "_src_pos")
+        .select(*cols)
     )
 
 
@@ -222,11 +243,8 @@ def merge_entries(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
     still computed relationally and fed in as columns.
 
     batch: (entry_id, task, serial, title, remark, _src_pos)."""
-    b = batch
-    if "_src_pos" not in b.columns:
-        b = b.withColumn("_src_pos", F.xxhash64(*[F.col(c) for c in b.columns]))
     first_w = Window.partitionBy("entry_id").orderBy("_src_pos")
-    b = b.withColumn("_rn", F.row_number().over(first_w)).where(F.col("_rn") == 1).drop("_rn")
+    b = _with_pos(batch).withColumn("_rn", F.row_number().over(first_w)).where(F.col("_rn") == 1).drop("_rn")
 
     if existing is None:
         e_max = F.lit(0).cast("int")

@@ -158,10 +158,11 @@ def download_from_structure_action(spark: SparkSession, pages: DataFrame,
                 "downloaded boolean, local_path string, _src_pos long"))
     seen, documents, metrics = run_download_stage(
         spark, pages, seen, documents, allowed_types=task.allowed_types or None)
+    counts = metrics()
     return {
         "task": task.name,
-        "files_downloaded": metrics["files_downloaded"],
-        "files_reused": metrics["files_reused"],
+        "files_downloaded": counts["files_downloaded"],
+        "files_reused": counts["files_reused"],
         "state": json.loads(state_export_json(entries, documents, seen)),
     }
 

@@ -52,7 +52,7 @@ def test_download_metrics_need_no_count_jobs(spark, site, crawled):
 
     _CDF.count = _forbidden
     try:
-        resolved = dict(metrics.items())
+        resolved = metrics()
     finally:
         _CDF.count = orig
     entries = crawl_model_docs(site, START)
@@ -67,9 +67,10 @@ def test_download_parity_with_model(spark, site, crawled):
     entries = crawl_model_docs(site, START)
     want_downloaded, want_docs, want_n = download_model(site, entries)
     assert _downloaded(seen2) == want_downloaded
-    assert metrics["files_downloaded"] == want_n
+    resolved = metrics()
+    assert resolved["files_downloaded"] == want_n
     # detail expansion discovered the docx attachments
-    assert metrics["attachments_discovered"] > 0
+    assert resolved["attachments_discovered"] > 0
     att_urls = {r.url for r in docs2.collect() if "att_" in r.url}
     assert att_urls == {u for u in want_docs if "att_" in u}
     # downloaded rows carry a structured local_path
@@ -100,7 +101,7 @@ def test_download_reuse_existing(spark, site, crawled):
     seen2, _docs, metrics = run_download_stage(
         spark, pages, eng.seen, eng.documents, existing_files=listing
     )
-    assert metrics["files_reused"] == 2
+    assert metrics()["files_reused"] == 2
     # reused urls end up downloaded without a fetch
     assert _downloaded(seen2) >= _downloaded(seen_full)
 
@@ -114,7 +115,7 @@ def test_verify_local_clears_missing_files(spark, site, crawled):
     seen2, _d, metrics = run_download_stage(
         spark, pages, seen_full, docs_full, existing_files=empty_listing, verify_local=True
     )
-    assert metrics["files_downloaded"] > 0  # re-downloads happened
+    assert metrics()["files_downloaded"] > 0  # re-downloads happened
     assert _downloaded(seen2) == _downloaded(seen_full)
 
 
@@ -129,7 +130,32 @@ def test_engine_integrated_download(spark, site):
     entries = crawl_model_docs(site, START)
     want_downloaded, _wd, want_n = download_model(site, entries)
     assert _downloaded(eng.seen) == want_downloaded
-    assert sum(m.files_downloaded for m in ms) >= want_n  # retries may re-mark
+    assert sum(m.files_downloaded for m in ms) == want_n
+
+
+def test_shared_attachment_downloads_once(spark):
+    """Three detail pages of one listing page link the same attachment: the
+    round fetches, marks and counts it once (as the serial model does), and
+    the seen rows do not depend on the input's partitioning."""
+    site = build_site(n_pages=2, entries_per_page=3, with_attachments=True)
+    shared = "https://www.example.test/files/att_shared.docx"
+    for serial in (1, 2, 3):
+        site[f"https://www.example.test/list/detail_{serial}.html"] = (
+            f"<html><body><h1>公告{serial}号文件</h1>"
+            f"<a href='/files/att_shared.docx'>共用附件{serial}</a></body></html>"
+        )
+    site[shared] = b"PK fake shared docx payload"
+    want_downloaded, _wd, want_n = download_model(site, crawl_model_docs(site, START))
+    assert shared in want_downloaded
+    seen_rows = []
+    for n_parts in (1, 4):
+        pages = site_pages_df(spark, site).repartition(n_parts)
+        eng = CrawlEngine(spark, pages, CrawlConfig(start_url=START, max_rounds=10, download_docs=True))
+        ms = eng.run()
+        assert sum(m.files_downloaded for m in ms) == want_n
+        assert _downloaded(eng.seen) == want_downloaded
+        seen_rows.append(sorted(tuple(r) for r in eng.seen.collect()))
+    assert seen_rows[0] == seen_rows[1]
 
 
 def _udf_calls(spark, path: str) -> Counter:

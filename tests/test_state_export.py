@@ -12,7 +12,7 @@ from icrawler_spark.crawl.export import (
     state_export_df,
     state_export_json,
 )
-from icrawler_spark.crawl.state import merge_seen
+from icrawler_spark.crawl.state import merge_documents, merge_seen
 
 
 @pytest.fixture()
@@ -127,6 +127,44 @@ def test_merge_seen_never_unsets_downloaded(spark):
     out = merge_seen(seen, batch).collect()
     assert len(out) == 1
     assert out[0].downloaded is True  # ref state.py:164-172
+
+
+_SEEN = ("url string, entry_id string, title string, doc_type string, "
+         "downloaded boolean, local_path string")
+_DOCS = "entry_id string, url string, doc_type string, title string, _src_pos long"
+
+
+def test_multi_delta_merge_equals_nested_merges(spark):
+    """One window over every delta equals folding them one merge at a time:
+    newest non-empty fields win, ``downloaded`` only upgrades, existing
+    document rows win before any delta's position."""
+    seen = spark.createDataFrame(
+        [("u1", "e0", "old", "pdf", False, "p0"), ("u2", "e0", None, None, False, None)], _SEEN)
+    s1 = spark.createDataFrame(
+        [("u1", "e1", "", "pdf", True, "p1", 5), ("u3", "e1", "t3", "pdf", False, None, 1),
+         ("u3", "e1", None, "word", False, "", 2)], _SEEN + ", _src_pos long")
+    s2 = spark.createDataFrame(  # no _src_pos: content-hash pseudo-order
+        [("u1", "e2", None, None, False, None), ("u2", "e2", "", "html", False, "")], _SEEN)
+    s3 = spark.createDataFrame(
+        [("u1", None, "new", "", False, None, 0), ("u3", "e3", "t3b", None, True, "p3", 9)],
+        _SEEN + ", _src_pos long")
+    nested = merge_seen(merge_seen(merge_seen(seen, s1), s2), s3)
+    assert sorted(merge_seen(seen, s1, s2, s3).collect()) == sorted(nested.collect())
+    u1 = next(r for r in nested.collect() if r.url == "u1")
+    assert (u1.entry_id, u1.title, u1.downloaded, u1.local_path) == ("e2", "new", True, "p1")
+
+    docs = spark.createDataFrame(
+        [("e1", "u1", "pdf", "listed", 30), ("e1", "u2", "pdf", "", 40)], _DOCS)
+    d1 = spark.createDataFrame(  # the listing rows of a round
+        [("e1", "u1", "pdf", "again", 1), ("e2", "u3", "docx", "listing", 20),
+         ("e2", "u4", "pdf", None, 21)], _DOCS)
+    d2 = spark.createDataFrame(  # attachments: smaller positions, same keys
+        [("e2", "u3", "docx", "attachment", 0), ("e2", "u4", "pdf", "att", 1),
+         ("e3", "u5", "docx", "", 0)], _DOCS)
+    nested = merge_documents(merge_documents(docs, d1), d2)
+    assert sorted(merge_documents(docs, d1, d2).collect()) == sorted(nested.collect())
+    by_key = {(r.entry_id, r.url): r.title for r in nested.collect()}
+    assert (by_key[("e1", "u1")], by_key[("e2", "u3")]) == ("listed", "listing")
 
 
 def test_compact_tables_collapses_shared_urls(spark):
