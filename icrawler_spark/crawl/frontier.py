@@ -581,15 +581,6 @@ class CrawlEngine:
         cfg = self.cfg
         rnd = self._round
         t0 = time.time()
-        _prof = os.environ.get("ICRAWLER_PROFILE") == "1"
-        _last = [t0]
-
-        def _mark(stage: str) -> None:
-            if _prof:
-                now = time.time()
-                print(f"[round {rnd}] {stage}: {now - _last[0]:.1f}s", flush=True)
-                _last[0] = now
-
         pending = self.pending
         n_pending_before = self._n_pending
         order = [F.asc("discovered_round"), F.asc("discovery_pos")]
@@ -701,7 +692,6 @@ class CrawlEngine:
         )
         n_missing = n_batch - n_fetched
         n_deferred = n_pending_before - n_batch
-        _mark("fetch+pin_visited")
 
         # GreedyImageCrawler mode: harvest this round's image targets from
         # the fetched html (columnar extractor — zero Python), first-wins per
@@ -743,7 +733,6 @@ class CrawlEngine:
             )
             merged = delta if self.images is None else self.images.unionByName(delta)
             self.images = self._pin(merged, rnd, "images")
-            _mark("images")
 
         # ONE parse per fetched page (Arrow-batched UDF): pagination links
         # always, listing entries when the round merges them. The output is
@@ -806,7 +795,6 @@ class CrawlEngine:
         n_links = _obs_long(obs_links, "n_links", links.count)
         big_round = n_links > self._BIG_ROUND_THRESHOLD
         self._last_big_round = big_round
-        _mark("parse+pin_pages")
 
         # seen-set filtering FIRST, dedup-window SECOND. Order is semantics-
         # preserving: the bloom verdict and both anti-joins are url-level —
@@ -844,7 +832,6 @@ class CrawlEngine:
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        _mark("dedup+bloom+anti(plan)")
         if deferred is not None:
             new_links = new_links.join(deferred.select("url"), "url", "left_anti")
 
@@ -861,7 +848,6 @@ class CrawlEngine:
             "discovered_round",
             "discovery_pos",
         )
-        _mark("positions(plan)")
 
         # entries/documents/seen merge (the listing side of the round).
         # Counters observe the identity pin — no standalone count jobs.
@@ -935,7 +921,6 @@ class CrawlEngine:
         self.pending = self.pending.observe(obs_pending, F.count(F.lit(1)).alias("n"))
         if cfg.use_bloom:
             self._bloom_add_batch(batch)
-        _mark("bloom_add")
 
         prev_pending = pending
         if self.store is None and big_round:
@@ -948,7 +933,6 @@ class CrawlEngine:
         else:
             self.pending = self._pin(self.pending, rnd, "pending")
             self._n_pending = _obs_long(obs_pending, "n", self.pending.count)
-        _mark("pin_pending")
         self.entries = self._pin(self.entries, rnd, "entries")
         self.documents = self._pin(self.documents, rnd, "documents")
         self.seen = self._pin(self.seen, rnd, "seen")

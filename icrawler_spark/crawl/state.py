@@ -10,14 +10,15 @@ gives the two properties the north_rule demands:
   disk (write-ahead ordering, rename-free because parquet dirs are written
   once and never mutated);
 - *per-partition lineage/metrics*: each round commits a metrics table keyed
-  by (round, stage) with row counts per stage.
+  by round, with the round's counters.
 
 On a real cluster these tables are Iceberg ``MERGE INTO`` targets; the merge
 functions below implement the same upsert semantics as deterministic
 DataFrame batch operations (one merge per table per round — SURVEY §4 hard
-part (d)): ``merge_seen`` and ``merge_documents`` fold all of a round's
-deltas in one window, ordered by generation (``existing`` = 0), then
-``_src_pos``.
+part (d)) of one shape: ``_generations`` stacks ``existing`` as generation 0
+with the round's deltas after it, and one window keyed by the table's key,
+ordered by generation, then ``_src_pos``, folds them. ``merge_seen``,
+``merge_documents`` and ``merge_entries`` all take it.
 
 Merge semantics replicated from the reference:
 - ``merge_seen``     — per-URL upsert, newest generation first; ``downloaded``
@@ -28,6 +29,10 @@ Merge semantics replicated from the reference:
                        title::remark → serial::N (ref state.py:17-44, 56-132)
 - ``merge_documents`` — per-(entry,url) dedup, oldest generation first, then
                        first-wins in discovery order (ref state.py:134-184)
+- ``merge_entries``  — per-entry upsert: an existing entry keeps its task and
+                       serial and takes the batch's title/remark; a new entry
+                       gets a serial from the reference's sequential walk, one
+                       per task (ref state.py:56-132)
 """
 
 from __future__ import annotations
@@ -221,108 +226,79 @@ def merge_documents(existing: DataFrame | None, *deltas: DataFrame) -> DataFrame
 
 
 def merge_entries(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-    """Entry metadata upsert (ref state.py:56-132): matched entries update
-    title/remark in place but KEEP their existing serial; new entries keep a
-    valid unconflicted serial, otherwise get the reference's sequential
-    ``next_serial`` (current max + 1 at their processing position).
+    """Entry metadata upsert (ref state.py:56-132) in the generation shape
+    of the other merges: ``existing`` is generation 0, ``batch`` is 1, and
+    ONE window per ``entry_id`` folds them.
 
-    The reference processes entries one at a time, and ``serial_in_use``
-    (ref state.py:110-118) includes serials kept/ASSIGNED by earlier entries
-    of the same batch — so a literal serial equal to a value the walk just
-    assigned must itself be reassigned. Cleanliness is therefore
-    data-dependent on earlier assignments: a forward recurrence no fixed
-    window expression can close over (a window formula misses the
-    literal-equals-earlier-assigned collision, e.g. batch
-    [(A, None), (B, 1)] must yield A=1, B=2). The conflict path runs as one
-    Arrow group walk PER TASK over the fresh rows — serial uniqueness in the
-    reference is per state file, i.e. per task (ref state.py:368-381), so
-    tasks are independent serial spaces and walk in parallel; entries per
-    task per round are listing rows (10^3-10^4), the same cost class as the
-    global window it replaces — never the URL frontier. Static facts
-    (membership in the task's existing serials, the task's existing max) are
-    still computed relationally and fed in as columns.
+    - the oldest row (``_gen``, then ``_src_pos``) supplies task and serial:
+      a matched entry KEEPS its task and serial, a new entry takes its first
+      batch row;
+    - title/remark = the first batch row's value, else the existing one
+      (a NULL falls back, ``''`` overwrites);
+    - ``_fresh`` marks an entry with no generation-0 row.
 
-    batch: (entry_id, task, serial, title, remark, _src_pos)."""
-    first_w = Window.partitionBy("entry_id").orderBy("_src_pos")
-    b = _with_pos(batch).withColumn("_rn", F.row_number().over(first_w)).where(F.col("_rn") == 1).drop("_rn")
+    New entries keep a valid unconflicted serial, otherwise get the
+    reference's sequential ``next_serial`` (current max + 1 at their
+    processing position). The reference processes entries one at a time,
+    and ``serial_in_use`` (ref state.py:110-118) includes serials
+    kept/ASSIGNED by earlier entries of the same batch — so a literal serial
+    equal to a value the walk just assigned must itself be reassigned.
+    Cleanliness is therefore data-dependent on earlier assignments: a
+    forward recurrence no fixed window expression can close over (a window
+    formula misses the literal-equals-earlier-assigned collision, e.g. batch
+    [(A, None), (B, 1)] must yield A=1, B=2). So the walk is one Arrow group
+    PER TASK over all of the task's rows: serial uniqueness in the reference
+    is per state file, i.e. per task (ref state.py:368-381), so tasks are
+    independent serial spaces and walk in parallel. Existing rows pass
+    through and seed the walk's used set and running max; a task's rows are
+    its listing (10^3-10^4, the reference's one JSON state file) — never
+    the URL frontier.
 
-    if existing is None:
-        e_max = F.lit(0).cast("int")
-        fresh = b
-        updated = None
-    else:
-        e = existing
-        updated = (
-            e.alias("e")
-            .join(b.alias("b"), "entry_id", "left")
-            .select(
-                "entry_id",
-                F.col("e.task").alias("task"),
-                F.col("e.serial").alias("serial"),  # keep existing serial
-                F.coalesce(F.col("b.title"), F.col("e.title")).alias("title"),
-                F.coalesce(F.col("b.remark"), F.col("e.remark")).alias("remark"),
-            )
+    batch: (entry_id, task, serial, title, remark[, _src_pos])."""
+    cols = ["entry_id", "task", "serial", "title", "remark", "_src_pos"]
+    w = Window.partitionBy("entry_id").orderBy("_gen", "_src_pos")
+    every = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    first_b = F.first(F.when(F.col("_gen") > 0, F.struct("title", "remark")), ignorenulls=True).over(every)
+    folded = (
+        _generations(existing, (batch,), cols)
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("_b", first_b)
+        .where(F.col("_rn") == 1)
+        .select(
+            "entry_id", "task", "serial",
+            F.coalesce(F.col("_b.title"), F.col("title")).alias("title"),
+            F.coalesce(F.col("_b.remark"), F.col("remark")).alias("remark"),
+            "_src_pos", (F.col("_gen") > 0).alias("_fresh"),
         )
-        fresh = b.join(e.select("entry_id"), "entry_id", "left_anti")
-        # serial uniqueness is PER STATE FILE in the reference — one file per
-        # task (ref state.py:368-381) — so both the taken-set and the running
-        # max are task-scoped, not global
-        taken = e.select("task", "serial").where(F.col("serial").isNotNull()).distinct()
-        fresh = fresh.join(
-            taken.withColumn("_taken", F.lit(True)), ["task", "serial"], "left"
-        )
-        e_max = None  # joined below
+    )
 
-    if existing is not None:
-        max_serial = existing.groupBy("task").agg(
-            F.coalesce(F.max("serial"), F.lit(0)).alias("_emax")
-        )
-        fresh = fresh.join(F.broadcast(max_serial), "task", "left").withColumn(
-            "_emax", F.coalesce(F.col("_emax"), F.lit(0))
-        )
-    else:
-        fresh = fresh.withColumn("_taken", F.lit(None).cast("boolean")).withColumn(
-            "_emax", F.lit(0)
-        )
-
-    # Exact sequential walk (ref state.py:124-132): a serial is kept iff
-    # valid (>0), unused by existing entries (_taken), and unused by earlier
-    # kept/ASSIGNED serials of the same batch; otherwise next_serial =
-    # running max + 1. Assigned values always exceed every existing serial
-    # (max+1), so only batch-internal collisions need the dynamic set.
+    # Exact sequential walk (ref state.py:124-132): a fresh row keeps its
+    # serial iff valid (>0) and unused by the task's existing entries and by
+    # earlier kept/ASSIGNED serials of the batch; otherwise next_serial =
+    # running max + 1.
     def _serial_walk(pdf):
         import pandas as pd
 
         pdf = pdf.sort_values("_src_pos", kind="mergesort").reset_index(drop=True)
-        mx = int(pdf["_emax"].iloc[0]) if len(pdf) else 0
-        used: set = set()
+        old = pdf["serial"].where(~pdf["_fresh"]).dropna().astype("int64")
+        used = set(old.tolist())
+        mx = int(old.max()) if len(old) else 0
         out = []
-        for s, taken in zip(pdf["serial"], pdf["_taken"]):
-            keep = (
-                s is not None
-                and not pd.isna(s)
-                and int(s) > 0
-                and not (taken == True)  # noqa: E712 — handles np.bool_/NaN/None
-                and int(s) not in used
-            )
-            v = int(s) if keep else mx + 1
+        for s, fresh in zip(pdf["serial"], pdf["_fresh"]):
+            if not fresh:
+                out.append(None if pd.isna(s) else int(s))
+                continue
+            v = int(s) if not pd.isna(s) and int(s) > 0 and int(s) not in used else mx + 1
             used.add(v)
-            if v > mx:
-                mx = v
+            mx = max(mx, v)
             out.append(v)
-        pdf = pdf.assign(serial=pd.Series(out, dtype="int32"))
+        pdf = pdf.assign(serial=pd.array(out, dtype="Int32"))
         return pdf[["entry_id", "task", "serial", "title", "remark"]]
 
-    # one Arrow group PER TASK (the reference's serial space is the state
-    # file = the task): tasks walk in parallel, and no single executor ever
-    # holds more than one task's listing rows (10^3-10^4 each)
-    inserted = fresh.groupBy("task").applyInPandas(
+    return folded.groupBy("task").applyInPandas(
         _serial_walk,
         "entry_id string, task string, serial int, title string, remark string",
     )
-    if updated is None:
-        return inserted
-    return updated.unionByName(inserted)
 
 
 def compact_tables(entries: DataFrame, documents: DataFrame) -> tuple[DataFrame, DataFrame, dict]:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from icrawler_spark.crawl.state import merge_entries
 from icrawler_spark.queries.analytics import (
     pricing_summary,
     revenue_by_nation,
@@ -106,6 +107,24 @@ def test_no_cartesian_products_in_registry(spark):
         if "BroadcastNestedLoopJoin" in plan and name not in bnlj_ok:
             offenders.append((name, "BroadcastNestedLoopJoin"))
     assert not offenders, offenders
+
+
+def test_merge_entries_is_one_window_and_one_walk(spark):
+    """The entries upsert is the generation shape of the other state
+    merges: one ``entry_id`` window over existing + batch, then one
+    per-task serial walk — no join back to existing, so two shuffles."""
+    existing = spark.createDataFrame(
+        [("e1", "t", 1, "a", ""), ("e2", "t", None, "b", "")],
+        "entry_id string, task string, serial int, title string, remark string",
+    )
+    batch = spark.createDataFrame(
+        [("e1", "t", 5, "a2", "", 0), ("e3", "t", 1, "c", "", 1)],
+        "entry_id string, task string, serial int, title string, remark string, _src_pos long",
+    )
+    plan = _plan(merge_entries(existing, batch))
+    assert "Join" not in plan, plan
+    shuffles = [ln for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert len(shuffles) <= 2, plan
 
 
 def test_aqe_enabled(spark):

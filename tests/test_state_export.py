@@ -6,13 +6,19 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from icrawler_spark.crawl.export import (
     legacy_state_to_entries,
     state_export_df,
     state_export_json,
 )
-from icrawler_spark.crawl.state import merge_documents, merge_seen
+from icrawler_spark.crawl.state import (
+    merge_documents,
+    merge_entries,
+    merge_seen,
+    resolve_entry_identity,
+)
 
 
 @pytest.fixture()
@@ -165,6 +171,84 @@ def test_multi_delta_merge_equals_nested_merges(spark):
     assert sorted(merge_documents(docs, d1, d2).collect()) == sorted(nested.collect())
     by_key = {(r.entry_id, r.url): r.title for r in nested.collect()}
     assert (by_key[("e1", "u1")], by_key[("e2", "u3")]) == ("listed", "listing")
+
+
+_ENTRIES = "entry_id string, task string, serial int, title string, remark string"
+_PARSED = ("task string, page_url string, entry_pos int, serial int, title string, "
+           "remark string, documents array<struct<doc_type:string,url:string,title:string>>, "
+           "_src_pos long")
+
+
+def _apply_batches(spark, batches, n_parts, entries=None, documents=None, src_pos=True):
+    """Resolve and merge parsed-entry batches one round at a time. Each
+    event is (task, serial, title, [doc urls]); ``_src_pos`` runs across
+    batches in event order."""
+    pos = 0
+    for batch in batches:
+        rows = []
+        for task, serial, title, urls in batch:
+            rows.append((task, f"page://{pos}", 0, serial, title, "",
+                         [("pdf", u, "") for u in urls], pos))
+            pos += 1
+        ne = spark.createDataFrame(rows, _PARSED).repartition(n_parts)
+        with_ids = resolve_entry_identity(ne, documents).localCheckpoint(eager=True)
+        cols = ["entry_id", "task", "serial", "title", "remark"] + (["_src_pos"] if src_pos else [])
+        batch_docs = with_ids.select(
+            "entry_id", "_src_pos", F.posexplode("documents").alias("_p", "_d")
+        ).select("entry_id", F.col("_d.url").alias("url"), F.col("_d.doc_type").alias("doc_type"),
+                 F.col("_d.title").alias("title"), (F.col("_src_pos") * 1000 + F.col("_p")).alias("_src_pos"))
+        entries = merge_entries(entries, with_ids.select(*cols).repartition(n_parts)).localCheckpoint(eager=True)
+        documents = merge_documents(documents, batch_docs).localCheckpoint(eager=True)
+    return {(r.task, r.entry_id): (r.serial, r.title) for r in entries.collect()}
+
+
+@pytest.mark.parametrize("n_parts", [1, 3])
+def test_serial_walk_sequential_and_per_task(spark, n_parts):
+    """The reference's one-at-a-time ``next_serial`` walk (ref
+    state.py:110-132) on hand-built batches: in-batch conflicts, literals
+    equal to just-assigned serials, per-task serial spaces, identity
+    adoption keeping the serial, and the NULL/no-``_src_pos`` edges."""
+    seq = [("t", 3, "甲规定", ["http://x/a.html", "http://x/a.pdf"]),
+           ("t", 7, "乙办法", ["http://x/b.pdf"]),
+           ("t", 99, "甲规定(修订)", ["http://x/a.pdf"])]  # adopts 甲 via a.pdf
+    batch = [("t", 10, "X", ["http://x/x.pdf"]), ("t", None, "Y", ["http://x/y.pdf"]),
+             ("t", 7, "Z", ["http://x/z.pdf"]), ("t", 10, "W", ["http://x/w.pdf"])]
+    got = {title: s for s, title in _apply_batches(spark, [[e] for e in seq] + [batch], n_parts).values()}
+    assert got == {"甲规定(修订)": 3, "乙办法": 7, "X": 10, "Y": 11, "Z": 12, "W": 13}
+
+    abcd = [[("t", None, "A", ["http://x/aa.pdf"]), ("t", 1, "B", ["http://x/bb.pdf"])],
+            [("t", None, "C", ["http://x/cc.pdf"]), ("t", 3, "D", ["http://x/dd.pdf"])]]
+    got = {title: s for s, title in _apply_batches(spark, abcd, n_parts).values()}
+    assert got == {"A": 1, "B": 2, "C": 3, "D": 4}
+
+    tasks = [[("A", None, "A1", ["http://a/1.pdf"]), ("A", 1, "A2", ["http://a/2.pdf"]),
+              ("B", None, "B1", ["http://b/1.pdf"]), ("B", 2, "B2", ["http://b/2.pdf"]),
+              ("B", 2, "B3", ["http://b/3.pdf"])],
+             [("A", None, "A3", ["http://a/3.pdf"]), ("B", 1, "B4", ["http://b/4.pdf"]),
+              ("C", 5, "C1", ["http://c/1.pdf"])]]
+    got = {(t, title): s for (t, _), (s, title) in _apply_batches(spark, tasks, n_parts).items()}
+    assert got == {("A", "A1"): 1, ("A", "A2"): 2, ("A", "A3"): 3, ("B", "B1"): 1,
+                   ("B", "B2"): 2, ("B", "B3"): 3, ("B", "B4"): 4, ("C", "C1"): 5}
+
+    # existing NULL serial passes through and never counts as a max; a
+    # matched entry whose first batch row has no title keeps its title
+    entries = spark.createDataFrame(
+        [("m", "t", None, "保留", ""), ("o", "t", 4, "四", "")], _ENTRIES)
+    documents = spark.createDataFrame(
+        [("m", "http://x/m.pdf", "pdf", "", 0), ("o", "http://x/o.pdf", "pdf", "", 1)], _DOCS)
+    edge = [("t", 8, None, ["http://x/m.pdf"]), ("t", 9, "后来", ["http://x/m.pdf"]),
+            ("t", None, "新", ["http://x/n.pdf"]), ("t", 4, "撞", ["http://x/k.pdf"])]
+    got = _apply_batches(spark, [edge], n_parts, entries, documents)
+    assert got == {("t", "m"): (None, "保留"), ("t", "o"): (4, "四"),
+                   ("t", "http://x/n.pdf"): (5, "新"), ("t", "http://x/k.pdf"): (6, "撞")}
+
+    # a batch without _src_pos (content-hash order): clean literals keep,
+    # a matched entry keeps its serial and takes the new title
+    nopos = [("t", 9, "甲新", ["http://x/m.pdf"]), ("t", 2, "二", ["http://x/2.pdf"]),
+             ("t", 6, "六", ["http://x/6.pdf"])]
+    got = _apply_batches(spark, [nopos], n_parts, entries, documents, src_pos=False)
+    assert got == {("t", "m"): (None, "甲新"), ("t", "o"): (4, "四"),
+                   ("t", "http://x/2.pdf"): (2, "二"), ("t", "http://x/6.pdf"): (6, "六")}
 
 
 def test_compact_tables_collapses_shared_urls(spark):
