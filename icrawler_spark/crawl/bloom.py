@@ -131,4 +131,7 @@ def prefilter_unseen(df, col: str, bloom_bytes_bc):
         bf = BloomFilter.from_bytes(bytes(bloom_bytes_bc.value))
         return pd.Series(bf.might_contain_many(vals))
 
-    return df.withColumn("_maybe_seen", might_contain(df[col]))
+    # nondeterministic, so the optimizer copies no ``_maybe_seen`` predicate
+    # across a join on the key's source column onto the other side's scan
+    # (the engine's visited scan, which the filter exists to route around)
+    return df.withColumn("_maybe_seen", might_contain.asNondeterministic()(df[col]))

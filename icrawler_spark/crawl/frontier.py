@@ -9,7 +9,7 @@ deferrals), executed as a dataflow:
        ▲                                                     │
        │                                 page-parse UDF, pinned once
        │                                        ┌───links────┴───entries──▶ merge state
-       └──deferred ∪ (new ⟂ seen ⟂ pending ⟂ batch)◀┘
+       └──deferred ∪ (new ⟂ visited ⟂ deferred)◀┘
 
 Each fetched page is decoded and parsed once per round: one Arrow-batched
 UDF emits the page's pagination links and listing entries, and both the
@@ -29,15 +29,20 @@ indexes by it, so density is the cheap thing to trade for the one
 per-round all-links exchange that profiling showed is a pure serial term
 on a shared memory bus.
 
-Seen-set: an *incremental* Bloom filter (only each round's batch is added:
-its set words are aggregated in the JVM from the batch's xxhash64 keys and
-OR-ed into the driver bitmap) routes the definitely-new majority around the
-exact anti-join; "maybe seen" candidates go through the exact anti-join, so
-Bloom false positives cannot drop URLs (§4 hard-part (f)).
+Seen-set: an *incremental* Bloom filter (only each round's batch is added,
+before the round's probe: its set words are aggregated in the JVM from the
+batch's xxhash64 keys and OR-ed into the driver bitmap) routes the
+definitely-new majority around the exact anti-join; "maybe seen" candidates
+go through the exact anti-join against visited, which already holds the
+round's delta, so Bloom false positives cannot drop URLs (§4 hard-part (f)).
 
 Skew: the fetch batch is repartitioned by ``pmod(xxhash64(netloc, round), N)``
 — the salt varies per round so a hot host never pins the same partition, and
 AQE's skew-join splitting covers the join side.
+
+Checkpoints: with ``checkpoint_dir`` every write of a round (state tables,
+lineage, metrics, the sketch blob, the commit marker) goes through
+``state.SnapshotStore``; without it the pins are ``localCheckpoint``s.
 
 Scale notes: each state table is merged once per round — the listing
 deltas and the download stage's rows (attachments, marks) fold in one
@@ -50,7 +55,6 @@ collected.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -145,6 +149,13 @@ def _obs_long(obs: Observation, key: str, fallback) -> int:
         pass
     return int(fallback())
 
+
+# The per-round seen-filter blob. The name carries the filter kind AND the
+# bit derivation (xxh64_km = Kirsch-Mitzenmacher positions split from the
+# xxhash64 transport key) so a blob written with another derivation is never
+# deserialized and probed — resume finds no blob under this name and
+# rebuilds from visited.
+_SKETCH_BLOB = "seen_sketch_bloom_xxh64_km.bin"
 
 _METRICS_SCHEMA = (
     "round int, pages_fetched long, pages_missing long, links_discovered long, "
@@ -248,12 +259,7 @@ class CrawlEngine:
         an exponentially deep plan."""
         if df is None:
             return None
-        if self.store is not None:
-            df.write.mode("overwrite").parquet(
-                f"{self.store.root}/round={rnd:06d}/{name}"
-            )
-            return self.store.read(rnd, name)
-        return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=True) if self.store is None else self.store.write(rnd, name, df)
 
     def _seed_frontier(self) -> DataFrame:
         c = self.cfg
@@ -291,24 +297,7 @@ class CrawlEngine:
         if not self._force_compact and len(self._visited_parts) < self._COMPACT_VISITED_EVERY:
             return
         self._force_compact = False
-        merged = self._union_visited()
-        if self.store is not None:
-            merged.write.mode("overwrite").parquet(
-                f"{self.store.root}/round={rnd:06d}/visited_full"
-            )
-            self._visited_parts = [self.store.read(rnd, "visited_full")]
-        else:
-            self._visited_parts = [merged.localCheckpoint(eager=True)]
-
-    def _sketch_path(self, rnd: int) -> str:
-        """Per-round serialized seen-filter blob. The name carries the filter
-        kind AND the bit derivation (xxh64_km = Kirsch-Mitzenmacher positions
-        split from the xxhash64 transport key) so a blob written with another
-        derivation is never deserialized and probed — resume finds no blob
-        under this name and rebuilds from visited."""
-        return os.path.join(
-            self.store.root, f"round={rnd:06d}", "seen_sketch_bloom_xxh64_km.bin"
-        )
+        self._visited_parts = [self._pin(self._union_visited(), rnd, "visited_full")]
 
     @staticmethod
     def _sketch_keys(df: DataFrame, col: str = "url") -> DataFrame:
@@ -350,54 +339,35 @@ class CrawlEngine:
             return self._round
         self._initialized = True
         if self.store is not None:
+            self.store.drop_uncommitted()
             last = self.store.latest_committed_round()
             if last is not None:
                 # visited = latest compacted snapshot (if any) + later deltas
                 base = max(
                     (r for r in range(last + 1) if self.store.has_table(r, "visited_full")),
-                    default=None,
+                    default=-1,
                 )
-                parts = []
-                start = 0
-                if base is not None:
-                    parts.append(self.store.read(base, "visited_full"))
-                    start = base + 1
-                parts += [
-                    self.store.read(r, "visited")
-                    for r in range(start, last + 1)
-                    if self.store.has_table(r, "visited")
-                ]
-                self._visited_parts = parts
+                self._visited_parts = [self.store.read(base, "visited_full")] if base >= 0 else []
+                self._visited_parts += [self.store.read(r, "visited") for r in range(base + 1, last + 1)]
                 self.visited = self._union_visited()
                 # older checkpoints carry a `depth` column the frontier no
                 # longer has; drop it so pending's columns match the
                 # new_frontier / requeue rows unioned into it
                 self.pending = self.store.read(last, "pending").drop("depth")
-                self.seen = self.store.read(last, "seen") if self.store.has_table(last, "seen") else None
-                self.entries = self.store.read(last, "entries") if self.store.has_table(last, "entries") else None
-                self.documents = (
-                    self.store.read(last, "documents") if self.store.has_table(last, "documents") else None
-                )
-                self.images = (
-                    self.store.read(last, "images") if self.store.has_table(last, "images") else None
-                )
-                row = self.pending.agg(F.max("discovery_pos").alias("m")).collect()[0]
-                vmax = self.visited.agg(F.max("global_pos").alias("m")).collect()[0]
-                self._next_pos = max(
-                    (row.m if row.m is not None else 0),
-                    (vmax.m if vmax.m is not None else 0),
-                ) + 1
+                self.seen = self.store.read(last, "seen")
+                self.entries = self.store.read(last, "entries")
+                self.documents = self.store.read(last, "documents")
+                self.images = self.store.read(last, "images")
+                pmax = self.pending.agg(F.max("discovery_pos")).first()[0]
+                vmax = self.visited.agg(F.max("global_pos")).first()[0]
+                self._next_pos = max(pmax or 0, vmax or 0) + 1
                 self._n_pending = self.pending.count()
                 if self.cfg.use_bloom:
                     # prefer the checkpointed sketch blob (committed with the
                     # round); rebuild from visited only when absent (pre-blob
                     # checkpoints, or a run that had use_bloom off)
-                    spath = self._sketch_path(last)
-                    if os.path.exists(spath):
-                        with open(spath, "rb") as fh:
-                            self._bloom = bloom_mod.BloomFilter.from_bytes(fh.read())
-                    else:
-                        self._bloom = self._build_sketch(self.visited)
+                    blob = self.store.read_bytes(last, _SKETCH_BLOB)
+                    self._bloom = bloom_mod.BloomFilter.from_bytes(blob) if blob else self._build_sketch(self.visited)
                 self._round = last + 1
                 return self._round
         seeded = self._seed_frontier()
@@ -625,10 +595,8 @@ class CrawlEngine:
             deferred = None
 
         # salted partitioning: hot hosts spread across shards, salt varies per round
-        batch = batch.repartition(
-            cfg.n_host_shards,
-            F.pmod(F.xxhash64(F.col("netloc"), F.lit(rnd)), F.lit(cfg.n_host_shards)),
-        ).persist()
+        shard = F.pmod(F.xxhash64(F.col("netloc"), F.lit(rnd)), F.lit(cfg.n_host_shards))
+        batch = batch.repartition(cfg.n_host_shards, shard).persist()
 
         # fetch join strategy: broadcast only a provably small batch — a
         # recrawl batch of 10^7+ URLs would serialize through the driver and
@@ -797,7 +765,7 @@ class CrawlEngine:
         self._last_big_round = big_round
 
         # seen-set filtering FIRST, dedup-window SECOND. Order is semantics-
-        # preserving: the bloom verdict and both anti-joins are url-level —
+        # preserving: the bloom verdict and the anti-joins are url-level —
         # for any url either every candidate row survives or none does — so
         # the first-wins window picks the same winner among survivors. Order
         # matters for BYTES: in steady state nearly all candidate links point
@@ -807,24 +775,27 @@ class CrawlEngine:
         # stage profile measured the link-pipeline materialization at ~50 s/
         # big-round at BOTH 4 and 16 cores: the box is memory-bandwidth-bound
         # there, so shuffled bytes, not core count, set the wall.)
-        new_links = links
-        if self.visited is not None:
-            if cfg.use_bloom and self._bloom is not None:
-                # bloom prefilter (incremental, covers all visited rounds)
-                # routes definitely-new links around the exact anti-join
-                bc = self.spark.sparkContext.broadcast(self._bloom.to_bytes())
-                self._bloom_bc = bc
-                # probe with the xxhash64 transport key (8 bytes/row through
-                # Arrow instead of the url string — see _sketch_keys)
-                keyed = new_links.withColumn("_sk", F.xxhash64(F.col("url")))
-                flagged = bloom_mod.prefilter_unseen(keyed, "_sk", bc).drop("_sk")
-                definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-                maybe = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
-                survivors = maybe.join(self.visited.select("url"), "url", "left_anti")
-                new_links = definitely_new.unionByName(survivors)
-            else:
-                new_links = new_links.join(self.visited.select("url"), "url", "left_anti")
-        new_links = new_links.join(batch.select("url"), "url", "left_anti")
+        # visited already holds this round's delta (pinned above), so the
+        # exact anti-join also drops links back into the batch; the filter
+        # takes the batch BEFORE the probe, so it has no false negatives.
+        # A fresh crawl's first round skips the probe: visited is the batch.
+        probe = cfg.use_bloom and self._bloom is not None
+        if cfg.use_bloom:
+            self._bloom_add_batch(batch)
+        if probe:
+            # route definitely-new links around the exact anti-join
+            bc = self.spark.sparkContext.broadcast(self._bloom.to_bytes())
+            self._bloom_bc = bc
+            # probe with the xxhash64 transport key (8 bytes/row through
+            # Arrow instead of the url string — see _sketch_keys)
+            keyed = links.withColumn("_sk", F.xxhash64(F.col("url")))
+            flagged = bloom_mod.prefilter_unseen(keyed, "_sk", bc).drop("_sk")
+            definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
+            maybe = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
+            survivors = maybe.join(self.visited.select("url"), "url", "left_anti")
+            new_links = definitely_new.unionByName(survivors)
+        else:
+            new_links = links.join(self.visited.select("url"), "url", "left_anti")
 
         wdup = Window.partitionBy("url").orderBy(F.asc("parent_pos"), F.asc("link_pos"))
         new_links = (
@@ -912,15 +883,12 @@ class CrawlEngine:
         if seen_new:
             self.seen = merge_seen(self.seen, *seen_new)
 
-        # fold state, update bloom with this round's batch, pin lineage.
-        # (the visited delta was pinned up front, before the parse stage)
+        # fold state (the visited delta was pinned up front, before the parse)
         self.pending = (
             new_frontier if deferred is None else deferred.unionByName(new_frontier)
         )
         obs_pending = Observation(f"pending_r{rnd}")
         self.pending = self.pending.observe(obs_pending, F.count(F.lit(1)).alias("n"))
-        if cfg.use_bloom:
-            self._bloom_add_batch(batch)
 
         prev_pending = pending
         if self.store is None and big_round:
@@ -950,16 +918,10 @@ class CrawlEngine:
         # many fetches this round — the skew audit trail. Checkpoint mode
         # only; runs while batch is still cached.
         if self.store is not None:
-            lineage = (
-                batch.groupBy(
-                    F.pmod(F.xxhash64(F.col("netloc"), F.lit(rnd)), F.lit(cfg.n_host_shards)).alias("shard")
-                )
-                .agg(F.count(F.lit(1)).alias("n_urls"), F.countDistinct("netloc").alias("n_hosts"))
-                .withColumn("round", F.lit(rnd))
+            lineage = batch.groupBy(shard.alias("shard")).agg(
+                F.count(F.lit(1)).alias("n_urls"), F.countDistinct("netloc").alias("n_hosts")
             )
-            lineage.write.mode("overwrite").parquet(
-                f"{self.store.root}/round={rnd:06d}/lineage"
-            )
+            self.store.write(rnd, "lineage", lineage.withColumn("round", F.lit(rnd)))
 
         batch.unpersist()
         fetch_cache.unpersist()
@@ -982,7 +944,7 @@ class CrawlEngine:
             self._bloom_bc = None
 
         m = RoundMetrics(
-            round=rnd,
+            rnd,
             pages_fetched=n_fetched,
             pages_missing=n_missing,
             links_discovered=n_links,
@@ -995,19 +957,16 @@ class CrawlEngine:
         )
         self.metrics.append(m)
         if self.store is not None:
-            mdf = self.spark.createDataFrame([m.as_tuple()], _METRICS_SCHEMA)
-            mdf.write.mode("overwrite").parquet(f"{self.store.root}/round={rnd:06d}/metrics")
+            self.store.write(rnd, "metrics", self.spark.createDataFrame([m.as_tuple()], _METRICS_SCHEMA))
             # seen-filter shard checkpoint (north_rule: "checkpoints frontier,
             # seen-filter shards, and per-partition lineage/metrics"): the
             # serialized sketch lands inside the round dir BEFORE the commit
             # marker, so resume loads it instead of re-scanning all of visited
             # to rebuild. One shard in this sandbox; at 10^10 each of the
             # pmod(hash, n_shards) shards writes its own blob the same way.
-            if cfg.use_bloom and self._bloom is not None:
-                with open(self._sketch_path(rnd), "wb") as fh:
-                    fh.write(self._bloom.to_bytes())
-            with open(f"{self.store.root}/round={rnd:06d}/_COMMITTED", "w") as fh:
-                fh.write("ok\n")
+            if cfg.use_bloom:
+                self.store.write_bytes(rnd, _SKETCH_BLOB, self._bloom.to_bytes())
+            self.store.commit(rnd)
         self._round += 1
         return m
 

@@ -12,6 +12,10 @@ gives the two properties the north_rule demands:
 - *per-partition lineage/metrics*: each round commits a metrics table keyed
   by round, with the round's counters.
 
+``SnapshotStore`` owns the round directory: its layout, the one write path
+(``write`` for tables, ``write_bytes`` for blobs) and the commit. The engine
+names tables; it never builds a path.
+
 On a real cluster these tables are Iceberg ``MERGE INTO`` targets; the merge
 functions below implement the same upsert semantics as deterministic
 DataFrame batch operations (one merge per table per round — SURVEY §4 hard
@@ -39,38 +43,71 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+_MARKER = "_COMMITTED"
+
 
 class SnapshotStore:
-    """Per-round parquet snapshots with atomic commit markers."""
+    """The one reader and writer of the round directory: ``round=NNNNNN/<name>``
+    parquet tables and blobs, and the ``_COMMITTED`` marker."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _round_dir(self, rnd: int) -> str:
-        return os.path.join(self.root, f"round={rnd:06d}")
+    def _path(self, rnd: int, name: str) -> str:
+        return os.path.join(self.root, f"round={rnd:06d}", name)
 
     def latest_committed_round(self) -> int | None:
-        rounds = []
-        if not os.path.isdir(self.root):
-            return None
-        for name in os.listdir(self.root):
-            if name.startswith("round=") and os.path.exists(
-                os.path.join(self.root, name, "_COMMITTED")
-            ):
-                rounds.append(int(name.split("=")[1]))
-        return max(rounds) if rounds else None
+        rounds = [int(n.split("=")[1]) for n in os.listdir(self.root)
+                  if n.startswith("round=") and os.path.exists(os.path.join(self.root, n, _MARKER))]
+        return max(rounds, default=None)
 
-    def read(self, rnd: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._round_dir(rnd), name))
+    def drop_uncommitted(self) -> None:
+        """Delete the round directories after the last committed round: a
+        crashed attempt's writes, which its retry would otherwise commit
+        beside its own (a table the retry does not write again)."""
+        last = self.latest_committed_round()
+        for n in os.listdir(self.root):
+            if n.startswith("round=") and (last is None or int(n.split("=")[1]) > last):
+                shutil.rmtree(os.path.join(self.root, n))
+
+    def write(self, rnd: int, name: str, df: DataFrame) -> DataFrame:
+        """Write table ``name`` of round ``rnd``; return it read back with the
+        schema it was written with, which starts no schema-inference job."""
+        path = self._path(rnd, name)
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
+
+    def read(self, rnd: int, name: str) -> DataFrame | None:
+        """Table ``name`` of round ``rnd``, or None if the round has none."""
+        return self.spark.read.parquet(self._path(rnd, name)) if self.has_table(rnd, name) else None
 
     def has_table(self, rnd: int, name: str) -> bool:
-        return os.path.isdir(os.path.join(self._round_dir(rnd), name))
+        return os.path.isdir(self._path(rnd, name))
+
+    def write_bytes(self, rnd: int, name: str, data: bytes) -> None:
+        path = self._path(rnd, name)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as fh:
+            fh.write(data)
+
+    def read_bytes(self, rnd: int, name: str) -> bytes | None:
+        """Blob ``name`` of round ``rnd``, or None if the round has none."""
+        path = self._path(rnd, name)
+        if not os.path.exists(path):
+            return None
+        with open(path, "rb") as fh:
+            return fh.read()
+
+    def commit(self, rnd: int) -> None:
+        """Mark round ``rnd`` complete; call it after the round's last write."""
+        self.write_bytes(rnd, _MARKER, b"ok\n")
 
 
 # --- merge semantics ----------------------------------------------------------

@@ -268,6 +268,27 @@ def test_resume_prefers_compacted_snapshot(spark, site, pages, tmp_path, monkeyp
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_drop_uncommitted_keeps_committed_rounds(spark, tmp_path):
+    """Resume's first step: the directories of rounds after the last commit
+    go, so a retried round cannot commit a table only the crashed attempt
+    wrote (a forced ``visited_full`` after ``invalidate_urls``, say)."""
+    import os
+
+    from icrawler_spark.crawl.state import SnapshotStore
+
+    store = SnapshotStore(spark, str(tmp_path))
+    df = spark.createDataFrame([("u", 1)], "url string, n int")
+    store.write(0, "visited", df)
+    store.commit(0)
+    store.write(1, "visited_full", df)
+    store.write_bytes(2, "blob.bin", b"x")
+    store.drop_uncommitted()
+    assert sorted(os.listdir(tmp_path)) == ["round=000000"]
+    assert store.latest_committed_round() == 0
+    assert store.read(1, "visited_full") is None and store.read_bytes(2, "blob.bin") is None
+    assert store.read(0, "visited").collect() == df.collect()
+
+
 def test_distributed_seed_df_matches_list_seeding(spark, site, pages):
     """CrawlEngine(seeds_df=...) must reproduce the list-seeded crawl
     exactly — order, seen-set, and position bookkeeping (sparse positions

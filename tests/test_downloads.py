@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from icrawler_spark.crawl import CrawlConfig, CrawlEngine, build_site, site_pages_df
 from icrawler_spark.crawl.downloads import run_download_stage
 from icrawler_spark.crawl.reference_model import crawl_model_docs, download_model
+from icrawler_spark.crawl.state import SnapshotStore
 
 START = "https://www.example.test/list/index.html"
 
@@ -206,3 +207,76 @@ def test_each_fetched_page_parsed_once_per_round(spark, site, tmp_path):
         assert calls[("listing.py", "extract_listing_entries_default")] == n_listing
         assert calls[("listing.py", "extract_pagination_meta")] == n_listing
         assert calls[("listing.py", "discover_detail_attachments")] == n_detail
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _fail_round1_write(monkeypatch, name):
+    """Route every ``SnapshotStore`` write through a recorder; round 1's
+    write of ``name`` raises instead. Returns the names round 1 wrote
+    before it."""
+    written = []
+    for meth in ("write", "write_bytes"):
+        real = getattr(SnapshotStore, meth)
+
+        def wrapped(self, rnd, table, payload, _real=real):
+            if rnd == 1:
+                if table == name:
+                    raise _Crash(table)
+                written.append(table)
+            return _real(self, rnd, table, payload)
+
+        monkeypatch.setattr(SnapshotStore, meth, wrapped)
+    return written
+
+
+def test_crash_at_a_round_write_resumes_to_same_crawl(spark, site, tmp_path, monkeypatch):
+    """A crash at a write of the last round — the commit marker, its first
+    table, a state table, the sketch blob — leaves the round uncommitted,
+    and a fresh engine resumes to the uninterrupted crawl: same order, seen
+    and downloaded sets, documents and entries. The crashes run in sequence
+    on one checkpoint dir; each retry is a fresh engine that resumes from
+    round 0 and first drops the partial round the attempt before it left."""
+    pages = site_pages_df(spark, site).cache()
+    ckpt = tmp_path / "ckpt"
+    store = SnapshotStore(spark, str(ckpt))
+    cfg = CrawlConfig(start_url=START, max_rounds=20, download_docs=True, n_host_shards=2,
+                      checkpoint_dir=str(ckpt))
+
+    def state(eng):
+        return (
+            eng.crawl_order(),
+            eng.seen_urls(),
+            {r.url for r in eng.seen.where(F.col("downloaded")).collect()},
+            sorted(tuple(r) for r in eng.documents.collect()),
+            sorted(tuple(r) for r in eng.entries.collect()),
+        )
+
+    # the uninterrupted crawl: rounds 0 and 1 in one engine, where only the
+    # last write, round 1's marker, fails
+    blob = "seen_sketch_bloom_xxh64_km.bin"
+    with monkeypatch.context() as m:
+        written = _fail_round1_write(m, "_COMMITTED")
+        full = CrawlEngine(spark, pages, cfg)
+        with pytest.raises(_Crash):
+            full.run()
+    want = state(full)
+    assert len(full.metrics) == 2 and full._n_pending == 0
+    assert written == ["visited", "pending", "entries", "documents", "seen", "lineage", "metrics", blob]
+
+    for name in ("visited", "seen", blob):
+        assert store.latest_committed_round() == 0, name
+        with monkeypatch.context() as m:
+            _fail_round1_write(m, name)
+            with pytest.raises(_Crash, match=name):
+                CrawlEngine(spark, pages, cfg).run()
+    assert store.has_table(1, "seen") and store.latest_committed_round() == 0
+    resumed = CrawlEngine(spark, pages, cfg)
+    assert resumed.resume_or_init() == 1
+    assert not (ckpt / "round=000001").exists()
+    resumed.run()
+    assert state(resumed) == want
+    assert store.latest_committed_round() == 1
+    pages.unpersist()

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from icrawler_spark.crawl.bloom import BloomFilter, prefilter_unseen
 from icrawler_spark.crawl.state import merge_entries
 from icrawler_spark.queries.analytics import (
     pricing_summary,
@@ -125,6 +126,39 @@ def test_merge_entries_is_one_window_and_one_walk(spark):
     assert "Join" not in plan, plan
     shuffles = [ln for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
     assert len(shuffles) <= 2, plan
+
+
+def _nodes(node):
+    """Every node of a JVM plan tree, pre-order."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _python_evals(node) -> int:
+    return sum(n.nodeName() in ("ArrowEvalPython", "BatchEvalPython") for n in _nodes(node))
+
+
+def test_bloom_probe_stays_off_the_visited_side(spark, tmp_path):
+    """The frontier's "maybe seen" links take a left-anti join against
+    visited. The Bloom probe must run over the links only: no predicate
+    inferred from it may reach the visited scan, or every round probes the
+    whole visited table the filter exists to route around."""
+    from pyspark.sql import functions as F
+
+    bf = BloomFilter(1000)
+    bc = spark.sparkContext.broadcast(bf.to_bytes())
+    path = str(tmp_path / "visited")
+    spark.createDataFrame([("u1",), ("u2",)], "url string").write.parquet(path)
+    visited = spark.read.parquet(path)
+    links = spark.createDataFrame([("u1", 1), ("u3", 2)], "url string, parent_pos long")
+    flagged = prefilter_unseen(links.withColumn("_sk", F.xxhash64("url")), "_sk", bc).drop("_sk")
+    maybe = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
+    plan = maybe.join(visited.select("url"), "url", "left_anti")._jdf.queryExecution().optimizedPlan()
+    (join,) = [n for n in _nodes(plan) if n.nodeName() == "Join"]
+    assert _python_evals(join.left()) == 1, plan.toString()
+    assert _python_evals(join.right()) == 0, plan.toString()
 
 
 def test_aqe_enabled(spark):
