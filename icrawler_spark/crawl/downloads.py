@@ -9,10 +9,10 @@ The batch dataflow runs the same rules as set operations per round:
       ⟂ scheme/type filters                      (pbc_monitor.py:525-529, 588-590)
       → verify_local: downloaded ∧ file missing → cleared   (263-300)
       → reuse: structured filename ∈ listing → mark reused  (444-464)
-      → fetch semi-join pages → mark downloaded, local_path (665-725)
-      → html fetches → parse_detail_attachments UDF         (532-569, 734-761)
-        → allowed filter → SECOND fetch pass (non-html by construction, so
-          the recursion terminates at depth 1)
+      → html candidates ⋈ pages.html → parse_detail_attachments (532-569, 734-761)
+        → allowed filter ⟂ seen = attachment candidates (non-html: depth 1)
+      → ONE fetch: candidates ∪ attachment candidates, semi-join pages
+        → mark downloaded, local_path                   (665-725)
       → returns rows: attachment documents, attachment seen rows, marks
 
 ``download_rows`` merges nothing: the crawl engine folds its rows into the
@@ -24,14 +24,14 @@ Downloads are idempotent per URL, so the batch outcome (downloaded set,
 document tree) equals the reference's serial walk outcome — pinned by
 tests/test_downloads.py against the extended pure-Python model.
 
-Stage counters ride as ``observe()`` metrics on the stage's caches and are
+Stage counters ride as ``observe()`` metrics on the stage's rows and are
 read by a function the caller invokes after its own materializing action:
 inside the crawl engine they fire with the per-round state pins — zero
 standalone count() jobs — while a direct caller that reads them before any
-action falls back to count() on the stage caches. The attachment expansion
-is built unconditionally (an empty attachment set makes every added
-operator a runtime no-op under AQE's empty-relation propagation), because
-branching on the count was the one counter the plan needed eagerly.
+action falls back to count(). The attachment expansion is built
+unconditionally (an empty attachment set makes every added operator a
+runtime no-op under AQE's empty-relation propagation), because branching on
+the count was the one counter the plan needed eagerly.
 """
 
 from __future__ import annotations
@@ -84,31 +84,25 @@ def download_rows(
         .where(native.is_supported_scheme(F.col("url")))
         .where(_allowed(F.col("_ntype"), allowed_types))
         .withColumn("_fname", structured_filename_udf(F.col("url"), F.col("_ntype")))
+        .persist()
     )
 
     # reuse-existing: expected structured filename already on disk
     obs_reused = reused = None
+    todo = cand
     if existing_files is not None:
         listing = existing_files.select(F.col("local_path").alias("_fname")).distinct()
         obs_reused = Observation()
         reused = cand.join(F.broadcast(listing), "_fname", "left_semi").observe(
             obs_reused, F.count(F.lit(1)).alias("n")
         )
-        cand = cand.join(F.broadcast(listing), "_fname", "left_anti")
+        todo = cand.join(F.broadcast(listing), "_fname", "left_anti")
 
-    def fetch(c: DataFrame, obs: Observation) -> DataFrame:
-        # a semi-join: a url with several snapshot rows is fetched once
-        return c.join(pages.select("url"), "url", "left_semi").observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).persist()
-
-    obs_first = Observation()
-    first = fetch(cand, obs_first)
-
-    # html fetches → one level of detail-attachment expansion. The parse's
-    # pass-through label column carries each page's entry_id. Each snapshot
-    # of a page is parsed; dropDuplicates folds identical snapshots' rows.
-    html_pages = first.where(F.col("_ntype") == "html").select(
+    # html candidates → one level of detail-attachment expansion; the join
+    # with the pages' html is their fetch. The parse's pass-through label
+    # column carries each page's entry_id. Each snapshot of a page is
+    # parsed; dropDuplicates folds identical snapshots' rows.
+    html_pages = todo.where(F.col("_ntype") == "html").select(
         F.col("entry_id").alias("task"), "url"
     ).join(pages.select("url", "html"), "url")
     obs_atts = Observation()
@@ -121,9 +115,9 @@ def download_rows(
         F.col("att_pos").cast("long").alias("_src_pos"),
     ).dropDuplicates().observe(obs_atts, F.count(F.lit(1)).alias("n")).persist()
 
-    # second fetch pass: attachments not already in seen, one row per url
-    # (an attachment linked from several detail pages downloads once); the
-    # newest-wins pick of merge_seen, with a total order for ties
+    # attachment candidates: attachments not already in seen, one row per
+    # url (an attachment linked from several detail pages downloads once);
+    # the newest-wins pick of merge_seen, with a total order for ties
     newest = Window.partitionBy("url").orderBy(F.desc("_src_pos"), "entry_id", "title")
     att_cand = (
         atts.join(seen.select("url"), "url", "left_anti")
@@ -134,30 +128,32 @@ def download_rows(
             structured_filename_udf(F.col("url"), F.col("doc_type")).alias("_fname"),
         )
     )
-    obs_second = Observation()
-    second = fetch(att_cand, obs_second)
+
+    # ONE fetch over both candidate sets (disjoint: att_cand excludes seen,
+    # todo is in seen); a semi-join fetches a multi-snapshot url once
+    obs_fetched = Observation()
+    fetched = todo.select(*att_cand.columns).unionByName(att_cand).join(
+        pages.select("url"), "url", "left_semi"
+    ).observe(obs_fetched, F.count(F.lit(1)).alias("n"))
 
     def mark(df: DataFrame) -> DataFrame:
-        # one mark per url: first, second and reused are disjoint url sets
+        # one mark per url: fetched and reused are disjoint url sets
         return df.select(
             "url", "entry_id", "title", F.col("_ntype").alias("doc_type"),
             F.lit(True).alias("downloaded"), F.col("_fname").alias("local_path"),
             F.lit(0).cast("long").alias("_src_pos"),
         )
 
-    marks = mark(first).unionByName(mark(second))
-    if reused is not None:
-        marks = marks.unionByName(mark(reused))
+    marks = mark(fetched) if reused is None else mark(fetched).unionByName(mark(reused))
 
     def metrics() -> dict:
-        n_first = _obs_long(obs_first, "n", first.count)
+        n_fetched = _obs_long(obs_fetched, "n", fetched.count)
         n_atts = _obs_long(obs_atts, "n", atts.count)
-        n_second = _obs_long(obs_second, "n", second.count)
         n_reused = _obs_long(obs_reused, "n", reused.count) if reused is not None else 0
-        for df in (first, atts, second):
+        for df in (cand, atts):
             df.unpersist()
         return {
-            "files_downloaded": n_first + n_second,
+            "files_downloaded": n_fetched,
             "files_reused": n_reused,
             "attachments_discovered": n_atts,
         }

@@ -5,11 +5,17 @@ Re-architecture of the reference's FIFO listing-page walk
 ``collect_new_files``): one *round* = one BFS level (plus politeness
 deferrals), executed as a dataflow:
 
-    pending ──rank(netloc budget)──▶ batch ──join pages──▶ fetched
-       ▲                                                     │
+    pending ──rank(host cap)──▶ batch ──join pages──▶ fetched
+       ▲      deferred = pending ⟂ batch                │
        │                                 page-parse UDF, pinned once
        │                                        ┌───links────┴───entries──▶ merge state
        └──deferred ∪ (new ⟂ visited ⟂ deferred)◀┘
+
+Politeness: each host's pending urls are ranked (priority, then FIFO) and
+the first ``cap`` go into the batch, where ``cap`` is the host's
+``host_budgets_df`` row, else ``host_budget``, and NULL (neither) means
+unlimited. The host key is ``native.url_netloc`` (lower-cased host, no
+port or userinfo) for seeds, links and budget rows alike.
 
 Each fetched page is decoded and parsed once per round: one Arrow-batched
 UDF emits the page's pagination links and listing entries, and both the
@@ -61,6 +67,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import native
 from ..parsers import udfs
 from . import bloom as bloom_mod
 from .state import (
@@ -89,8 +96,9 @@ class CrawlConfig:
     checkpoint_dir: str | None = None  # None → in-memory (localCheckpoint)
 
     def seeds(self) -> list[str]:
+        """The seed urls in order, each once: the first listing wins."""
         if self.seed_urls:
-            return list(self.seed_urls)
+            return list(dict.fromkeys(self.seed_urls))
         if self.start_url:
             return [self.start_url]
         raise ValueError("CrawlConfig needs start_url or seed_urls")
@@ -262,20 +270,22 @@ class CrawlEngine:
         return df.localCheckpoint(eager=True) if self.store is None else self.store.write(rnd, name, df)
 
     def _seed_frontier(self) -> DataFrame:
+        """One frontier row per seed url, the first listing winning (the
+        reference FIFO skips a url it already visited): ``seeds()`` for the
+        list, the least ``pos`` for ``seeds_df``."""
         c = self.cfg
         if self._seeds_df is not None:
-            return self._seeds_df.select(
-                F.lit(c.task).alias("task"),
-                F.col("url"),
-                _netloc_col(F.col("url")).alias("netloc"),
-                F.lit(0).alias("discovered_round"),
-                F.col("pos").cast("long").alias("discovery_pos"),
+            seeds = self._seeds_df.groupBy("url").agg(F.min("pos").cast("long").alias("discovery_pos"))
+        else:
+            seeds = self.spark.createDataFrame(
+                list(enumerate(c.seeds())), "discovery_pos bigint, url string"
             )
-        rows = [(c.task, u, _netloc_py(u), 0, i) for i, u in enumerate(c.seeds())]
-        return self.spark.createDataFrame(
-            rows,
-            "task string, url string, netloc string, discovered_round int, "
-            "discovery_pos bigint",
+        return seeds.select(
+            F.lit(c.task).alias("task"),
+            "url",
+            native.url_netloc(F.col("url")).alias("netloc"),
+            F.lit(0).alias("discovered_round"),
+            "discovery_pos",
         )
 
     def _union_visited(self) -> DataFrame | None:
@@ -383,8 +393,7 @@ class CrawlEngine:
             self._n_pending = int(agg.n)
             self._next_pos = int(agg.m if agg.m is not None else -1) + 1
         else:
-            self._n_pending = len(self.cfg.seeds())
-            self._next_pos = len(self.cfg.seeds())
+            self._n_pending = self._next_pos = len(self.cfg.seeds())
         self._round = 0
         return 0
 
@@ -553,46 +562,31 @@ class CrawlEngine:
         t0 = time.time()
         pending = self.pending
         n_pending_before = self._n_pending
-        order = [F.asc("discovered_round"), F.asc("discovery_pos")]
-        if cfg.host_budget is not None or self._host_budgets_df is not None:
+        batch, deferred = pending, None
+        budgeted = cfg.host_budget is not None or self._host_budgets_df is not None
+        if budgeted:
+            # politeness: rank each host's pending urls and fetch the first
+            # `cap` of them. The cap is the host's Crawl-delay row, else the
+            # global budget; NULL (neither) = unlimited.
             ranked = pending
+            order = [F.asc("discovered_round"), F.asc("discovery_pos")]
             if self._priority_df is not None:
                 # priority frontier: importance-first within each host's
                 # budget, FIFO tie-break. Left join (scores may be partial);
                 # the score table is usually tiny vs the frontier — let AQE
                 # pick broadcast; at 10^10 it would be url-bucketed alongside
                 # the frontier table so neither side reshuffles.
-                ranked = ranked.join(self._priority_df, "url", "left").withColumn(
-                    "priority", F.coalesce(F.col("priority"), F.lit(0))
-                )
-                order = [F.desc("priority")] + order
+                ranked = ranked.join(self._priority_df, "url", "left")
+                order = [F.desc(F.coalesce(F.col("priority"), F.lit(0)))] + order
             w = Window.partitionBy("netloc").orderBy(*order)
             ranked = ranked.withColumn("_hrk", F.row_number().over(w))
-            if self._priority_df is not None:
-                ranked = ranked.drop("priority")
+            cap = F.lit(cfg.host_budget).cast("long")
             if self._host_budgets_df is not None:
-                # per-host Crawl-delay caps override the global budget; the
-                # budgets table is host-count-sized → always broadcast, no
-                # extra shuffle on the frontier side. NULL cap (no row and
-                # no global budget) = unlimited.
-                default_cap = (
-                    F.lit(cfg.host_budget).cast("long")
-                    if cfg.host_budget is not None
-                    else F.lit(None).cast("long")
-                )
+                # the budgets table is host-count-sized → always broadcast,
+                # no extra shuffle on the frontier side
                 ranked = ranked.join(F.broadcast(self._host_budgets_df), "netloc", "left")
-                cap = F.coalesce(F.col("_hb"), default_cap)
-                keep = cap.isNull() | (F.col("_hrk") <= cap)
-                batch = ranked.where(keep).drop("_hrk", "_hb")
-                deferred = ranked.where(cap.isNotNull() & (F.col("_hrk") > cap)).drop(
-                    "_hrk", "_hb"
-                )
-            else:
-                batch = ranked.where(F.col("_hrk") <= cfg.host_budget).drop("_hrk")
-                deferred = ranked.where(F.col("_hrk") > cfg.host_budget).drop("_hrk")
-        else:
-            batch = pending
-            deferred = None
+                cap = F.coalesce(F.col("_hb"), cap)
+            batch = ranked.where(cap.isNull() | (F.col("_hrk") <= cap)).select(*pending.columns)
 
         # salted partitioning: hot hosts spread across shards, salt varies per round
         shard = F.pmod(F.xxhash64(F.col("netloc"), F.lit(rnd)), F.lit(cfg.n_host_shards))
@@ -608,6 +602,14 @@ class CrawlEngine:
             batch_side = F.broadcast(batch)
         else:
             batch_side = batch.hint("shuffle_hash")
+        if budgeted:
+            # the rest of the frontier waits for a later round: pending holds
+            # one row per url, so it is pending ⟂ batch (read from the batch
+            # cache — the ranking window runs once per round)
+            batch_urls = batch.select("url")
+            deferred = pending.join(
+                F.broadcast(batch_urls) if is_broadcast_batch else batch_urls, "url", "left_anti"
+            )
         fetch_cols = ["task", "url", "html", "discovered_round", "discovery_pos"]
         # a `redirect_to` column (3xx Location) on the pages table turns on
         # redirect following — see the link stream below
@@ -809,13 +811,13 @@ class CrawlEngine:
         if self.robots_rules is not None:
             from .robots import apply_robots_filter
 
-            with_netloc = new_links.withColumn("netloc", _netloc_col(F.col("url")))
+            with_netloc = new_links.withColumn("netloc", native.url_netloc(F.col("url")))
             new_links = apply_robots_filter(with_netloc, self.robots_rules).drop("netloc")
 
         new_frontier = self._assign_positions(new_links, big_round).select(
             "task",
             "url",
-            _netloc_col(F.col("url")).alias("netloc"),
+            native.url_netloc(F.col("url")).alias("netloc"),
             "discovered_round",
             "discovery_pos",
         )
@@ -1021,7 +1023,7 @@ class CrawlEngine:
         requeued = hit.select(
             F.lit(self.cfg.task).alias("task"),
             "url",
-            _netloc_col(F.col("url")).alias("netloc"),
+            native.url_netloc(F.col("url")).alias("netloc"),
             F.lit(self._round).alias("discovered_round"),
             (F.row_number().over(w) - 1 + F.lit(self._next_pos))
             .cast("long")
@@ -1057,12 +1059,3 @@ class CrawlEngine:
             return set()
         return {r.url for r in self.seen.select("url").collect()}
 
-
-def _netloc_py(url: str) -> str:
-    from urllib.parse import urlparse
-
-    return (urlparse(url).netloc or "").lower()
-
-
-def _netloc_col(col):
-    return F.lower(F.coalesce(F.try_parse_url(col, F.lit("HOST")), F.lit("")))

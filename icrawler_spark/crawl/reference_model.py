@@ -18,18 +18,12 @@ in FIFO order; the remainder keeps its queue position for the next round.
 
 from __future__ import annotations
 
-from urllib.parse import urlparse
-
-from ..functions.pure import classify_document_type, is_supported_scheme
+from ..functions.pure import classify_document_type, is_supported_scheme, url_netloc
 from ..parsers.listing import (
     discover_detail_attachments,
     extract_listing_entries,
     extract_pagination_links,
 )
-
-
-def _netloc(url: str) -> str:
-    return (urlparse(url).netloc or "").lower()
 
 
 def crawl_model(
@@ -62,7 +56,7 @@ def crawl_model(
             counts: dict[str, int] = {}
             deferred: list[str] = []
             for url in level:
-                h = _netloc(url)
+                h = url_netloc(url)
                 if counts.get(h, 0) < host_budget:
                     counts[h] = counts.get(h, 0) + 1
                     taken.append(url)

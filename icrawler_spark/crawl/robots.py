@@ -14,10 +14,10 @@ engine crawls as a generic agent).
 
 from __future__ import annotations
 
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import native
 
 RULES_SCHEMA = "netloc string, path_prefix string, allow boolean, rule_len int"
 
@@ -159,14 +159,10 @@ def robots_docs_from_pages(pages: DataFrame) -> dict[str, str]:
     Driver-side collect is host-count-sized by construction (one row per
     host), the same boundary the rules/budgets tables already accept.
     Multi-snapshot corpora: the newest ``warc_ts`` row per host wins."""
-    from pyspark.sql import functions as F
-
     cand = pages.where(
         F.col("url").rlike(r"^[^:/?#]+://[^/?#]+/robots\.txt$")
     ).select(
-        F.lower(F.coalesce(F.try_parse_url(F.col("url"), F.lit("HOST")), F.lit(""))).alias(
-            "netloc"
-        ),
+        native.url_netloc(F.col("url")).alias("netloc"),
         F.col("html").cast("string").alias("text"),
         *([F.col("warc_ts")] if "warc_ts" in pages.columns else [F.lit(None).alias("warc_ts")]),
     )

@@ -48,6 +48,7 @@ def is_supported_scheme(url: Column) -> Column:
 
 
 def url_netloc(url: Column) -> Column:
+    """Lower-cased host, no port or userinfo. pure.url_netloc."""
     return F.lower(F.coalesce(F.try_parse_url(url, F.lit("HOST")), F.lit("")))
 
 
@@ -105,11 +106,6 @@ def guess_agency(s: Column) -> Column:
     arr = F.array(*[F.lit(a) for a in pure.AGENCIES])
     hits = F.filter(arr, lambda a: t.contains(a))
     return F.when(F.size(hits) > 0, F.array_join(F.slice(hits, 1, 3), "、"))
-
-
-def extract_year(s: Column) -> Column:
-    y = F.regexp_extract(norm_text_ascii(s), r"((19|20)\d{2})", 1)
-    return F.when(y != "", y.cast("int"))
 
 
 def is_probable_policy(title: Column, remark: Column) -> Column:

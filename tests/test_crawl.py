@@ -310,6 +310,54 @@ def test_distributed_seed_df_matches_list_seeding(spark, site, pages):
     assert by_df.seen_urls() == by_list.seen_urls()
 
 
+@pytest.mark.parametrize("host_budget", [None, 1], ids=["unbudgeted", "budget1"])
+def test_duplicate_seed_fetched_once(spark, pages, host_budget):
+    """A seed listed twice is one frontier row and the first listing wins,
+    as the reference FIFO skips a url it already visited — for the list
+    and for ``seeds_df`` alike."""
+    third = "https://www.example.test/list/index_3.html"
+
+    def crawl(seed_urls=None, seeds_df=None):
+        cfg = CrawlConfig(start_url=START, seed_urls=seed_urls, max_rounds=20, host_budget=host_budget)
+        eng = CrawlEngine(spark, pages, cfg, seeds_df=seeds_df)
+        eng.run()
+        return eng
+
+    want = crawl([START, third])
+    assert want.crawl_order()[:2] == [START, third]
+    assert len(set(want.crawl_order())) == len(want.crawl_order())
+    dup = crawl([START, third, START])
+    assert dup.crawl_order() == want.crawl_order()
+    assert [m.pages_fetched for m in dup.metrics] == [m.pages_fetched for m in want.metrics]
+    by_df = crawl(seeds_df=spark.createDataFrame(
+        [(START, 0), (third, 1), (START, 2)], "url string, pos long"
+    ))
+    assert by_df.crawl_order() == want.crawl_order()
+
+
+def test_politeness_key_is_the_host(spark):
+    """Port, userinfo and case do not split a host's budget: a seed's key
+    is the lower-cased host, the same as its links' and its
+    ``host_budgets_df`` row's."""
+    import datetime as dt
+
+    urls = ["http://a.test:8080/1", "http://a.test/2", "http://U:p@A.Test/3"]
+    pages = spark.createDataFrame(
+        [(u, dt.datetime(2024, 1, 1), b"<html></html>", "", "en") for u in urls],
+        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+    )
+    budgets = spark.createDataFrame([("A.test", 1)], "netloc string, host_budget long")
+    for host_budget, host_budgets_df in ((1, None), (None, budgets)):
+        cfg = CrawlConfig(
+            seed_urls=urls, host_budget=host_budget, max_rounds=10,
+            use_bloom=False, parse_entries=False,
+        )
+        eng = CrawlEngine(spark, pages, cfg, host_budgets_df=host_budgets_df)
+        eng.run()
+        assert eng.crawl_order() == urls
+        assert [m.pages_fetched for m in eng.metrics] == [1, 1, 1]
+
+
 def _int64_keys(rng, n: int) -> np.ndarray:
     return rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64, endpoint=True)
 

@@ -118,6 +118,7 @@ URLS = [
     "http://e.com/g.htm", "http://e.com/h.txt", "http://e.com/detail",
     "http://e.com/weird.xyz", "https://e.com/a/b/index_2.html?p=1",
     "javascript:void(0)", "ftp://e.com/x.pdf",
+    "http://U:p@A.Test:8080/x", "HTTPS://WWW.E.COM/Y.PDF", "http://e.com:81/z.doc",
 ]
 
 TITLES = [
@@ -142,8 +143,10 @@ def test_native_parity(spark):
         assert r.dt == pure.classify_document_type(r.url), r.url
         assert r.att == pure.has_attachment_suffix(r.url), r.url
         assert r.ok == pure.is_supported_scheme(r.url), r.url
-        if r.url.startswith("http"):
+        if r.url.lower().startswith("http"):
             assert r.netloc == pure.url_netloc(r.url), r.url
+    # the host alone: no userinfo, no port, lower-cased
+    assert pure.url_netloc("http://U:p@A.Test:8080/x") == "a.test"
 
 
 def test_native_text_parity(spark):

@@ -161,6 +161,33 @@ def test_bloom_probe_stays_off_the_visited_side(spark, tmp_path):
     assert _python_evals(join.right()) == 0, plan.toString()
 
 
+def test_download_stage_fetches_once(spark):
+    """The download stage fetches both passes' candidates — the
+    undownloaded seen rows and the attachments their html pages link to —
+    with ONE semi-join against the pages urls (the html pages' own fetch
+    is their join with the pages' html)."""
+    from icrawler_spark.crawl import build_site, site_pages_df
+    from icrawler_spark.crawl.downloads import download_rows
+
+    pages = site_pages_df(spark, build_site(n_pages=1, entries_per_page=1, with_attachments=True))
+    detail = "https://www.example.test/list/detail_1.html"
+    seen = spark.createDataFrame(
+        [(detail, detail, "t", "html", False, None, 0),
+         ("https://www.example.test/files/doc_1.pdf", detail, "t", "pdf", False, None, 1)],
+        "url string, entry_id string, title string, doc_type string, downloaded boolean, "
+        "local_path string, _src_pos long",
+    )
+    _atts, _att_seen, marks, metrics = download_rows(pages, seen)
+    plan = marks._jdf.queryExecution().analyzed()
+    semis = [
+        n for n in _nodes(plan)
+        if n.nodeName() == "Join" and n.joinType().toString() == "LeftSemi"
+    ]
+    assert len(semis) == 1, plan.toString()
+    assert "warc_ts" in semis[0].right().treeString(), plan.toString()  # the pages relation
+    assert metrics()["files_downloaded"] == 3  # detail page, its pdf, its attachment
+
+
 def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"

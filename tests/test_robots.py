@@ -87,29 +87,46 @@ def test_parse_crawl_delay_and_budgets(spark):
     assert {(r.netloc, r.host_budget) for r in b2.collect()} == {("s.test", 1)}
 
 
+PAGES_SCHEMA = "url string, warc_ts timestamp_ntz, html binary, text string, lang string"
+
+
+def _page(host, path, links=()):
+    import datetime as dt
+
+    a = "".join(f'<a href="https://{h}/{p}">下一页</a>' for h, p in links)
+    return (
+        f"https://{host}/{path}",
+        dt.datetime(2024, 1, 1),
+        f"<html><body>{a}</body></html>".encode(),
+        "",
+        "en",
+    )
+
+
+def _per_host_round(eng) -> dict[tuple[str, int], int]:
+    return {
+        (r.netloc, r.round): r.n
+        for r in eng.visited.selectExpr(
+            "parse_url(url, 'HOST') AS netloc", "round"
+        )
+        .groupBy("netloc", "round")
+        .agg({"*": "count"})
+        .withColumnRenamed("count(1)", "n")
+        .collect()
+    }
+
+
 def test_engine_crawl_delay_budget_spreads_rounds(spark):
     """Per-host Crawl-delay caps override the (absent) global budget: the
     slow host fetches ≤2 pages/round while the fast host drains in one."""
-    import datetime as dt
-
     from icrawler_spark.crawl.robots import robots_budgets_df
-
-    def row(host, path, links=()):
-        a = "".join(f'<a href="https://{h}/{p}">下一页</a>' for h, p in links)
-        return (
-            f"https://{host}/{path}",
-            dt.datetime(2024, 1, 1),
-            f"<html><body>{a}</body></html>".encode(),
-            "",
-            "en",
-        )
 
     slow = [("slow.test", f"s{i}.html") for i in range(4)]
     fast = [("fast.test", f"f{i}.html") for i in range(4)]
     pages = spark.createDataFrame(
-        [row("seed.test", "index.html", links=slow + fast)]
-        + [row(h, p) for h, p in slow + fast],
-        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+        [_page("seed.test", "index.html", links=slow + fast)]
+        + [_page(h, p) for h, p in slow + fast],
+        PAGES_SCHEMA,
     )
     budgets = robots_budgets_df(
         spark, {"slow.test": "User-agent: *\nCrawl-delay: 30"}, round_seconds=60.0
@@ -126,20 +143,62 @@ def test_engine_crawl_delay_budget_spreads_rounds(spark):
         host_budgets_df=budgets,
     )
     eng.run()
-    per = {
-        (r.netloc, r.round): r.n
-        for r in eng.visited.selectExpr(
-            "parse_url(url, 'HOST') AS netloc", "round"
-        )
-        .groupBy("netloc", "round")
-        .agg({"*": "count"})
-        .withColumnRenamed("count(1)", "n")
-        .collect()
-    }
+    per = _per_host_round(eng)
     # fast host: all 4 in round 1 (unlimited); slow host: 2+2 over rounds 1-2
     assert per[("fast.test", 1)] == 4
     assert per[("slow.test", 1)] == 2 and per[("slow.test", 2)] == 2
     assert len({r.url for r in eng.visited.collect()}) == 9  # nothing dropped
+
+
+def test_engine_global_budget_host_rows_and_priority(spark):
+    """One cap per host: its Crawl-delay row when it has one, else the
+    global ``host_budget``; inside each cap the priority order picks."""
+    from icrawler_spark.crawl.robots import robots_budgets_df
+
+    slow = [("slow.test", f"s{i}.html") for i in range(3)]
+    fast = [("fast.test", f"f{i}.html") for i in range(4)]
+    pages = spark.createDataFrame(
+        [_page("seed.test", "index.html", links=slow + fast)]
+        + [_page(h, p) for h, p in slow + fast],
+        PAGES_SCHEMA,
+    )
+    budgets = robots_budgets_df(
+        spark, {"slow.test": "User-agent: *\nCrawl-delay: 60"}, round_seconds=60.0
+    )
+    prio = spark.createDataFrame(
+        [("https://slow.test/s2.html", 5), ("https://fast.test/f3.html", 9),
+         ("https://fast.test/f1.html", 7)],
+        "url string, priority long",
+    )
+    eng = CrawlEngine(
+        spark,
+        pages,
+        CrawlConfig(
+            start_url="https://seed.test/index.html",
+            host_budget=2,
+            max_rounds=10,
+            use_bloom=False,
+            parse_entries=False,
+        ),
+        host_budgets_df=budgets,
+        priority_df=prio,
+    )
+    eng.run()
+    # slow.test: its row caps it at 1 per round; fast.test has no row, so
+    # the global budget of 2 applies
+    assert _per_host_round(eng) == {
+        ("seed.test", 0): 1,
+        ("slow.test", 1): 1, ("slow.test", 2): 1, ("slow.test", 3): 1,
+        ("fast.test", 1): 2, ("fast.test", 2): 2,
+    }
+    # scored urls first, then unscored ones (priority 0) in FIFO order; a
+    # round lists its fetches in discovery order
+    assert eng.crawl_order() == [
+        "https://seed.test/index.html",
+        "https://slow.test/s2.html", "https://fast.test/f1.html", "https://fast.test/f3.html",
+        "https://slow.test/s0.html", "https://fast.test/f0.html", "https://fast.test/f2.html",
+        "https://slow.test/s1.html",
+    ]
 
 
 def test_robots_docs_from_pages(spark):
