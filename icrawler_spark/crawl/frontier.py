@@ -49,6 +49,12 @@ AQE's skew-join splitting covers the join side.
 Checkpoints: with ``checkpoint_dir`` every write of a round (state tables,
 lineage, metrics, the sketch blob, the commit marker) goes through
 ``state.SnapshotStore``; without it the pins are ``localCheckpoint``s.
+Actions that do not read each other run together (``_together``): the
+parse pin with the seen filter's batch add; the ``pending``, ``entries``,
+``documents`` and ``seen`` pins with the ``lineage`` write; then the
+``metrics`` table with the sketch blob. The order that matters holds:
+``visited`` first, the parse before anything that reads links, and the
+commit marker last and alone, once every other write has returned.
 
 Scale notes: each state table is merged once per round — the listing
 deltas and the download stage's rows (attachments, marks) fold in one
@@ -62,8 +68,11 @@ collected.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -156,6 +165,22 @@ def _obs_long(obs: Observation, key: str, fallback) -> int:
     except Exception:  # empty schema-less row, or connect-mode without _jo
         pass
     return int(fallback())
+
+
+def _together(spark: SparkSession, *calls: Callable[[], object]) -> list:
+    """Run independent round actions at once and return their results in
+    order. A round is a chain of small 1–4-task stages, so one action at a
+    time leaves most cores idle. Each call runs on its own thread wrapped in
+    ``inheritable_thread_target``, so every job it starts carries the
+    caller's job group, local properties and job tags. Each call is wrapped
+    on its own: one wrapper hands every thread it wraps the same copy of
+    the properties, so one query's ``spark.sql.execution.id`` (or a job
+    group set inside a thread) would leak into the others. Every call
+    finishes before the first failure (in call order) is re-raised: no
+    write of the round is still running when the caller sees the error."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    return [f.result() for f in futures]
 
 
 # The per-round seen-filter blob. The name carries the filter kind AND the
@@ -733,10 +758,16 @@ class CrawlEngine:
         # as n_fetched × last round's fanout; a fanout explosion — e.g.
         # default-estimate round 0 — could push a multi-million-link sort
         # through one partition)
-        parsed_pages = (
-            udfs.parse_pages(page_inputs, carry=carry)
-            .observe(obs_links, F.sum(n_link_rows).alias("n_links"))
-            .localCheckpoint(eager=True)
+        parse = udfs.parse_pages(page_inputs, carry=carry).observe(
+            obs_links, F.sum(n_link_rows).alias("n_links")
+        )
+        # the seen filter takes this round's batch (read from its cache)
+        # while the parse runs; a fresh crawl's first round does not probe
+        probe = cfg.use_bloom and self._bloom is not None
+        parsed_pages, _ = _together(
+            self.spark,
+            lambda: parse.localCheckpoint(eager=True),
+            lambda: self._bloom_add_batch(batch) if cfg.use_bloom else None,
         )
         links = parsed_pages.select(
             "task", "discovery_pos", F.posexplode("links").alias("link_pos", "url")
@@ -781,9 +812,6 @@ class CrawlEngine:
         # exact anti-join also drops links back into the batch; the filter
         # takes the batch BEFORE the probe, so it has no false negatives.
         # A fresh crawl's first round skips the probe: visited is the batch.
-        probe = cfg.use_bloom and self._bloom is not None
-        if cfg.use_bloom:
-            self._bloom_add_batch(batch)
         if probe:
             # route definitely-new links around the exact anti-join
             bc = self.spark.sparkContext.broadcast(self._bloom.to_bytes())
@@ -791,7 +819,15 @@ class CrawlEngine:
             # probe with the xxhash64 transport key (8 bytes/row through
             # Arrow instead of the url string — see _sketch_keys)
             keyed = links.withColumn("_sk", F.xxhash64(F.col("url")))
-            flagged = bloom_mod.prefilter_unseen(keyed, "_sk", bc).drop("_sk")
+            # pinned lazily: both sides of the split read one probe, computed
+            # by the first job that needs it. A persist() would do the same
+            # work, but AQE runs a table-cache job for each of its two scans
+            # (+2 jobs, stages and tasks per round)
+            flagged = (
+                bloom_mod.prefilter_unseen(keyed, "_sk", bc)
+                .drop("_sk")
+                .localCheckpoint(eager=False)
+            )
             definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
             maybe = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
             survivors = maybe.join(self.visited.select("url"), "url", "left_anti")
@@ -893,19 +929,38 @@ class CrawlEngine:
         self.pending = self.pending.observe(obs_pending, F.count(F.lit(1)).alias("n"))
 
         prev_pending = pending
-        if self.store is None and big_round:
-            # memory mode, big round: the distributed positions path already
-            # checkpointed the heavy lineage — a cache is enough, skip the
-            # second materializing write; count() is the materializing action
-            # and fires the pending/links observations
-            self.pending = self.pending.persist()
-            self._n_pending = self.pending.count()
-        else:
-            self.pending = self._pin(self.pending, rnd, "pending")
-            self._n_pending = _obs_long(obs_pending, "n", self.pending.count)
-        self.entries = self._pin(self.entries, rnd, "entries")
-        self.documents = self._pin(self.documents, rnd, "documents")
-        self.seen = self._pin(self.seen, rnd, "seen")
+
+        def pin_pending():
+            if self.store is None and big_round:
+                # memory mode, big round: the distributed positions path
+                # already checkpointed the heavy lineage — a cache is enough,
+                # skip the second materializing write; count() is the
+                # materializing action and fires the pending/links observations
+                cached = self.pending.persist()
+                return cached, cached.count()
+            pinned = self._pin(self.pending, rnd, "pending")
+            return pinned, _obs_long(obs_pending, "n", pinned.count)
+
+        def write_lineage():
+            # per-partition lineage (north_rule): which salted shard carried
+            # how many fetches this round — the skew audit trail. Checkpoint
+            # mode only; reads the batch cache.
+            if self.store is not None:
+                lineage = batch.groupBy(shard.alias("shard")).agg(
+                    F.count(F.lit(1)).alias("n_urls"), F.countDistinct("netloc").alias("n_hosts")
+                )
+                self.store.write(rnd, "lineage", lineage.withColumn("round", F.lit(rnd)))
+
+        # the round's state pins and the lineage write read only pinned or
+        # cached inputs and not each other: run them together
+        (self.pending, self._n_pending), self.entries, self.documents, self.seen, _ = _together(
+            self.spark,
+            pin_pending,
+            lambda: self._pin(self.entries, rnd, "entries"),
+            lambda: self._pin(self.documents, rnd, "documents"),
+            lambda: self._pin(self.seen, rnd, "seen"),
+            write_lineage,
+        )
 
         n_dl = n_reused = 0
         if dl_metrics is not None:
@@ -915,15 +970,6 @@ class CrawlEngine:
         # dense rounds consume exactly n_new ids; sparse big rounds consume
         # the span _assign_positions reserved (near-dense: ≈ raw link count)
         self._next_pos += n_new if self._pos_span is None else self._pos_span
-
-        # per-partition lineage (north_rule): which salted shard carried how
-        # many fetches this round — the skew audit trail. Checkpoint mode
-        # only; runs while batch is still cached.
-        if self.store is not None:
-            lineage = batch.groupBy(shard.alias("shard")).agg(
-                F.count(F.lit(1)).alias("n_urls"), F.countDistinct("netloc").alias("n_hosts")
-            )
-            self.store.write(rnd, "lineage", lineage.withColumn("round", F.lit(rnd)))
 
         batch.unpersist()
         fetch_cache.unpersist()
@@ -959,15 +1005,21 @@ class CrawlEngine:
         )
         self.metrics.append(m)
         if self.store is not None:
-            self.store.write(rnd, "metrics", self.spark.createDataFrame([m.as_tuple()], _METRICS_SCHEMA))
+            metrics_df = self.spark.createDataFrame([m.as_tuple()], _METRICS_SCHEMA)
             # seen-filter shard checkpoint (north_rule: "checkpoints frontier,
             # seen-filter shards, and per-partition lineage/metrics"): the
             # serialized sketch lands inside the round dir BEFORE the commit
             # marker, so resume loads it instead of re-scanning all of visited
             # to rebuild. One shard in this sandbox; at 10^10 each of the
             # pmod(hash, n_shards) shards writes its own blob the same way.
-            if cfg.use_bloom:
-                self.store.write_bytes(rnd, _SKETCH_BLOB, self._bloom.to_bytes())
+            _together(
+                self.spark,
+                lambda: self.store.write(rnd, "metrics", metrics_df),
+                lambda: self.store.write_bytes(rnd, _SKETCH_BLOB, self._bloom.to_bytes())
+                if cfg.use_bloom else None,
+            )
+            # the marker goes last, alone: every other write of the round is
+            # on disk when it lands
             self.store.commit(rnd)
         self._round += 1
         return m

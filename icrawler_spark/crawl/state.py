@@ -92,10 +92,14 @@ class SnapshotStore:
         return os.path.isdir(self._path(rnd, name))
 
     def write_bytes(self, rnd: int, name: str, data: bytes) -> None:
+        """Write blob ``name`` of round ``rnd`` whole or not at all: the
+        bytes go to a temp file in the round dir, renamed over the name."""
         path = self._path(rnd, name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "wb") as fh:
+        tmp = f"{path}.tmp"
+        with open(tmp, "wb") as fh:
             fh.write(data)
+        os.replace(tmp, path)
 
     def read_bytes(self, rnd: int, name: str) -> bytes | None:
         """Blob ``name`` of round ``rnd``, or None if the round has none."""
@@ -106,7 +110,9 @@ class SnapshotStore:
             return fh.read()
 
     def commit(self, rnd: int) -> None:
-        """Mark round ``rnd`` complete; call it after the round's last write."""
+        """Mark round ``rnd`` complete; call it after every other write of the
+        round has returned. The marker appears atomically (``write_bytes``):
+        a crash mid-write leaves no marker, never a partial one."""
         self.write_bytes(rnd, _MARKER, b"ok\n")
 
 

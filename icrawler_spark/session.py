@@ -49,6 +49,12 @@ def get_spark(
       splitting — critical for the hot-host skew called out in BASELINE.json.
     - Arrow enabled: every Python-side operator in this package is a
       vectorized pandas UDF / mapInPandas; Arrow is the transfer format.
+    - Generated-code cache of 2000 classes: an iterative crawl replans the
+      same queries every round, and one monitor cycle compiles about 470
+      distinct classes, so the 100-entry default evicted each one before
+      the next round reused it. Measured on the perfbench monitor site
+      (4 cores): ~470 Janino compilations every cycle with the default,
+      0–20 per cycle after the first with 2000 entries.
     - ``spark.sql.files.maxPartitionBytes`` left at default (128 MiB): at
       100 TB that yields ~800k input splits, which Spark handles; tune via
       extra_conf per deployment instead of hardcoding.
@@ -75,6 +81,9 @@ def get_spark(
         # parse at 32 cores) and cap per-worker memory spikes
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
+        # one monitor cycle compiles ~470 distinct classes; the 100-entry
+        # default LRU evicts them all before the next round reuses them
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         # long iterative jobs: the ContextCleaner only reclaims unpersisted
         # RDD/broadcast/shuffle blocks after a DRIVER GC, and the default

@@ -6,6 +6,7 @@ reference's FIFO walk (ref pbc_monitor.py:188-260)."""
 from __future__ import annotations
 
 import shutil
+import threading
 
 import numpy as np
 import pandas as pd
@@ -14,6 +15,7 @@ import pytest
 from icrawler_spark.crawl import CrawlConfig, CrawlEngine, build_site, site_pages_df
 from icrawler_spark.crawl import bloom as bloom_mod
 from icrawler_spark.crawl.bloom import BloomFilter
+from icrawler_spark.crawl.frontier import _together
 from icrawler_spark.crawl.reference_model import crawl_model
 
 
@@ -360,6 +362,28 @@ def test_politeness_key_is_the_host(spark):
 
 def _int64_keys(rng, n: int) -> np.ndarray:
     return rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64, endpoint=True)
+
+
+def test_together_threads_keep_their_own_properties(spark):
+    """Each concurrent round action has its own copy of the caller's local
+    properties: a property one sets (Spark SQL sets its execution id per
+    query) never leaks into another, and the caller's own are inherited."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("together_test_caller", "c")
+    both_set = threading.Barrier(2)
+
+    def setter(v):
+        def call():
+            sc.setLocalProperty("together_test", v)
+            both_set.wait(timeout=30)
+            return sc.getLocalProperty("together_test"), sc.getLocalProperty("together_test_caller")
+        return call
+
+    try:
+        assert _together(spark, setter("a"), setter("b")) == [("a", "c"), ("b", "c")]
+    finally:
+        sc.setLocalProperty("together_test_caller", None)
+    assert sc.getLocalProperty("together_test") is None
 
 
 def test_bloom_no_false_negatives():

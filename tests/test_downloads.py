@@ -209,24 +209,80 @@ def test_each_fetched_page_parsed_once_per_round(spark, site, tmp_path):
         assert calls[("listing.py", "discover_detail_attachments")] == n_detail
 
 
+def test_round_jobs_carry_the_callers_job_group(spark, site, tmp_path):
+    """Every Spark job a round starts, on whichever of its threads, carries
+    the job group the caller set: per-round job counts are read by group.
+    The round runs between two fence jobs, so every job id between them is
+    the round's."""
+    pages = site_pages_df(spark, site).cache()
+    eng = CrawlEngine(spark, pages, CrawlConfig(
+        start_url=START, max_rounds=10, download_docs=True, n_host_shards=2,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    ))
+    eng.resume_or_init()
+    eng.run_round()
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+
+    def fence(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return st.getJobIdsForGroup(group)
+
+    try:
+        before = max(fence("job_group_test_before"))
+        sc.setJobGroup("job_group_test_round", "round")
+        m = eng.run_round()
+        after = min(fence("job_group_test_after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    round_jobs = set(st.getJobIdsForGroup("job_group_test_round"))
+    assert m.round == 1 and m.pages_fetched > 0
+    assert round_jobs and round_jobs == set(range(before + 1, after))
+    pages.unpersist()
+
+
+def test_a_repeated_crawl_reuses_generated_code(spark, site, tmp_path):
+    """Generated code outlives a round: a second identical crawl compiles
+    next to nothing. With Spark's 100-class default cache every crawl of
+    this site recompiled ~430 classes; concurrent round actions can still
+    replan a few stages differently, so a handful may recompile."""
+    pages = site_pages_df(spark, site).cache()
+    pages.count()
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def crawl(name):
+        n = compiled.getCount()
+        CrawlEngine(spark, pages, CrawlConfig(
+            start_url=START, max_rounds=10, download_docs=True, n_host_shards=2,
+            checkpoint_dir=str(tmp_path / name),
+        )).run()
+        return compiled.getCount() - n
+
+    crawl("first")
+    assert crawl("second") < 20
+    pages.unpersist()
+
+
 class _Crash(RuntimeError):
     pass
 
 
 def _fail_round1_write(monkeypatch, name):
     """Route every ``SnapshotStore`` write through a recorder; round 1's
-    write of ``name`` raises instead. Returns the names round 1 wrote
-    before it."""
+    write of ``name`` raises instead. Returns the names round 1 wrote, in
+    the order the writes finished, before it."""
     written = []
     for meth in ("write", "write_bytes"):
         real = getattr(SnapshotStore, meth)
 
         def wrapped(self, rnd, table, payload, _real=real):
+            if rnd == 1 and table == name:
+                raise _Crash(table)
+            out = _real(self, rnd, table, payload)
             if rnd == 1:
-                if table == name:
-                    raise _Crash(table)
                 written.append(table)
-            return _real(self, rnd, table, payload)
+            return out
 
         monkeypatch.setattr(SnapshotStore, meth, wrapped)
     return written
@@ -238,7 +294,9 @@ def test_crash_at_a_round_write_resumes_to_same_crawl(spark, site, tmp_path, mon
     and a fresh engine resumes to the uninterrupted crawl: same order, seen
     and downloaded sets, documents and entries. The crashes run in sequence
     on one checkpoint dir; each retry is a fresh engine that resumes from
-    round 0 and first drops the partial round the attempt before it left."""
+    round 0 and first drops the partial round the attempt before it left.
+    ``documents`` crashes inside the group of writes that run together: the
+    error reaches the caller only after the group's other writes finished."""
     pages = site_pages_df(spark, site).cache()
     ckpt = tmp_path / "ckpt"
     store = SnapshotStore(spark, str(ckpt))
@@ -264,14 +322,20 @@ def test_crash_at_a_round_write_resumes_to_same_crawl(spark, site, tmp_path, mon
             full.run()
     want = state(full)
     assert len(full.metrics) == 2 and full._n_pending == 0
-    assert written == ["visited", "pending", "entries", "documents", "seen", "lineage", "metrics", blob]
+    # visited first; the state pins and lineage together, in any order;
+    # then metrics and the blob; the marker after every one has finished
+    assert written[0] == "visited" and len(written) == 8
+    assert set(written[1:6]) == {"pending", "entries", "documents", "seen", "lineage"}
+    assert set(written[6:]) == {"metrics", blob}
 
-    for name in ("visited", "seen", blob):
+    for name in ("visited", "documents", "seen", blob):
         assert store.latest_committed_round() == 0, name
         with monkeypatch.context() as m:
-            _fail_round1_write(m, name)
+            done = _fail_round1_write(m, name)
             with pytest.raises(_Crash, match=name):
                 CrawlEngine(spark, pages, cfg).run()
+        if name == "documents":
+            assert set(done) == {"visited", "pending", "entries", "seen", "lineage"}
     assert store.has_table(1, "seen") and store.latest_committed_round() == 0
     resumed = CrawlEngine(spark, pages, cfg)
     assert resumed.resume_or_init() == 1

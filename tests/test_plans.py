@@ -8,8 +8,10 @@ scan paths. A regression here is a scale bug even when results stay right.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
+from icrawler_spark.crawl import bloom as bloom_mod
 from icrawler_spark.crawl.bloom import BloomFilter, prefilter_unseen
 from icrawler_spark.crawl.state import merge_entries
 from icrawler_spark.queries.analytics import (
@@ -159,6 +161,39 @@ def test_bloom_probe_stays_off_the_visited_side(spark, tmp_path):
     (join,) = [n for n in _nodes(plan) if n.nodeName() == "Join"]
     assert _python_evals(join.left()) == 1, plan.toString()
     assert _python_evals(join.right()) == 0, plan.toString()
+
+
+def test_bloom_probe_runs_once_per_round(spark, monkeypatch):
+    """The frontier's seen split — definitely new ∪ (maybe ⟂ visited) —
+    reads one probe: each round's links cross into the Bloom UDF once, not
+    once per side of the split. The probe is swapped for a twin that counts
+    the keys it evaluates."""
+    from pyspark.sql.functions import pandas_udf
+
+    from icrawler_spark.crawl import CrawlConfig, CrawlEngine, build_site, site_pages_df
+
+    probed = []
+
+    def counting_prefilter(df, col, bc):
+        acc = spark.sparkContext.accumulator(0)
+        probed.append(acc)
+
+        @pandas_udf("boolean")
+        def might_contain(vals: pd.Series) -> pd.Series:
+            acc.add(len(vals))
+            return pd.Series(BloomFilter.from_bytes(bytes(bc.value)).might_contain_many(vals))
+
+        return df.withColumn("_maybe_seen", might_contain.asNondeterministic()(df[col]))
+
+    monkeypatch.setattr(bloom_mod, "prefilter_unseen", counting_prefilter)
+    pages = site_pages_df(spark, build_site(n_pages=4, entries_per_page=1))
+    eng = CrawlEngine(spark, pages, CrawlConfig(
+        start_url="https://www.example.test/list/index.html", host_budget=1, parse_entries=False,
+    ))
+    rounds = eng.run()
+    # a fresh crawl's first round does not probe; every later round does
+    assert len(rounds) >= 3 and all(m.links_discovered for m in rounds)
+    assert [a.value for a in probed] == [m.links_discovered for m in rounds[1:]]
 
 
 def test_download_stage_fetches_once(spark):
